@@ -108,7 +108,7 @@ BASELINE_SEC = {
     "semantic_dedup": 2.9,
     # r17 receipt (VERDICT r16 item 2): the r16 driver reading of 1.65
     # was a window artifact, not a regression of the r16 window-df
-    # rewrite — fresh same-tree A/B (tools/exp_tfidf_ab.py, min-of-5
+    # rewrite — fresh same-tree A/B (receipt in OPTIMIZATION_r17.md, min-of-5
     # alternating): window form 0.871 vs the r15 groupBy+join-back form
     # 0.874, with the window form scanning the corpus once less
     # (Scans 2 vs 3); r17 round-start bench reads 0.991. Freeze kept.

@@ -24,8 +24,3 @@ def stable_round(col: Column, digits: int) -> Column:
     eps = 10.0 ** -(digits + 3)
     return F.round(col + F.lit(eps), digits)
 
-
-def sql_round(expr: str, digits: int) -> str:
-    """The DuckDB-side twin, for building oracle strings."""
-    eps = 10.0 ** -(digits + 3)
-    return f"round(({expr}) + {eps:.0e}, {digits})"

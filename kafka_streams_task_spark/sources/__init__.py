@@ -12,7 +12,6 @@ from .files import (
     read_csv,
     read_json_stream,
     read_jsonl,
-    read_parquet_stream,
 )
 from .warc import (
     read_warc,
@@ -33,7 +32,6 @@ __all__ = [
     "to_wire",
     "from_wire",
     "read_json_stream",
-    "read_parquet_stream",
     "read_warc",
     "read_warc_manifest",
     "warc_ingest_report",

@@ -24,20 +24,6 @@ def read_json_stream(
     return reader.json(path)
 
 
-def read_parquet_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # Batch crawl ingestion (r6): schema-pinned JSONL / CSV readers with a
 # corrupt-record quarantine — the front door a 100 TB corpus actually

@@ -17,15 +17,12 @@ comparison instead of resurrecting dead keys or overwriting newer data
 are retained indefinitely — state is bounded by distinct keys ever
 seen, the same bound a compacted topic has).
 
-Exactly-once under foreachBatch's at-least-once contract, via the
-versioned-state protocol shared with ``rollup_via_foreach_batch``:
-state_v{batch_id} directories are ``_SUCCESS``-committed, a redelivered
-batch (batch_id <= last committed) only republishes the view, and the
-state dir is bound to one checkpoint for life
-(``bind_state_to_checkpoint``). Per-batch I/O is one state read + one
-state write (state = one row per key ever seen — the compacted form,
-NOT the corpus); at 100 TB-of-changes scale the state stays
-key-bounded, and the heavy lifting (latest_changes) is one partial+
+Exactly-once under foreachBatch through the versioned-state driver in
+``streaming/state.py``, whose module docstring describes the protocol
+(commit marker, redelivery, checkpoint binding, retention). Per-batch I/O
+is one state read + one state write (state = one row per key ever seen —
+the compacted form, NOT the corpus); at 100 TB-of-changes scale the state
+stays key-bounded, and the heavy lifting (latest_changes) is one partial+
 final max_by aggregate per batch.
 """
 
@@ -35,19 +32,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.merge import OP_UPSERT, latest_changes
-from .state import bind_state_to_checkpoint, committed_versions
+from .state import StateLayout, read_latest_state, run_versioned_state
 
-_PFX = "state_v"
+_CDC = StateLayout("CDC", "state_v", "CDC state")
 
 
 def read_cdc_view(spark: SparkSession, state_dir: str) -> DataFrame:
     """The current materialized view: live rows only (tombstones and the
-    bookkeeping columns stripped). Returns an empty-schema-less error if
-    no batch ever committed — callers gate on ``committed_versions``."""
-    versions = committed_versions(spark, state_dir, _PFX)
-    if not versions:
-        raise FileNotFoundError(f"no committed CDC state under {state_dir}")
-    state = spark.read.parquet(f"{state_dir}/{_PFX}{versions[-1]}")
+    bookkeeping columns stripped). Raises if no batch ever committed."""
+    state, _ = read_latest_state(spark, state_dir, _CDC)
     return state.filter(F.col("_op") == OP_UPSERT).drop("_op")
 
 
@@ -80,52 +73,24 @@ def streaming_apply_changes(
     batch id) is untouched and crash-safe as before.
     """
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions = committed_versions(spark, state_dir, _PFX)
-        last = versions[-1] if versions else None
-        if last is not None and batch_id <= last:
-            return  # at-least-once redelivery: already merged, nothing to do
-
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         # normalize the batch to state layout: op tucked into _op so the
         # payload column set matches the snapshot the view exposes
-        batch_norm = batch_df.withColumnRenamed(op_col, "_op")
-        if last is not None:
-            prev = spark.read.parquet(f"{state_dir}/{_PFX}{last}")
-            all_ch = prev.unionByName(batch_norm)
-        else:
-            all_ch = batch_norm
-        new_state = latest_changes(
-            all_ch, key_cols, version_col=version_col, op_col="_op"
+        changes = batch_df.withColumnRenamed(op_col, "_op")
+        if prev is not None:
+            changes = prev.unionByName(changes)
+        state = latest_changes(
+            changes, key_cols, version_col=version_col, op_col="_op"
         )
-        if tombstone_min_version is not None:
-            new_state = new_state.filter(
-                ~(
-                    (F.col("_op") != OP_UPSERT)
-                    & (F.col(version_col) < F.lit(tombstone_min_version))
-                )
+        if tombstone_min_version is None:
+            return state
+        return state.filter(
+            ~(
+                (F.col("_op") != OP_UPSERT)
+                & (F.col(version_col) < F.lit(tombstone_min_version))
             )
-        new_state.write.mode("overwrite").parquet(f"{state_dir}/{_PFX}{batch_id}")
+        )
 
-        # GC superseded versions only after the new one is durable — but
-        # RETAIN the most recent prior committed version: a concurrent
-        # read_cdc_view reader that resolved versions just before this
-        # commit still has its lazily-evaluated DataFrame pointed at that
-        # directory, and deleting it mid-scan would throw
-        # FileNotFoundException (the module's "any engine can read the
-        # view between batches" claim makes that race reachable). One
-        # batch interval of retention covers it; N-2 and older go.
-        Path = spark._jvm.org.apache.hadoop.fs.Path
-        fs = Path(state_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-        for v in versions[:-1]:
-            fs.delete(Path(f"{state_dir}/{_PFX}{v}"), True)
-
-    bind_state_to_checkpoint(
-        changes_stream.sparkSession, state_dir, checkpoint_dir
-    )
-    return (
-        changes_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_versioned_state(
+        changes_stream, state_dir, checkpoint_dir, _CDC, merge
     )

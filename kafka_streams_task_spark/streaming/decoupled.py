@@ -14,6 +14,8 @@ stream is inspectable.
 foreachBatch variant: `rollup_via_foreach_batch` is mitigation (b) from
 SURVEY §7.4.1 — per micro-batch, merge the batch's partial (sum,count)
 deltas into a durable state table, then publish the recomputed rollup.
+Its exactly-once protocol is the versioned-state driver in
+``streaming/state.py``, whose module docstring describes it.
 """
 
 from __future__ import annotations
@@ -30,6 +32,11 @@ from ..operators.weather import (
     weather_by_geohash,
     weather_daily_avg,
     weather_rekey,
+)
+from .state import StateLayout, run_versioned_state
+
+_ROLLUP = StateLayout(
+    "rollup", "state_v", "rollup state", "rollup_meta", "precision int"
 )
 
 
@@ -196,20 +203,15 @@ def rollup_via_foreach_batch(
     """Two-level stateful aggregation via foreachBatch (SURVEY §7.4.1(b)).
 
     Each micro-batch computes its own per-(geohash, date) partial
-    (sum, count) and merges it into a durable parquet state table. State is
-    **versioned by batch id** (``state_v{N}`` holds the full state after
-    batch N, committed by parquet's ``_SUCCESS`` marker), which makes the
-    merge exactly-once under foreachBatch's at-least-once contract:
-
-    - redelivered batch after a restart (``batch_id <=`` latest committed
-      version): the deltas are already in the state — skip the merge and
-      only republish the rollup (covers a crash between state write and
-      rollup write);
-    - crash mid-write of ``state_v{N}``: no ``_SUCCESS``, so the retry
-      re-merges from ``state_v{N-1}`` and mode="overwrite" clears the
-      partial output;
-    - older versions are GC'd only after the new version + rollup are out,
-      so some committed version always exists.
+    (sum, count) and merges it into a durable parquet state table,
+    versioned by batch id (``state_v{N}`` holds the full state after
+    batch N). The driver in ``streaming/state.py`` makes the merge
+    exactly-once: a redelivered batch skips the merge and only
+    republishes the rollup, which covers a crash between the state write
+    and the rollup write. The state dir is bound to ``checkpoint_dir``,
+    and ``precision`` is its meta (``rollup_meta``): cells of a
+    different precision must not merge into one state, so a mismatch
+    raises.
 
     Heavier I/O than the applyInPandasWithState path but uses only batch
     operators and survives any Spark version's streaming limitations.
@@ -217,56 +219,34 @@ def rollup_via_foreach_batch(
     Returns the StreamingQuery; the current rollup lives at
     ``{state_dir}/rollup`` (geohash, weatherList).
     """
-    from .state import committed_versions
+    keys = ("geohash", "wthr_date")
 
-    keyed = weather_rekey(weather_raw_stream, precision)
-    _PFX = "state_v"
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        partial = batch_df.groupBy(*keys).agg(
+            F.sum("tmp_f").alias("sum_f"),
+            F.sum("tmp_c").alias("sum_c"),
+            F.count(F.lit(1)).alias("cnt"),
+        )
+        if prev is None:
+            return partial
+        return partial.unionByName(prev).groupBy(*keys).agg(
+            *(F.sum(c).alias(c) for c in ("sum_f", "sum_c", "cnt"))
+        )
 
-    def _publish_rollup(spark: SparkSession, state_path: str) -> None:
-        daily = spark.read.parquet(state_path).select(
-            "geohash",
-            "wthr_date",
+    def publish(state: DataFrame) -> None:
+        daily = state.select(
+            *keys,
             (F.col("sum_f") / F.col("cnt")).alias("tmp_f"),
             (F.col("sum_c") / F.col("cnt")).alias("tmp_c"),
         )
         weather_by_geohash(daily).write.mode("overwrite").parquet(f"{state_dir}/rollup")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions = committed_versions(spark, state_dir, _PFX)
-        last = versions[-1] if versions else None
-
-        if last is not None and batch_id <= last:
-            # at-least-once redelivery: this batch's deltas are already
-            # merged — republish the rollup (idempotent) and stop
-            _publish_rollup(spark, f"{state_dir}/{_PFX}{last}")
-            return
-
-        partial = batch_df.groupBy("geohash", "wthr_date").agg(
-            F.sum("tmp_f").alias("sum_f"),
-            F.sum("tmp_c").alias("sum_c"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        if last is not None:
-            prev = spark.read.parquet(f"{state_dir}/{_PFX}{last}")
-            merged = partial.unionByName(prev).groupBy("geohash", "wthr_date").agg(
-                F.sum("sum_f").alias("sum_f"),
-                F.sum("sum_c").alias("sum_c"),
-                F.sum("cnt").alias("cnt"),
-            )
-        else:
-            merged = partial
-        new_path = f"{state_dir}/{_PFX}{batch_id}"
-        merged.write.mode("overwrite").parquet(new_path)
-        _publish_rollup(spark, new_path)
-        Path = spark._jvm.org.apache.hadoop.fs.Path
-        fs = Path(state_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-        for v in versions:  # GC only after the new version + rollup are durable
-            fs.delete(Path(f"{state_dir}/{_PFX}{v}"), True)
-
-    return (
-        keyed.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_versioned_state(
+        weather_rekey(weather_raw_stream, precision),
+        state_dir,
+        checkpoint_dir,
+        _ROLLUP,
+        merge,
+        {"precision": precision},
+        publish,
     )

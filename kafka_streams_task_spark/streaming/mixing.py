@@ -16,16 +16,12 @@ ingested (pinned by tests/test_streaming_mixing.py). State size is the
 distinct (group, score) domain — quantize scores upstream to bound it,
 exactly as the batch operator's docstring prescribes at 100 TB.
 
-Exactly-once under foreachBatch's at-least-once contract via the family's
-versioned-parquet protocol (``streaming/state.py``): batch N writes
-``counts_v{N}`` (overwrite-idempotent — a deterministic function of the
-predecessor state and the batch), a redelivered batch whose version is
-committed skips wholesale, the state dir is bound to its checkpoint for
-life, and the fit parameters (group/score columns, n_buckets) persist
-WITH the state (``mixing_meta``) and are validated on every batch and
-read — boundaries computed under a different n_buckets against durable
-counters would silently re-band the corpus, so it raises instead (the
-``cms_meta`` discipline, r13).
+Exactly-once under foreachBatch through the versioned-state driver in
+``streaming/state.py``, whose module docstring describes the protocol.
+The fit parameters (group/score columns, n_buckets) are the state's meta
+(``mixing_meta``): boundaries computed under a different n_buckets
+against durable counters would silently re-band the corpus, so a
+mismatch raises instead.
 
 Reference parity: no analogue — beyond-reference training-data mandate
 (SURVEY.md north-star extensions).
@@ -36,13 +32,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .state import StateLayout, read_latest_state, run_versioned_state
+
 __all__ = [
     "read_score_boundaries",
     "read_score_counts",
     "streaming_score_boundaries",
 ]
 
-_PFX = "counts_v"
+_MIXING = StateLayout(
+    "mixing", "counts_v", "counts", "mixing_meta",
+    "group_col string, score_col string, n_buckets int",
+)
 
 
 def streaming_score_boundaries(
@@ -58,24 +59,10 @@ def streaming_score_boundaries(
     per-group cut arrays with :func:`read_score_boundaries` (equal to the
     batch fit over all ingested rows — the merge is exact) and apply them
     with the stateless ``operators.sampling.apply_score_buckets``."""
-    from .state import bind_state_to_checkpoint, committed_versions
-
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    bind_state_to_checkpoint(stream.sparkSession, state_dir, checkpoint_dir)
-    _check_or_write_mixing_meta(
-        stream.sparkSession, state_dir, group_col, score_col, n_buckets
-    )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _check_or_write_mixing_meta(
-            spark, state_dir, group_col, score_col, n_buckets
-        )
-        versions = committed_versions(spark, state_dir, _PFX)
-        if batch_id in versions:
-            return  # redelivery: this batch's counts are already durable
-        prev = [v for v in versions if v < batch_id]
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         # the batch operator's validity filter, verbatim — NULL/NaN scores
         # never enter the count table on either path
         valid = batch_df.filter(
@@ -92,107 +79,53 @@ def streaming_score_boundaries(
             F.col(group_col).alias("grp"),
             F.col(score_col).alias("s"),
         ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-        if prev:
-            committed = spark.read.parquet(f"{state_dir}/{_PFX}{max(prev)}")
-            # REFUSE a committed table whose score key type disagrees
-            # with the batch's raw type: unionByName would silently
-            # WIDEN (long -> double under set-op coercion), re-keying
-            # the merged state and reopening exactly the >2^53 collision
-            # the raw keying closes — durable state written under a
-            # different dtype (a pre-raw-keying double state, or a
-            # changed stream schema) needs a fresh state dir, not a
-            # silent coercion (review r15)
-            built_t = committed.schema["s"].dataType
-            batch_t = batch_counts.schema["s"].dataType
-            if built_t != batch_t:
-                raise ValueError(
-                    f"mixing state at {state_dir} keys scores as "
-                    f"{built_t.simpleString()}, but the stream's "
-                    f"{score_col!r} column is {batch_t.simpleString()} — "
-                    "merging would silently coerce the score keys and "
-                    "break the stream==batch boundary equality; use a "
-                    "fresh state dir for the new key type"
-                )
-            merged = (
-                committed.unionByName(batch_counts)
-                .groupBy("grp", "s")
-                .agg(F.sum("n").cast("long").alias("n"))
+        if prev is None:
+            return batch_counts
+        # REFUSE a committed table whose score key type disagrees
+        # with the batch's raw type: unionByName would silently
+        # WIDEN (long -> double under set-op coercion), re-keying
+        # the merged state and reopening exactly the >2^53 collision
+        # the raw keying closes — durable state written under a
+        # different dtype (a pre-raw-keying double state, or a
+        # changed stream schema) needs a fresh state dir, not a
+        # silent coercion (review r15)
+        built_t = prev.schema["s"].dataType
+        batch_t = batch_counts.schema["s"].dataType
+        if built_t != batch_t:
+            raise ValueError(
+                f"mixing state at {state_dir} keys scores as "
+                f"{built_t.simpleString()}, but the stream's "
+                f"{score_col!r} column is {batch_t.simpleString()} — "
+                "merging would silently coerce the score keys and "
+                "break the stream==batch boundary equality; use a "
+                "fresh state dir for the new key type"
             )
-        else:
-            merged = batch_counts
-        merged.write.mode("overwrite").parquet(f"{state_dir}/{_PFX}{batch_id}")
+        return (
+            prev.unionByName(batch_counts)
+            .groupBy("grp", "s")
+            .agg(F.sum("n").cast("long").alias("n"))
+        )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_versioned_state(
+        stream, state_dir, checkpoint_dir, _MIXING, merge,
+        {"group_col": group_col, "score_col": score_col, "n_buckets": n_buckets},
     )
 
 
-def _check_or_write_mixing_meta(
-    spark: SparkSession,
-    state_dir: str,
-    group_col: str,
-    score_col: str,
-    n_buckets: int,
-) -> None:
-    """Persist (group_col, score_col, n_buckets) beside the versioned
-    counts on first contact; afterwards REFUSE any caller whose
-    parameters disagree with the durable state (a different n_buckets
-    would silently re-band every group; different columns mean the
-    caller is pointing a new stream at old state). Probed through the
-    Hadoop FS API so non-local state dirs validate too. Single-writer
-    contract as ``streaming/sketch.py``: the dir is owned by ONE query
-    (``bind_state_to_checkpoint``); concurrent first writes are outside
-    it and the loser is refused on its next batch. ``_SUCCESS``-gated
-    probe as the sketch metas: a half-written meta dir (crash mid-first-
-    write) is rewritten, not read (advice r14)."""
-    from .state import meta_committed
-
-    meta_path = f"{state_dir}/mixing_meta"
-    if meta_committed(spark, meta_path):
-        row = spark.read.parquet(meta_path).collect()[0]
-        got = (row["group_col"], row["score_col"], row["n_buckets"])
-        if got != (group_col, score_col, n_buckets):
-            raise ValueError(
-                f"mixing state at {state_dir} was built with "
-                f"group_col={got[0]!r}/score_col={got[1]!r}/"
-                f"n_buckets={got[2]}; got {group_col!r}/{score_col!r}/"
-                f"{n_buckets}"
-            )
-    else:
-        spark.createDataFrame(
-            [(group_col, score_col, int(n_buckets))],
-            "group_col string, score_col string, n_buckets int",
-        ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-
-
-def _read_meta_and_counts(
-    spark: SparkSession, state_dir: str
-) -> tuple[DataFrame, str, str, int]:
-    from .state import committed_versions, meta_committed
-
-    meta_path = f"{state_dir}/mixing_meta"
-    if not meta_committed(spark, meta_path):
-        raise ValueError(f"no mixing_meta committed under {state_dir}")
-    row = spark.read.parquet(meta_path).collect()[0]
-    versions = committed_versions(spark, state_dir, _PFX)
-    if not versions:
-        raise ValueError(f"no committed counts under {state_dir}")
-    counts = spark.read.parquet(f"{state_dir}/{_PFX}{max(versions)}")
-    return counts, row["group_col"], row["score_col"], row["n_buckets"]
+def _read_counts(spark: SparkSession, state_dir: str) -> tuple[DataFrame, dict]:
+    """The latest count table in the fit columns, and the meta row."""
+    counts, meta = read_latest_state(spark, state_dir, _MIXING)
+    return counts.select(
+        F.col("grp").alias(meta["group_col"]),
+        F.col("s").alias(meta["score_col"]),
+        F.col("n"),
+    ), meta
 
 
 def read_score_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     """The latest committed cumulative count table, restated in the fit
     columns: ``(group_col, score_col, n)``."""
-    counts, group_col, score_col, _ = _read_meta_and_counts(spark, state_dir)
-    return counts.select(
-        F.col("grp").alias(group_col),
-        F.col("s").alias(score_col),
-        F.col("n"),
-    )
+    return _read_counts(spark, state_dir)[0]
 
 
 def read_score_boundaries(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -204,17 +137,11 @@ def read_score_boundaries(spark: SparkSession, state_dir: str) -> DataFrame:
     counts have committed yet."""
     from ..operators.sampling import score_boundaries_from_counts
 
-    counts, group_col, score_col, n_buckets = _read_meta_and_counts(
-        spark, state_dir
-    )
+    counts, meta = _read_counts(spark, state_dir)
     return score_boundaries_from_counts(
-        counts.select(
-            F.col("grp").alias(group_col),
-            F.col("s").alias(score_col),
-            F.col("n"),
-        ),
-        group_col=group_col,
-        score_col=score_col,
+        counts,
+        group_col=meta["group_col"],
+        score_col=meta["score_col"],
         count_col="n",
-        n_buckets=n_buckets,
+        n_buckets=meta["n_buckets"],
     )

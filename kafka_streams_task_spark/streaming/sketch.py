@@ -11,16 +11,17 @@ groupBy), and the result is a NEW summary with the single-pass guarantee
 intact — total undercount ≤ N_cumulative/(capacity+1), every token with
 cumulative count above that threshold retained.
 
-Exactly-once under foreachBatch's at-least-once contract, via the
-family's versioned-parquet protocol (``streaming/state.py``): batch N
-writes ``summary_v{N}`` (overwrite-idempotent — the summary is a
-deterministic function of the predecessor summary and the batch), a
-redelivered batch whose version is committed skips wholesale, and the
-state dir is bound to its checkpoint for life. State size on disk is
-O(capacity) rows per version; old versions are prunable (each version
-is self-contained — no shard union) via
-``streaming.state.prune_state_versions`` (r16: run it every K batches
-or from a janitor job; readers always resolve the kept max).
+The count-min, DDSketch, HyperLogLog, theta and bottom-k sample
+families below follow the same shape: a mergeable summary maintained
+across micro-batches, bit-identical to the batch build over everything
+ingested wherever the merge is exact.
+
+Every family is exactly-once under foreachBatch through the
+versioned-state driver in ``streaming/state.py``; its module docstring
+is the one description of the protocol (commit marker, redelivery,
+checkpoint binding, parameter meta, publish, retention). The functions
+here supply only each family's merge step and read-side estimator. Each
+version is self-contained and O(summary) rows.
 
 Reference parity: no analogue — beyond-reference training-data mandate
 (SURVEY.md north-star extensions).
@@ -30,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .state import StateLayout, check_meta, read_latest_state, run_versioned_state
 
 __all__ = [
     "read_distinct_count",
@@ -47,17 +50,18 @@ __all__ = [
     "streaming_value_quantiles",
 ]
 
-_PFX = "summary_v"
-
-
-def _meta_dict(spark: SparkSession, meta_path: str) -> dict:
-    """The single meta row as a plain dict. ``.get`` semantics matter:
-    metas written by earlier releases lack later-added OPTIONAL columns
-    (dd_meta gained max_buckets/group_col in r15, hll_meta group_col) —
-    absent must read as None (the old default), not raise, or every
-    pre-existing durable state dir dies on first contact after an
-    upgrade (review r15)."""
-    return spark.read.parquet(meta_path).collect()[0].asDict()
+_MG = StateLayout("MG", "summary_v", "summaries")
+_CMS = StateLayout("CMS", "cms_v", "sketches", "cms_meta", "depth int, width int")
+_DD = StateLayout(
+    "DDSketch", "dd_v", "sketches", "dd_meta",
+    "gamma double, max_buckets int, group_col string, max_groups int",
+)
+_HLL = StateLayout(
+    "HLL", "hll_v", "registers", "hll_meta",
+    "b int, group_col string, max_groups int",
+)
+_THETA = StateLayout("theta", "theta_v", "sketches", "theta_meta", "k int")
+_SAMPLE = StateLayout("sample", "sample_v", "samples", "sample_meta", "k int")
 
 
 def streaming_top_tokens(
@@ -74,43 +78,25 @@ def streaming_top_tokens(
     :func:`~..operators.sketch.topk_tokens_sketched` over the landed
     corpus when exact counts matter)."""
     from ..operators.sketch import merge_mg_summaries, misra_gries_candidates
-    from .state import bind_state_to_checkpoint, committed_versions
 
-    bind_state_to_checkpoint(stream.sparkSession, state_dir, checkpoint_dir)
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        cands = misra_gries_candidates(batch_df, text_col, capacity)
+        return merge_mg_summaries(_fold(prev, cands, DataFrame.unionByName), capacity)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions = committed_versions(spark, state_dir, _PFX)
-        if batch_id in versions:
-            return  # redelivery: this batch's summary is already durable
-        prev = [v for v in versions if v < batch_id]
-        batch_cands = misra_gries_candidates(batch_df, text_col, capacity)
-        if prev:
-            committed = spark.read.parquet(f"{state_dir}/{_PFX}{max(prev)}")
-            unioned = committed.unionByName(batch_cands)
-        else:
-            unioned = batch_cands
-        merged = merge_mg_summaries(unioned, capacity)
-        merged.write.mode("overwrite").parquet(f"{state_dir}/{_PFX}{batch_id}")
+    return run_versioned_state(stream, state_dir, checkpoint_dir, _MG, merge)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+
+def _fold(prev: DataFrame | None, batch: DataFrame, combine) -> DataFrame:
+    """The batch's own summary before the first commit, else
+    ``combine(prev, batch)``."""
+    return batch if prev is None else combine(prev, batch)
 
 
 def read_top_tokens(spark: SparkSession, state_dir: str, k: int = 20) -> DataFrame:
     """Current top-``k`` heavy hitters from the latest committed summary:
     ``(token, lower_bound, rank)``, ranked by the conservative MG lower
     bound (ties to token ASC). Raises if no summary has committed yet."""
-    from .state import committed_versions
-
-    versions = committed_versions(spark, state_dir, _PFX)
-    if not versions:
-        raise ValueError(f"no committed summary under {state_dir}")
-    s = spark.read.parquet(f"{state_dir}/{_PFX}{max(versions)}")
+    s, _ = read_latest_state(spark, state_dir, _MG)
     top = s.orderBy(F.col("lower_bound").desc(), F.col("token").asc()).limit(k)
     from pyspark.sql import Window
 
@@ -118,9 +104,6 @@ def read_top_tokens(spark: SparkSession, state_dir: str, k: int = 20) -> DataFra
     return top.withColumn("rank", F.row_number().over(w)).select(
         "token", "lower_bound", "rank"
     )
-
-
-_CMS_PFX = "cms_v"
 
 
 def streaming_token_frequencies(
@@ -142,74 +125,19 @@ def streaming_token_frequencies(
     colliding mass in the min row) forever, in O(depth x width) state
     per version.
 
-    Exactly-once under foreachBatch's at-least-once contract via the
-    family's versioned-parquet protocol (``streaming/state.py``):
-    overwrite-idempotent versions, redelivered batches skip wholesale,
-    state dir bound to its checkpoint. The build parameters persist WITH
-    the state (``cms_meta``) and are validated on every batch and every
-    read — a mismatched ``width`` against durable counters would produce
-    silent garbage (review r13), so it raises instead."""
+    ``depth`` and ``width`` are the state's meta (``cms_meta``): a
+    mismatched ``width`` against durable counters would produce silent
+    garbage (review r13), so it raises instead."""
     from ..operators.sketch import count_min_table, merge_cms_tables
-    from .state import bind_state_to_checkpoint, committed_versions
 
-    bind_state_to_checkpoint(stream.sparkSession, state_dir, checkpoint_dir)
-    _check_or_write_cms_meta(stream.sparkSession, state_dir, depth, width)
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        cms = count_min_table(batch_df, text_col, depth, width)
+        return _fold(prev, cms, merge_cms_tables)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _check_or_write_cms_meta(spark, state_dir, depth, width)
-        versions = committed_versions(spark, state_dir, _CMS_PFX)
-        if batch_id in versions:
-            return  # redelivery: this batch's sketch is already durable
-        prev = [v for v in versions if v < batch_id]
-        batch_cms = count_min_table(batch_df, text_col, depth, width)
-        if prev:
-            committed = spark.read.parquet(f"{state_dir}/{_CMS_PFX}{max(prev)}")
-            merged = merge_cms_tables(committed, batch_cms)
-        else:
-            merged = batch_cms
-        merged.write.mode("overwrite").parquet(f"{state_dir}/{_CMS_PFX}{batch_id}")
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_versioned_state(
+        stream, state_dir, checkpoint_dir, _CMS, merge,
+        {"depth": depth, "width": width},
     )
-
-
-def _check_or_write_cms_meta(
-    spark: SparkSession, state_dir: str, depth: int, width: int
-) -> None:
-    """Persist (depth, width) beside the versioned sketches on first
-    contact; afterwards REFUSE any caller whose parameters disagree with
-    the durable state (hashing with a different width reads arbitrary
-    cells — a silent-garbage mode, review r13). Probed through the
-    Hadoop FS API so non-local state dirs (hdfs://, s3a://) validate too.
-
-    Single-writer contract: like every versioned-parquet state dir, the
-    meta is owned by ONE streaming query (``bind_state_to_checkpoint``
-    binds the dir to one checkpoint for life). Two writers racing the
-    first-contact write with different parameters is outside that
-    contract and is not detected here — the loser's parameters would be
-    overwritten, then refused on its NEXT batch."""
-    from .state import meta_committed
-
-    meta_path = f"{state_dir}/cms_meta"
-    if meta_committed(spark, meta_path):
-        row = spark.read.parquet(meta_path).collect()[0]
-        if (row["depth"], row["width"]) != (depth, width):
-            raise ValueError(
-                f"CMS state at {state_dir} was built with depth="
-                f"{row['depth']}/width={row['width']}; got {depth}/{width}"
-            )
-    else:
-        # absent OR present-without-_SUCCESS (crash mid-first-write):
-        # mode("overwrite") rewrites the half-written attempt, so the
-        # state self-heals instead of failing every later read (advice r14)
-        spark.createDataFrame(
-            [(int(depth), int(width))], "depth int, width int"
-        ).coalesce(1).write.mode("overwrite").parquet(meta_path)
 
 
 def read_token_frequencies(
@@ -229,28 +157,12 @@ def read_token_frequencies(
     provenance — when committed sketches exist WITHOUT their meta
     (partial state-dir cleanup; advice r14)."""
     from ..operators.sketch import cms_estimate
-    from .state import committed_versions, meta_committed
 
-    versions = committed_versions(spark, state_dir, _CMS_PFX)
-    if not versions:
-        raise ValueError(f"no committed sketch under {state_dir}")
-    meta_path = f"{state_dir}/cms_meta"
-    if not meta_committed(spark, meta_path):
-        raise ValueError(
-            f"no cms_meta under {state_dir} but committed sketches exist — "
-            "the durable state's build parameters are unknown (partial "
-            "state-dir cleanup?), so caller-supplied depth/width cannot be "
-            "trusted against it"
-        )
-    row = spark.read.parquet(meta_path).collect()[0]
-    depth = row["depth"] if depth is None else depth
-    width = row["width"] if width is None else width
-    _check_or_write_cms_meta(spark, state_dir, depth, width)
-    cms = spark.read.parquet(f"{state_dir}/{_CMS_PFX}{max(versions)}")
+    cms, meta = read_latest_state(spark, state_dir, _CMS)
+    depth = meta["depth"] if depth is None else depth
+    width = meta["width"] if width is None else width
+    check_meta(spark, state_dir, _CMS, {"depth": depth, "width": width})
     return cms_estimate(cms, probes, depth=depth, width=width)
-
-
-_DD_PFX = "dd_v"
 
 
 def streaming_value_quantiles(
@@ -310,14 +222,12 @@ def streaming_value_quantiles(
     other build parameter (a different cap on reattach is refused, not
     silently adopted).
 
-    Exactly-once via the family's versioned-parquet protocol:
-    overwrite-idempotent versions, redelivered batches skip wholesale,
-    state dir bound to its checkpoint. ``gamma``, ``max_buckets`` AND
-    ``group_col`` persist WITH the state (``dd_meta``) and are validated
-    on every batch and read — mismatched gamma against durable buckets
-    reads arbitrary value ranges, a mismatched collapse budget silently
-    changes which ranks carry the guarantee, and grouped vs global
-    buckets are different sketches, so all three raise instead."""
+    ``gamma``, ``max_buckets``, ``group_col`` and ``max_groups`` are
+    the state's meta (``dd_meta``): mismatched gamma against durable
+    buckets reads arbitrary value ranges, a mismatched collapse budget
+    silently changes which ranks carry the guarantee, grouped vs global
+    buckets are different sketches, and a different cap silently changes
+    which domains are refused, so all of them raise instead."""
     from ..operators.sketch import (
         dd_collapse,
         dd_collapse_grouped,
@@ -326,50 +236,32 @@ def streaming_value_quantiles(
         merge_dd_sketches,
         merge_dd_sketches_grouped,
     )
-    from .state import bind_state_to_checkpoint, committed_versions
 
     if gamma <= 1.0:
         raise ValueError(f"gamma must be > 1, got {gamma}")
     if max_buckets is not None and max_buckets < 1:
         raise ValueError(f"max_buckets must be >= 1, got {max_buckets}")
     _check_group_cap_args(max_groups, group_col)
-    bind_state_to_checkpoint(stream.sparkSession, state_dir, checkpoint_dir)
-    _check_or_write_dd_meta(
-        stream.sparkSession, state_dir, gamma, max_buckets, group_col, max_groups
-    )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _check_or_write_dd_meta(
-            spark, state_dir, gamma, max_buckets, group_col, max_groups
-        )
-        versions = committed_versions(spark, state_dir, _DD_PFX)
-        if batch_id in versions:
-            return  # redelivery: this batch's sketch is already durable
-        prev = [v for v in versions if v < batch_id]
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         if group_col is None:
             batch_dd = dd_sketch_table(batch_df, value_col, gamma)
-            merge, collapse = merge_dd_sketches, dd_collapse
+            combine, collapse = merge_dd_sketches, dd_collapse
         else:
             batch_dd = dd_sketch_table_grouped(
                 batch_df, group_col, value_col, gamma
             )
-            merge, collapse = merge_dd_sketches_grouped, dd_collapse_grouped
-        if prev:
-            committed = spark.read.parquet(f"{state_dir}/{_DD_PFX}{max(prev)}")
-            merged = merge(committed, batch_dd)
-        else:
-            merged = batch_dd
+            combine, collapse = merge_dd_sketches_grouped, dd_collapse_grouped
+        merged = _fold(prev, batch_dd, combine)
         if max_buckets is not None:
             merged = collapse(merged, max_buckets)
         _enforce_group_cap(merged, max_groups, state_dir, "DDSketch")
-        merged.write.mode("overwrite").parquet(f"{state_dir}/{_DD_PFX}{batch_id}")
+        return merged
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_versioned_state(
+        stream, state_dir, checkpoint_dir, _DD, merge,
+        {"gamma": gamma, "max_buckets": max_buckets, "group_col": group_col,
+         "max_groups": max_groups},
     )
 
 
@@ -411,49 +303,6 @@ def _enforce_group_cap(
         )
 
 
-def _check_or_write_dd_meta(
-    spark: SparkSession,
-    state_dir: str,
-    gamma: float,
-    max_buckets: int | None = None,
-    group_col: str | None = None,
-    max_groups: int | None = None,
-) -> None:
-    """Persist (gamma, max_buckets, group_col, max_groups) beside the
-    versioned sketches on first contact; afterwards REFUSE any caller
-    who disagrees with the durable state about any of them — a
-    different gamma reads arbitrary value ranges, a different collapse
-    budget silently changes which ranks carry the alpha guarantee,
-    grouped vs global buckets are different sketches, and a different
-    group cap silently changes which domains are refused.
-    ``_SUCCESS``-gated probe (half-written metas self-heal) and
-    single-writer contract as :func:`_check_or_write_cms_meta`; metas
-    written before an optional column existed read it as None."""
-    from .state import meta_committed
-
-    meta_path = f"{state_dir}/dd_meta"
-    if meta_committed(spark, meta_path):
-        row = _meta_dict(spark, meta_path)
-        got = (
-            row["gamma"],
-            row.get("max_buckets"),
-            row.get("group_col"),
-            row.get("max_groups"),
-        )
-        if got != (gamma, max_buckets, group_col, max_groups):
-            raise ValueError(
-                f"DDSketch state at {state_dir} was built with gamma="
-                f"{got[0]}/max_buckets={got[1]}/group_col={got[2]!r}/"
-                f"max_groups={got[3]}; got {gamma}/{max_buckets}/"
-                f"{group_col!r}/{max_groups}"
-            )
-    else:
-        spark.createDataFrame(
-            [(float(gamma), max_buckets, group_col, max_groups)],
-            "gamma double, max_buckets int, group_col string, max_groups int",
-        ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-
-
 def read_value_quantiles(
     spark: SparkSession,
     state_dir: str,
@@ -470,35 +319,15 @@ def read_value_quantiles(
     caller-supplied gamma against durable state of unknown provenance —
     when committed sketches exist WITHOUT their meta (advice r14)."""
     from ..operators.sketch import dd_quantiles, dd_quantiles_grouped
-    from .state import committed_versions, meta_committed
 
-    versions = committed_versions(spark, state_dir, _DD_PFX)
-    if not versions:
-        raise ValueError(f"no committed sketch under {state_dir}")
-    meta_path = f"{state_dir}/dd_meta"
-    if not meta_committed(spark, meta_path):
-        raise ValueError(
-            f"no dd_meta under {state_dir} but committed sketches exist — "
-            "the durable state's gamma is unknown (partial state-dir "
-            "cleanup?), so a caller-supplied gamma cannot be trusted "
-            "against it"
-        )
-    row = _meta_dict(spark, meta_path)
-    built = row["gamma"]
+    dd, meta = read_latest_state(spark, state_dir, _DD)
     if gamma is None:
-        gamma = built
-    elif gamma != built:
-        raise ValueError(
-            f"DDSketch state at {state_dir} was built with gamma={built}; "
-            f"got {gamma}"
-        )
-    dd = spark.read.parquet(f"{state_dir}/{_DD_PFX}{max(versions)}")
-    if row.get("group_col") is None:
+        gamma = meta["gamma"]
+    else:
+        check_meta(spark, state_dir, _DD, {**meta, "gamma": gamma})
+    if meta.get("group_col") is None:
         return dd_quantiles(dd, qs, gamma=gamma)
     return dd_quantiles_grouped(dd, qs, gamma=gamma)
-
-
-_HLL_PFX = "hll_v"
 
 
 def streaming_distinct_values(
@@ -515,8 +344,8 @@ def streaming_distinct_values(
     stream — the distinct-count twin of the MG/CMS/DDSketch family. The
     HLL merge (element-wise MAX) is not just exact but IDEMPOTENT, so
     even outside the versioned protocol a redelivered batch could not
-    corrupt the registers; the family's versioned-parquet discipline is
-    kept anyway for uniform reads, auditability, and version pruning.
+    corrupt the registers; the shared protocol is kept anyway for
+    uniform reads and retention.
     The committed table after batch N is bit-identical to the batch
     :func:`~..operators.sketch.hll_register_table` over everything
     ingested (pinned by tests/test_sketch.py). ``b`` persists with the
@@ -543,77 +372,27 @@ def streaming_distinct_values(
         merge_hll_tables,
         merge_hll_tables_grouped,
     )
-    from .state import bind_state_to_checkpoint, committed_versions
 
     if not 4 <= b <= 16:
         raise ValueError(f"b must be in [4, 16], got {b}")
     _check_group_cap_args(max_groups, group_col)
-    bind_state_to_checkpoint(stream.sparkSession, state_dir, checkpoint_dir)
-    _check_or_write_hll_meta(
-        stream.sparkSession, state_dir, b, group_col, max_groups
-    )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _check_or_write_hll_meta(spark, state_dir, b, group_col, max_groups)
-        versions = committed_versions(spark, state_dir, _HLL_PFX)
-        if batch_id in versions:
-            return  # redelivery: this batch's registers are already durable
-        prev = [v for v in versions if v < batch_id]
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         if group_col is None:
             batch_hll = hll_register_table(batch_df, value_col, b)
-            merge = merge_hll_tables
+            merged = _fold(prev, batch_hll, merge_hll_tables)
         else:
             batch_hll = hll_register_table_grouped(
                 batch_df, group_col, value_col, b
             )
-            merge = merge_hll_tables_grouped
-        if prev:
-            committed = spark.read.parquet(f"{state_dir}/{_HLL_PFX}{max(prev)}")
-            merged = merge(committed, batch_hll)
-        else:
-            merged = batch_hll
+            merged = _fold(prev, batch_hll, merge_hll_tables_grouped)
         _enforce_group_cap(merged, max_groups, state_dir, "HLL")
-        merged.write.mode("overwrite").parquet(f"{state_dir}/{_HLL_PFX}{batch_id}")
+        return merged
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_versioned_state(
+        stream, state_dir, checkpoint_dir, _HLL, merge,
+        {"b": b, "group_col": group_col, "max_groups": max_groups},
     )
-
-
-def _check_or_write_hll_meta(
-    spark: SparkSession,
-    state_dir: str,
-    b: int,
-    group_col: str | None = None,
-    max_groups: int | None = None,
-) -> None:
-    """Persist (b, group_col, max_groups) on first contact; refuse
-    disagreeing callers — a grouped register table and a global one are
-    DIFFERENT sketches even at the same b, and a different group cap
-    silently changes which domains are refused. ``_SUCCESS``-gated
-    probe and single-writer contract as the CMS/DDSketch metas; metas
-    written before an optional column existed read it as None."""
-    from .state import meta_committed
-
-    meta_path = f"{state_dir}/hll_meta"
-    if meta_committed(spark, meta_path):
-        row = _meta_dict(spark, meta_path)
-        got = (row["b"], row.get("group_col"), row.get("max_groups"))
-        if got != (b, group_col, max_groups):
-            raise ValueError(
-                f"HLL state at {state_dir} was built with b={got[0]}/"
-                f"group_col={got[1]!r}/max_groups={got[2]}; "
-                f"got {b}/{group_col!r}/{max_groups}"
-            )
-    else:
-        spark.createDataFrame(
-            [(int(b), group_col, max_groups)],
-            "b int, group_col string, max_groups int",
-        ).coalesce(1).write.mode("overwrite").parquet(meta_path)
 
 
 def read_distinct_count(
@@ -629,31 +408,15 @@ def read_distinct_count(
     state of unknown provenance — when committed registers exist
     WITHOUT their meta (advice r14)."""
     from ..operators.sketch import hll_cardinality, hll_cardinality_grouped
-    from .state import committed_versions, meta_committed
 
-    versions = committed_versions(spark, state_dir, _HLL_PFX)
-    if not versions:
-        raise ValueError(f"no committed registers under {state_dir}")
-    meta_path = f"{state_dir}/hll_meta"
-    if not meta_committed(spark, meta_path):
-        raise ValueError(
-            f"no hll_meta under {state_dir} but committed registers exist — "
-            "the durable state's b is unknown (partial state-dir cleanup?), "
-            "so a caller-supplied b cannot be trusted against it"
-        )
-    row = _meta_dict(spark, meta_path)
-    group_col = row.get("group_col")
+    regs, meta = read_latest_state(spark, state_dir, _HLL)
     if b is None:
-        b = row["b"]
+        b = meta["b"]
     else:
-        _check_or_write_hll_meta(spark, state_dir, b, group_col)
-    regs = spark.read.parquet(f"{state_dir}/{_HLL_PFX}{max(versions)}")
-    if group_col is None:
+        check_meta(spark, state_dir, _HLL, {**meta, "b": b})
+    if meta.get("group_col") is None:
         return hll_cardinality(regs, b=b)
     return hll_cardinality_grouped(regs, b=b)
-
-
-_TH_PFX = "theta_v"
 
 
 def streaming_theta_sketch(
@@ -675,64 +438,20 @@ def streaming_theta_sketch(
     build over everything ingested (pinned by tests/test_sketch.py) —
     and state per version is at most k rows, corpus-independent.
 
-    Exactly-once via the family's versioned-parquet protocol:
-    overwrite-idempotent versions, redelivered batches skip wholesale,
-    state dir bound to its checkpoint. ``k`` persists WITH the state
-    (``theta_meta``) and is validated on every batch and read — a
-    sketch truncated at a different k is a different summary, so it
-    raises instead (the ``cms_meta`` discipline)."""
+    ``k`` is the state's meta (``theta_meta``): a sketch truncated at a
+    different k is a different summary, so a mismatch raises."""
     from ..operators.sketch import theta_sketch_table, theta_union
-    from .state import bind_state_to_checkpoint, committed_versions
 
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    bind_state_to_checkpoint(stream.sparkSession, state_dir, checkpoint_dir)
-    _check_or_write_theta_meta(stream.sparkSession, state_dir, k)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _check_or_write_theta_meta(spark, state_dir, k)
-        versions = committed_versions(spark, state_dir, _TH_PFX)
-        if batch_id in versions:
-            return  # redelivery: this batch's sketch is already durable
-        prev = [v for v in versions if v < batch_id]
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         batch_sk = theta_sketch_table(batch_df, value_col, k)
-        if prev:
-            committed = spark.read.parquet(f"{state_dir}/{_TH_PFX}{max(prev)}")
-            merged = theta_union(committed, batch_sk, k)
-        else:
-            merged = batch_sk
-        merged.write.mode("overwrite").parquet(f"{state_dir}/{_TH_PFX}{batch_id}")
+        return _fold(prev, batch_sk, lambda a, b: theta_union(a, b, k))
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_versioned_state(
+        stream, state_dir, checkpoint_dir, _THETA, merge, {"k": k}
     )
-
-
-def _check_or_write_theta_meta(
-    spark: SparkSession, state_dir: str, k: int
-) -> None:
-    """Persist k on first contact; refuse disagreeing callers — the
-    k-truncation IS the sketch's identity. ``_SUCCESS``-gated probe
-    (half-written metas self-heal) and single-writer contract as the
-    CMS/DDSketch/HLL metas."""
-    from .state import meta_committed
-
-    meta_path = f"{state_dir}/theta_meta"
-    if meta_committed(spark, meta_path):
-        row = _meta_dict(spark, meta_path)
-        if row["k"] != k:
-            raise ValueError(
-                f"theta state at {state_dir} was built with k={row['k']}; "
-                f"got {k}"
-            )
-    else:
-        spark.createDataFrame([(int(k),)], "k int").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(meta_path)
 
 
 def read_theta_sketch(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -743,18 +462,7 @@ def read_theta_sketch(spark: SparkSession, state_dir: str) -> DataFrame:
     committed yet, and raises — rather than trusting caller context
     against durable state of unknown provenance — when committed
     sketches exist WITHOUT their meta."""
-    from .state import committed_versions, meta_committed
-
-    versions = committed_versions(spark, state_dir, _TH_PFX)
-    if not versions:
-        raise ValueError(f"no committed sketch under {state_dir}")
-    if not meta_committed(spark, f"{state_dir}/theta_meta"):
-        raise ValueError(
-            f"no theta_meta under {state_dir} but committed sketches exist "
-            "— the durable state's k is unknown (partial state-dir "
-            "cleanup?)"
-        )
-    return spark.read.parquet(f"{state_dir}/{_TH_PFX}{max(versions)}")
+    return read_latest_state(spark, state_dir, _THETA)[0]
 
 
 def read_theta_distinct(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -762,12 +470,8 @@ def read_theta_distinct(spark: SparkSession, state_dir: str) -> DataFrame:
     sketch: one ``(n_kept, est)`` row, k from the persisted meta."""
     from ..operators.sketch import theta_distinct
 
-    sketch = read_theta_sketch(spark, state_dir)
-    k = _meta_dict(spark, f"{state_dir}/theta_meta")["k"]
-    return theta_distinct(sketch, k=k)
-
-
-_SAMP_PFX = "sample_v"
+    sketch, meta = read_latest_state(spark, state_dir, _THETA)
+    return theta_distinct(sketch, k=meta["k"])
 
 
 def streaming_theta_sample(
@@ -790,81 +494,27 @@ def streaming_theta_sample(
     ``theta_sample`` over everything ingested (pinned) — and state per
     version is at most k rows, corpus-independent.
 
-    Exactly-once via the family's versioned-parquet protocol; ``k``
-    persists in ``sample_meta`` and is validated on every batch and
-    read (the ``theta_meta`` discipline)."""
+    ``k`` is the state's meta (``sample_meta``), as for the theta
+    sketch."""
     from ..operators.sketch import theta_sample
-    from .state import bind_state_to_checkpoint, committed_versions
 
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    bind_state_to_checkpoint(stream.sparkSession, state_dir, checkpoint_dir)
-    _check_or_write_sample_meta(stream.sparkSession, state_dir, k)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _check_or_write_sample_meta(spark, state_dir, k)
-        versions = committed_versions(spark, state_dir, _SAMP_PFX)
-        if batch_id in versions:
-            return  # redelivery: this batch's sample is already durable
-        prev = [v for v in versions if v < batch_id]
-        batch_s = theta_sample(batch_df, value_col, k)
-        if prev:
-            committed = spark.read.parquet(f"{state_dir}/{_SAMP_PFX}{max(prev)}")
-            merged = (
-                committed.unionByName(batch_s)
-                .dropDuplicates(["h"])
-                .orderBy("h")
-                .limit(k)
-            )
-        else:
-            merged = batch_s
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/{_SAMP_PFX}{batch_id}"
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        return _fold(
+            prev,
+            theta_sample(batch_df, value_col, k),
+            lambda a, b: a.unionByName(b).dropDuplicates(["h"]).orderBy("h").limit(k),
         )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_versioned_state(
+        stream, state_dir, checkpoint_dir, _SAMPLE, merge, {"k": k}
     )
-
-
-def _check_or_write_sample_meta(
-    spark: SparkSession, state_dir: str, k: int
-) -> None:
-    """The ``theta_meta`` discipline for the sample state: persist k on
-    first contact, refuse disagreement, ``_SUCCESS``-gated self-heal."""
-    from .state import meta_committed
-
-    meta_path = f"{state_dir}/sample_meta"
-    if meta_committed(spark, meta_path):
-        row = _meta_dict(spark, meta_path)
-        if row["k"] != k:
-            raise ValueError(
-                f"sample state at {state_dir} was built with k={row['k']}; "
-                f"got {k}"
-            )
-    else:
-        spark.createDataFrame([(int(k),)], "k int").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(meta_path)
 
 
 def read_theta_sample(spark: SparkSession, state_dir: str) -> DataFrame:
     """The latest committed cumulative sample ``(h, value)`` (<= k
     rows). Raises if nothing has committed, or when committed versions
     exist WITHOUT their meta (unknown provenance)."""
-    from .state import committed_versions, meta_committed
-
-    versions = committed_versions(spark, state_dir, _SAMP_PFX)
-    if not versions:
-        raise ValueError(f"no committed sample under {state_dir}")
-    if not meta_committed(spark, f"{state_dir}/sample_meta"):
-        raise ValueError(
-            f"no sample_meta under {state_dir} but committed samples exist "
-            "— the durable state's k is unknown (partial state-dir "
-            "cleanup?)"
-        )
-    return spark.read.parquet(f"{state_dir}/{_SAMP_PFX}{max(versions)}")
+    return read_latest_state(spark, state_dir, _SAMPLE)[0]

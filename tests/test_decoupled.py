@@ -184,13 +184,24 @@ def test_foreach_batch_rollup(spark, tmpdir):
     got = [(w.tmp_f, w.tmp_c, w.date) for w in rollup[GH]]
     assert got == [(71.0, 31.0, "2020-01-01"), (72.0, 32.0, "2020-01-02")]
 
-    # idempotency under redelivery: replay the SAME batches against the
-    # existing state (fresh checkpoint = foreachBatch redelivers batch ids
-    # 0..1). The versioned-state guard must skip the already-applied merges
-    # — without it, every (sum, count) delta would be counted twice.
+    # idempotency under redelivery: drop the checkpoint's commit marker for
+    # the last batch and restart on the SAME checkpoint, so Spark re-runs
+    # batch 1 with the same id and input. The versioned-state guard must
+    # skip the already-applied merge — without it, batch 1's (sum, count)
+    # deltas would be counted twice.
+    for name in ("1", ".1.crc"):  # the marker and its checksum sidecar
+        if os.path.exists(f"{tmpdir}/ckpt/commits/{name}"):
+            os.remove(f"{tmpdir}/ckpt/commits/{name}")
     stream2 = read_json_stream(spark, src, WEATHER_RAW, max_files_per_trigger=1)
-    q2 = rollup_via_foreach_batch(stream2, f"{tmpdir}/state", f"{tmpdir}/ckpt2")
+    q2 = rollup_via_foreach_batch(stream2, f"{tmpdir}/state", f"{tmpdir}/ckpt")
     q2.awaitTermination(180)
+    assert os.path.exists(f"{tmpdir}/ckpt/commits/1")  # batch 1 ran again
     rollup2 = {r.geohash: r.weatherList for r in spark.read.parquet(f"{tmpdir}/state/rollup").collect()}
     got2 = [(w.tmp_f, w.tmp_c, w.date) for w in rollup2[GH]]
     assert got2 == got  # unchanged: redelivered deltas not re-merged
+
+    # a FRESH checkpoint against the bound state dir must be refused: its
+    # batch ids restart at 0 and would be mistaken for redeliveries
+    stream3 = read_json_stream(spark, src, WEATHER_RAW, max_files_per_trigger=1)
+    with pytest.raises(ValueError, match="bound to checkpoint"):
+        rollup_via_foreach_batch(stream3, f"{tmpdir}/state", f"{tmpdir}/ckpt2")

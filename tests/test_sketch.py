@@ -894,27 +894,24 @@ def test_meta_success_gate_self_heals_half_written_dir(spark, tmpdir):
     are still refused."""
     import os
 
-    from kafka_streams_task_spark.streaming.sketch import (
-        _check_or_write_cms_meta,
-        _check_or_write_dd_meta,
-        _check_or_write_hll_meta,
-    )
+    from kafka_streams_task_spark.streaming.sketch import _CMS, _DD, _HLL
+    from kafka_streams_task_spark.streaming.state import check_meta
 
     for name, heal, reject in (
         (
             "cms_meta",
-            lambda s: _check_or_write_cms_meta(spark, s, 3, 64),
-            lambda s: _check_or_write_cms_meta(spark, s, 3, 128),
+            lambda s: check_meta(spark, s, _CMS, {"depth": 3, "width": 64}),
+            lambda s: check_meta(spark, s, _CMS, {"depth": 3, "width": 128}),
         ),
         (
             "dd_meta",
-            lambda s: _check_or_write_dd_meta(spark, s, 1.02),
-            lambda s: _check_or_write_dd_meta(spark, s, 1.05),
+            lambda s: check_meta(spark, s, _DD, {"gamma": 1.02}),
+            lambda s: check_meta(spark, s, _DD, {"gamma": 1.05}),
         ),
         (
             "hll_meta",
-            lambda s: _check_or_write_hll_meta(spark, s, 10),
-            lambda s: _check_or_write_hll_meta(spark, s, 12),
+            lambda s: check_meta(spark, s, _HLL, {"b": 10}),
+            lambda s: check_meta(spark, s, _HLL, {"b": 12}),
         ),
     ):
         state = f"{tmpdir}/heal_{name}"
@@ -1441,11 +1438,12 @@ def test_pre_r15_meta_schemas_still_read(spark, tmpdir):
         hll_register_table,
     )
     from kafka_streams_task_spark.streaming.sketch import (
-        _check_or_write_dd_meta,
-        _check_or_write_hll_meta,
+        _DD,
+        _HLL,
         read_distinct_count,
         read_value_quantiles,
     )
+    from kafka_streams_task_spark.streaming.state import check_meta
 
     vals = spark.createDataFrame([(float(i),) for i in range(1, 30)], "value double")
 
@@ -1456,9 +1454,9 @@ def test_pre_r15_meta_schemas_still_read(spark, tmpdir):
     dd_sketch_table(vals, "value", gamma=1.02).write.parquet(f"{s}/dd_v0")
     est = {r["q"]: r["est"] for r in read_value_quantiles(spark, s, [0.5]).collect()}
     assert 0.5 in est  # global shape, no raise
-    _check_or_write_dd_meta(spark, s, 1.02)  # same params validate
+    check_meta(spark, s, _DD, {"gamma": 1.02})  # same params validate
     with pytest.raises(ValueError, match="max_buckets"):
-        _check_or_write_dd_meta(spark, s, 1.02, max_buckets=9)
+        check_meta(spark, s, _DD, {"gamma": 1.02, "max_buckets": 9})
 
     s = f"{tmpdir}/old_hll"
     spark.createDataFrame([(10,)], "b int").coalesce(1).write.parquet(
@@ -1467,9 +1465,9 @@ def test_pre_r15_meta_schemas_still_read(spark, tmpdir):
     hll_register_table(vals, "value", b=10).write.parquet(f"{s}/hll_v0")
     row = read_distinct_count(spark, s).collect()[0]
     assert row["n_registers"] > 0  # global shape, no raise
-    _check_or_write_hll_meta(spark, s, 10)
+    check_meta(spark, s, _HLL, {"b": 10})
     with pytest.raises(ValueError, match="group_col"):
-        _check_or_write_hll_meta(spark, s, 10, group_col="seg")
+        check_meta(spark, s, _HLL, {"b": 10, "group_col": "seg"})
 
 
 def test_grouped_streaming_state_cap_bounds_or_refuses(spark, tmpdir):
@@ -1827,17 +1825,18 @@ def test_prune_state_versions_bounds_dir_without_touching_reads(spark, tmpdir):
 
     from kafka_streams_task_spark.operators.sketch import theta_sketch_table
     from kafka_streams_task_spark.streaming.sketch import (
-        _check_or_write_theta_meta,
+        _THETA,
         read_theta_distinct,
     )
     from kafka_streams_task_spark.streaming.state import (
+        check_meta,
         committed_versions,
         prune_state_versions,
     )
 
     state = f"{tmpdir}/prune_state"
     df = spark.createDataFrame([(f"u{i}",) for i in range(40)], "value string")
-    _check_or_write_theta_meta(spark, state, 16)
+    check_meta(spark, state, _THETA, {"k": 16})
     for v in range(5):
         theta_sketch_table(df.limit(10 + v * 5), "value", k=16).write.parquet(
             f"{state}/theta_v{v}"

@@ -1168,13 +1168,13 @@ def _ops_workloads():
         # events.user_id in one pass (bounded |groups| x 1024 key
         # domain, one bounded shuffle) + the per-group estimate
         from kafka_streams_task_spark.operators.sketch import (
-            hll_cardinality_grouped,
-            hll_register_table_grouped,
+            hll_cardinality,
+            hll_register_table,
         )
 
         ev = load_table(s, d, "events")
-        return hll_cardinality_grouped(
-            hll_register_table_grouped(ev, "event_type", "user_id", b=10),
+        return hll_cardinality(
+            hll_register_table(ev, "user_id", b=10, group_col="event_type"),
             b=10,
         )
 

@@ -5366,11 +5366,11 @@ def quantile_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     'gbucket:<flag>' / 'gquantile:<flag>' — the r15 GROUPED family
                  ("p99 per key", the sketch's canonical deployment):
                  per-l_returnflag bucket tables built in ONE pass
-                 (dd_sketch_table_grouped — every (grp, bucket, c) cell
-                 re-derived by the oracle), and the per-group
-                 {{0.5, 0.9, 0.99}} estimates from the fully-distributed
-                 grouped rank walk (dd_quantiles_grouped), each under
-                 the same per-row worst-case theorem stated as the
+                 (dd_sketch_table with group_col — every (grp, bucket,
+                 c) cell re-derived by the oracle), and the per-group
+                 {{0.5, 0.9, 0.99}} estimates from dd_quantiles' rank
+                 walk over the keyed table, each under the same per-row
+                 worst-case theorem stated as the
                  oracle's literal 1 — against the exact per-group order
                  statistic from a group-partitioned window.
     'canary'   — constant rows (2^53+1, int64 extremes, NULLs) stated
@@ -5390,12 +5390,7 @@ def quantile_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     real; the oracle states the LITERAL 1 (the approx_parts_ok
     discipline) so a violation hash-FAILS instead of matching a
     violation both engines re-derive (review r14)."""
-    from ..operators.sketch import (
-        dd_quantiles,
-        dd_quantiles_grouped,
-        dd_sketch_table,
-        dd_sketch_table_grouped,
-    )
+    from ..operators.sketch import dd_quantiles, dd_sketch_table
     from .llm_suites import canary_df
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -5439,15 +5434,15 @@ def quantile_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("i2"),
         )
     )
-    gsk = dd_sketch_table_grouped(li, "l_returnflag", "l_extendedprice",
-                                  gamma=_QSK_GAMMA)
+    gsk = dd_sketch_table(li, "l_extendedprice", gamma=_QSK_GAMMA,
+                          group_col="l_returnflag")
     gbucket_leg = gsk.select(
         F.concat(F.lit("gbucket:"), F.col("grp")).alias("leg"),
         F.col("bucket").cast("long").alias("key"),
         F.col("c").cast("long").alias("i1"),
         F.lit(None).cast("long").alias("i2"),
     )
-    g_est = dd_quantiles_grouped(gsk, _QSK_GQS, gamma=_QSK_GAMMA)
+    g_est = dd_quantiles(gsk, _QSK_GQS, gamma=_QSK_GAMMA)
     gvals = li.filter(x.isNotNull() & ~F.isnan(x) & (x > 0)).select(
         F.col("l_returnflag").alias("_g"), x.alias("x")
     )
@@ -5625,10 +5620,11 @@ def hll_distinct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     'greg:<type>' / 'gest:<type>' — the r15 GROUPED family (VERDICT r14
                 item 2, "distinct users per key"): per-event_type
                 register tables over events.user_id built in ONE pass
-                (hll_register_table_grouped), the whole (grp, reg, rho)
-                relation re-derived by the oracle cell by cell, and the
-                per-group estimates (hll_cardinality_grouped — the
-                identical closed form applied GROUP BY) each under the
+                (hll_register_table with group_col), the whole (grp,
+                reg, rho) relation re-derived by the oracle cell by
+                cell, and the per-group estimates (hll_cardinality over
+                the keyed table — the identical closed form applied
+                GROUP BY) each under the
                 same 3-sigma literal-1 accuracy pin vs the exact
                 per-group COUNT(DISTINCT).
     'canary'  — constant rows stated identically by both engines.
@@ -5640,12 +5636,7 @@ def hll_distinct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin (streaming/sketch.py::streaming_distinct_values,
     group_col=...) leans on both. The exact COUNT(DISTINCT) side exists
     ONLY for the gate."""
-    from ..operators.sketch import (
-        hll_cardinality,
-        hll_cardinality_grouped,
-        hll_register_table,
-        hll_register_table_grouped,
-    )
+    from ..operators.sketch import hll_cardinality, hll_register_table
 
     li = load_table(spark, sf_dir, "lineitem")
     docs = load_table(spark, sf_dir, "documents")
@@ -5678,7 +5669,7 @@ def hll_distinct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_regs = hll_register_table(li, "l_partkey", b=_HLL_B)
     s_regs = hll_register_table(docs, "source", b=_HLL_B)
 
-    g_regs = hll_register_table_grouped(ev, "event_type", "user_id", b=_HLL_B)
+    g_regs = hll_register_table(ev, "user_id", b=_HLL_B, group_col="event_type")
     greg_leg = g_regs.select(
         F.concat(F.lit("greg:"), F.col("grp")).alias("leg"),
         F.col("reg").cast("long").alias("key"),
@@ -5691,7 +5682,7 @@ def hll_distinct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("user_id").cast("long").alias("_true"))
     )
     gest_leg = (
-        hll_cardinality_grouped(g_regs, b=_HLL_B)
+        hll_cardinality(g_regs, b=_HLL_B)
         .join(F.broadcast(g_true), on=F.col("grp").eqNullSafe(F.col("_g")))
         .select(
             F.concat(F.lit("gest:"), F.col("grp")).alias("leg"),

@@ -5,20 +5,21 @@ The reference calls ``GeoHash.geoHashStringWithCharacterPrecision(lat, lng, 4)``
 from the third-party ``ch.hsr:geohash`` library (reference:
 src/main/java/org/davkaev/WeatherHotelsApp.java:74-78, MyStream.java:97-101).
 This module implements the public geohash algorithm (Niemeyer 2008; base-32
-interleaved latitude/longitude bisection) twice:
+interleaved latitude/longitude bisection) three ways:
 
+  * ``geohash_expr`` — the hot path: quantize-and-interleave as native Spark
+    column expressions, so the weather pipeline runs with no Python stage at
+    all and stays inside whole-stage codegen;
   * ``geohash_encode`` — scalar pure-Python bisection, the readable reference
-    implementation used for tests and for validating the fast path;
-  * ``_geohash_numpy`` — vectorized numpy quantize-and-interleave, used by the
-    Arrow-batched ``pandas_udf``. Quantizing ``floor((x - lo) / span * 2^bits)``
-    is exactly equivalent to bisection with ``>=`` midpoints, which is what
-    the golden vectors from the reference tests
-    (WeatherStreamsTest.java:171-177, e.g. (39.6467, -89.8455) -> "dp01",
-    (0.0, 0.0) -> "s000") pin down.
+    implementation used for tests and for validating the fast paths;
+  * ``_geohash_numpy`` — vectorized numpy quantize-and-interleave behind the
+    Arrow-batched ``geohash_udf``, which serves only the SQL ``geohash``
+    function that ``register_sql_functions`` registers.
 
-Scale note: the pandas_udf is the hot path — numpy bit ops over Arrow
-batches, no per-row Python. For 100 TB this is the only Python stage in the
-weather pipeline; everything around it stays in whole-stage codegen.
+Quantizing ``floor((x - lo) / span * 2^bits)`` is exactly equivalent to
+bisection with ``>=`` midpoints, which is what the golden vectors from the
+reference tests (WeatherStreamsTest.java:171-177, e.g. (39.6467, -89.8455)
+-> "dp01", (0.0, 0.0) -> "s000") pin down.
 """
 
 from __future__ import annotations

@@ -1425,7 +1425,6 @@ def decontaminate_bloom(
     corpus_text: str = "text",
     bench_text: str = "text",
     min_overlap: int = 1,
-    dense_max_bits: int = 0,
 ) -> DataFrame:
     """:func:`decontaminate` behind a Bloom pre-filter. With
     ``benchmark`` given, bloom survivors are exactly verified and the
@@ -1433,18 +1432,10 @@ def decontaminate_bloom(
     negatives); without it, the output over-flags at the filter's FPP —
     the conservative direction for decontamination.
 
-    Probe shapes (opt-r17, guide §3.2 "broadcast the filter once",
-    measured): with ``dense_max_bits`` > 0 and a filter under that
-    bound, the word table collapses into ONE dense array literal and
-    all ``k`` probes become pure codegen expressions — zero joins
-    before the hit filter, identical bit math (equivalence-pinned).
-    Measured at bench scale the dense form trades the k broadcast
-    builds for one driver collect and reads as a wall-clock WASH
-    (probe-stage cpu −7%, fixed cost +0.15-0.3s), so the k-join form
-    stays the DEFAULT (``dense_max_bits=0``) and the dense probe is
-    the opt-in for deployments where the per-row probe dominates
-    (corpus ≫ filter; the r17 rejection receipt lives in
-    OPTIMIZATION_r17.md). Only bloom HITS reach the verify join, so
+    Probe shape: ``k`` broadcast joins against the word table, one per
+    hash. A dense-literal probe (the whole table as one array literal)
+    measured as a wall-clock wash at two scales and was removed (receipt
+    in OPTIMIZATION_r17.md). Only bloom HITS reach the verify join, so
     its corpus side is rare and the benchmark side never needs to fit
     a broadcast hash relation."""
     m, k = bloom.m_bits, bloom.num_hashes
@@ -1462,42 +1453,23 @@ def decontaminate_bloom(
     ).filter(F.col("h").isNotNull())
     probes = _bloom_probe_cols(F.col("h"), m, k)
     out = corpus_sh
-    if 0 < int(dense_max_bits) and m <= int(dense_max_bits):
-        import numpy as np
-
-        dense = np.zeros(m // 64, dtype=np.int64)
-        for r in bloom.words.collect():
-            dense[int(r["word_idx"])] = int(r["word"])
-        # one Literal array node (not CreateArray): O(1) indexed access
-        # in codegen, shipped once with the stage's task binary
-        lit_words = F.lit(dense.tolist()).cast("array<bigint>")
-        hit = F.lit(True)
-        for i, pos in enumerate(probes):
-            out = out.withColumn(f"_bp{i}", pos)
-            word = F.element_at(
-                lit_words,
-                (F.shiftrightunsigned(F.col(f"_bp{i}"), 6) + F.lit(1)).cast("int"),
-            )
-            mask = F.expr(f"shiftleft(1L, cast(_bp{i} % 64 AS int))")
-            hit = hit & (word.bitwiseAND(mask) != F.lit(0))
-    else:
-        hit = F.lit(True)
-        for i, pos in enumerate(probes):
-            out = out.withColumn(f"_bp{i}", pos)
-            out = out.join(
-                F.broadcast(
-                    bloom.words.select(
-                        F.col("word_idx").alias(f"_bw{i}"),
-                        F.col("word").alias(f"_bwv{i}"),
-                    )
-                ),
-                on=F.col(f"_bw{i}") == F.shiftrightunsigned(F.col(f"_bp{i}"), 6),
-                how="left",
-            )
-            hit = hit & F.coalesce(
-                F.expr(f"(_bwv{i} & shiftleft(1L, cast(_bp{i} % 64 AS int))) != 0"),
-                F.lit(False),
-            )
+    hit = F.lit(True)
+    for i, pos in enumerate(probes):
+        out = out.withColumn(f"_bp{i}", pos)
+        out = out.join(
+            F.broadcast(
+                bloom.words.select(
+                    F.col("word_idx").alias(f"_bw{i}"),
+                    F.col("word").alias(f"_bwv{i}"),
+                )
+            ),
+            on=F.col(f"_bw{i}") == F.shiftrightunsigned(F.col(f"_bp{i}"), 6),
+            how="left",
+        )
+        hit = hit & F.coalesce(
+            F.expr(f"(_bwv{i} & shiftleft(1L, cast(_bp{i} % 64 AS int))) != 0"),
+            F.lit(False),
+        )
     candidates = out.filter(hit).select(corpus_id, "h")
     if benchmark is not None:
         bench_sh = (

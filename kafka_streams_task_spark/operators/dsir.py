@@ -60,10 +60,11 @@ from .classifier import feature_index
 _HASH_SPACE = float(1 << 32)
 
 
-def _tokens_expr(text: Column, lowercase: bool) -> Column:
-    """Lowercased (by default) whitespace tokens, empties dropped."""
-    base = F.lower(text) if lowercase else text
-    return F.filter(F.split(F.trim(base), WHITESPACE_RE), lambda t: t != F.lit(""))
+def _tokens_expr(text: Column) -> Column:
+    """Lowercased whitespace tokens, empties dropped."""
+    return F.filter(
+        F.split(F.trim(F.lower(text)), WHITESPACE_RE), lambda t: t != F.lit("")
+    )
 
 
 def _indices_of_tokens(toks: Column, n_features: int) -> Column:
@@ -78,15 +79,14 @@ def _indices_of_tokens(toks: Column, n_features: int) -> Column:
     )
 
 
-def dsir_gram_indices(
-    text: Column, n_features: int = 1 << 13, lowercase: bool = True
-) -> Column:
+def dsir_gram_indices(text: Column, n_features: int = 1 << 13) -> Column:
     """``array<long>`` of hashed word uni+bigram bucket ids for one
     document — the DSIR feature extractor as a pure column expression.
 
-    Tokenization is the engine's whitespace split (lowercased by
-    default, per the paper; both Spark and DuckDB lowercase plain ASCII
-    identically — non-ASCII locale-edge casing is the caller's risk),
+    Tokenization is the engine's whitespace split, always lowercased
+    (per the paper, and so a model is fit and scored on the same
+    tokens; both Spark and DuckDB lowercase plain ASCII identically —
+    non-ASCII locale-edge casing is the caller's risk),
     empty tokens dropped. Bigrams join adjacent tokens with one space,
     so the bucket of bigram "a b" is ``feature_index('a b')`` in both
     engines. NULL text → NULL (explode drops it; ``dsir_score`` keeps
@@ -99,14 +99,13 @@ def dsir_gram_indices(
     referenced non-cheap alias — the ``registered_domain_of_host``
     lesson).
     """
-    return _indices_of_tokens(_tokens_expr(text, lowercase), n_features)
+    return _indices_of_tokens(_tokens_expr(text), n_features)
 
 
 def _gram_explode(
     df: DataFrame,
     text_col: str,
     n_features: int,
-    lowercase: bool,
     id_cols: list[str],
     outer: bool = False,
 ) -> DataFrame:
@@ -126,7 +125,7 @@ def _gram_explode(
     )
     with_toks = projected.select(
         *[F.col(c) for c in id_cols],
-        _tokens_expr(F.col(text_col), lowercase).alias("_dsir_toks"),
+        _tokens_expr(F.col(text_col)).alias("_dsir_toks"),
     )
     idxs = _indices_of_tokens(F.col("_dsir_toks"), n_features)
     # always explode_outer: a plain explode makes the optimizer infer
@@ -146,7 +145,6 @@ def dsir_fit(
     text_col: str = "text",
     n_features: int = 1 << 13,
     alpha: float = 1.0,
-    lowercase: bool = True,
 ) -> DataFrame:
     """Fit the importance model: ``(idx, log_ratio, n_features)`` with
     one idx-NULL row carrying the unseen-bucket default (see module
@@ -177,7 +175,7 @@ def dsir_fit(
         F.lit(True).alias("_dsir_t"), F.col(text_col)
     ).unionByName(raw.select(F.lit(False).alias("_dsir_t"), F.col(text_col)))
     both = (
-        _gram_explode(tagged, text_col, n_features, lowercase, id_cols=["_dsir_t"])
+        _gram_explode(tagged, text_col, n_features, id_cols=["_dsir_t"])
         .groupBy("idx")
         .agg(
             F.sum(F.when(F.col("_dsir_t"), 1).otherwise(0))
@@ -198,7 +196,6 @@ def dsir_fit_tagged(
     text_col: str = "text",
     n_features: int = 1 << 13,
     alpha: float = 1.0,
-    lowercase: bool = True,
 ) -> DataFrame:
     """:func:`dsir_fit` for the common target-is-a-subset case — fit
     from ONE corpus scan instead of two. When the target corpus is a
@@ -223,7 +220,6 @@ def dsir_fit_tagged(
             corpus.withColumn("_dsir_t", target_cond.cast("boolean")),
             text_col,
             n_features,
-            lowercase,
             id_cols=["_dsir_t"],
         )
         .groupBy("idx")
@@ -344,7 +340,6 @@ def dsir_score(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_features: int | None = None,
-    lowercase: bool = True,
 ) -> DataFrame:
     """``(id_col, dsir_logw, n_grams)`` for every input document —
     ``dsir_logw = Σ_grams log_ratio[bucket(gram)]`` (ln of the
@@ -363,7 +358,7 @@ def dsir_score(
     n_features, unseen = _model_meta(weights, n_features)
     w = weights.filter(F.col("idx").isNotNull()).select("idx", "log_ratio")
     grams = _gram_explode(
-        df, text_col, n_features, lowercase, id_cols=[id_col], outer=True
+        df, text_col, n_features, id_cols=[id_col], outer=True
     )
     term = F.when(F.col("idx").isNull(), F.lit(0.0)).otherwise(
         F.coalesce(F.col("log_ratio"), F.lit(unseen))
@@ -452,7 +447,6 @@ def dsir_score_dense(
     weights: DataFrame,
     text_col: str = "text",
     n_features: int | None = None,
-    lowercase: bool = True,
 ) -> DataFrame:
     """STATELESS scorer: appends ``dsir_logw``/``n_grams`` to ``df``
     with zero joins and zero shuffles — tokenize+hash stays a JVM
@@ -513,7 +507,7 @@ def dsir_score_dense(
 
     # two steps for the same tokenize-once reason as _gram_explode
     with_idx = df.withColumn(
-        "_dsir_toks", _tokens_expr(F.col(text_col), lowercase)
+        "_dsir_toks", _tokens_expr(F.col(text_col))
     ).withColumn(
         "_dsir_idx", _indices_of_tokens(F.col("_dsir_toks"), n_features)
     ).drop("_dsir_toks")

@@ -48,20 +48,13 @@ __all__ = [
     "count_min_table",
     "dd_alpha",
     "dd_collapse",
-    "dd_collapse_grouped",
     "dd_quantiles",
-    "dd_quantiles_grouped",
     "dd_sketch_table",
-    "dd_sketch_table_grouped",
     "hll_cardinality",
-    "hll_cardinality_grouped",
     "hll_register_table",
-    "hll_register_table_grouped",
     "merge_cms_tables",
     "merge_dd_sketches",
-    "merge_dd_sketches_grouped",
     "merge_hll_tables",
-    "merge_hll_tables_grouped",
     "merge_mg_summaries",
     "misra_gries_candidates",
     "theta_a_not_b",
@@ -282,15 +275,15 @@ def count_min_table(
     :func:`cms_estimate` coalesces.
 
     Per-key frequencies ("how often does token t occur under key k")
-    need no grouped variant, unlike HLL/DDSketch (r15): hash the
+    need no ``group_col``, unlike HLL/DDSketch (r15): hash the
     COMPOSITE key — sketch a ``concat(key, ':', token)`` column and
     probe the same concatenation. A (key, row, col) table would
     multiply the bounded domain by |keys| for identical accuracy;
     composite hashing keeps one bounded table and the same one-sided
-    error bound over the combined stream. (HLL/DDSketch DO need grouped
-    forms because their estimates aggregate over a whole register/bucket
-    table per group — there is no composite-key trick for "distinct per
-    key" or "p99 per key".)"""
+    error bound over the combined stream. (HLL/DDSketch DO take a
+    ``group_col`` because their estimates aggregate over a whole
+    register/bucket table per group — there is no composite-key trick
+    for "distinct per key" or "p99 per key".)"""
     if depth < 1 or width < 1:
         raise ValueError(f"depth/width must be >= 1, got {depth}/{width}")
     toks = df.select(
@@ -442,10 +435,26 @@ def _dd_bucket(value, gamma: float) -> "F.Column":
     ).cast("int")
 
 
+def _keys(table: DataFrame) -> list[str]:
+    """``["grp"]`` for a keyed sketch table (built with a ``group_col``),
+    ``[]`` for a global one — every reader and merger partitions by it."""
+    return ["grp"] if "grp" in table.columns else []
+
+
+def _on_grp(table: DataFrame, per_group: DataFrame, key: str) -> DataFrame:
+    """Join a per-group relation (group column ``key``) back onto a
+    sketch table: NULL-safe on ``grp`` when keyed (a NULL group is its
+    own group), a broadcast of the one global row otherwise."""
+    if _keys(table):
+        return table.join(per_group, on=F.col("grp").eqNullSafe(F.col(key)))
+    return table.crossJoin(F.broadcast(per_group))
+
+
 def dd_sketch_table(
     df: DataFrame,
     value_col: str,
     gamma: float = 1.02,
+    group_col: str | None = None,
 ) -> DataFrame:
     """Build the DDSketch bucket table ``(bucket, c)`` over the strictly
     POSITIVE values of ``df[value_col]`` — NULL, NaN and non-positive
@@ -453,169 +462,24 @@ def dd_sketch_table(
     undefined at and across zero; callers with signed data sketch the
     two sign branches separately, the paper's standard extension).
     Buckets never touched are absent; the quantile walk needs no zeros
-    because ranks come from cumulative counts."""
+    because ranks come from cumulative counts.
+
+    ``group_col``: per-group tables in one pass, ``(grp, bucket, c)`` —
+    the sketch's canonical deployment shape ("p99 latency per
+    endpoint") as ONE bounded relation; a NULL group is its own group.
+    Every reader and merger below takes either shape and treats each
+    group exactly as its own global sketch. Scale shape: map-side
+    aggregation onto at most |groups| x bucket-domain cells, then one
+    shuffle."""
     if gamma <= 1.0:
         raise ValueError(f"gamma must be > 1, got {gamma}")
     v = F.col(value_col).cast("double")
-    return (
-        df.filter(v.isNotNull() & ~F.isnan(v) & (v > 0))
-        .select(_dd_bucket(v, gamma).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    grp = [] if group_col is None else [F.col(group_col).alias("grp")]
+    cells = df.filter(v.isNotNull() & ~F.isnan(v) & (v > 0)).select(
+        *grp, _dd_bucket(v, gamma).alias("bucket")
     )
-
-
-def _dd_check_quantile_args(gamma: float, qs: list[float]) -> None:
-    """Shared validation of the global and grouped quantile walks."""
-    if gamma <= 1.0:
-        raise ValueError(f"gamma must be > 1, got {gamma}")
-    if not qs or any(q < 0 or q > 1 for q in qs):
-        raise ValueError(f"qs must be non-empty fractions in [0,1], got {qs}")
-
-
-def _dd_rank_col(n_minus_1) -> "F.Column":
-    """The paper's 1-indexed rank ``floor(q * (N-1)) + 1`` over a ``q``
-    column — ONE statement of the IEEE arithmetic the DuckDB oracle
-    restates, shared by the global walk (N-1 a driver literal) and the
-    grouped walk (N-1 a per-group column)."""
-    return (F.floor(F.col("q") * n_minus_1) + 1).cast("long")
-
-
-def _dd_midpoint_est(gamma: float) -> "F.Column":
-    """The bucket-midpoint estimate ``2*gamma^bucket/(gamma+1)`` over a
-    ``bucket`` column — shared by both walks (and restated verbatim by
-    the oracle)."""
-    return (
-        F.lit(2.0)
-        * F.pow(F.lit(float(gamma)), F.col("bucket").cast("double"))
-        / F.lit(float(gamma) + 1.0)
-    )
-
-
-def dd_sketch_table_grouped(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    gamma: float = 1.02,
-) -> DataFrame:
-    """Per-group DDSketch bucket tables in one pass: ``(grp, bucket, c)``
-    — the sketch's canonical deployment shape ("p99 latency per
-    endpoint", "price quantiles per segment") as ONE bounded relation.
-    Identical bucket arithmetic and row filter (NULL/NaN/non-positive
-    excluded) to :func:`dd_sketch_table`; a NULL group is its own group.
-
-    Scale shape: map-side aggregation onto at most |groups| x bucket-
-    domain cells — corpus-independent for any bounded group domain —
-    then one shuffle. Per-group merge stays cell-wise sum
-    (:func:`merge_dd_sketches_grouped`), so the alpha guarantee
-    telescopes per group exactly as it does globally."""
-    if gamma <= 1.0:
-        raise ValueError(f"gamma must be > 1, got {gamma}")
-    v = F.col(value_col).cast("double")
-    return (
-        df.filter(v.isNotNull() & ~F.isnan(v) & (v > 0))
-        .select(
-            F.col(group_col).alias("grp"), _dd_bucket(v, gamma).alias("bucket")
-        )
-        .groupBy("grp", "bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-
-
-def dd_quantiles_grouped(
-    sketch: DataFrame,
-    qs: list[float],
-    gamma: float = 1.02,
-) -> DataFrame:
-    """Per-group quantile estimates from a grouped bucket table
-    (:func:`dd_sketch_table_grouped`): ``(grp, q, est)`` rows via the
-    SAME rank walk as :func:`dd_quantiles` applied per group — rank =
-    floor(q*(N_g - 1)) + 1 within each group's cumulative bucket counts,
-    midpoint estimate, the full per-group alpha guarantee.
-
-    Fully distributed, unlike the global walk's bounded driver collect:
-    per-group totals are an aggregate, ranks join the per-group
-    cumulative table on (group, cum >= rank), and everything stays
-    bounded by |groups| x bucket-domain x |qs|. A group with no positive
-    values is ABSENT from the sketch and so from the result (the
-    grouped-family empty convention — hll_cardinality_grouped does the
-    same); the global function's empty-sketch raise makes no sense
-    per-group."""
-    from pyspark.sql import Window
-
-    _dd_check_quantile_args(gamma, qs)
-    spark = sketch.sparkSession
-    totals = sketch.groupBy("grp").agg(F.sum("c").cast("long").alias("_N"))
-    qdf = local_table(spark, [(float(q),) for q in qs], "q double")
-    # same IEEE arithmetic as the global walk and the DuckDB restating
-    ranked = totals.crossJoin(F.broadcast(qdf)).select(
-        F.col("grp").alias("_rg"),
-        "q",
-        _dd_rank_col((F.col("_N") - 1).cast("double")).alias("_rank"),
-    )
-    w = (
-        Window.partitionBy("grp")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = sketch.withColumn("_cum", F.sum("c").over(w))
-    hit = (
-        ranked.join(
-            cum,
-            on=F.col("_rg").eqNullSafe(F.col("grp"))
-            & (F.col("_cum") >= F.col("_rank")),
-        )
-        .groupBy("_rg", "q")
-        .agg(F.min("bucket").alias("bucket"))
-    )
-    return hit.select(
-        F.col("_rg").alias("grp"), "q", _dd_midpoint_est(gamma).alias("est")
-    )
-
-
-def merge_dd_sketches_grouped(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Per-group cell-wise sum of two grouped bucket tables built with
-    the SAME gamma — exactly the table of the concatenated input, per
-    group."""
-    return (
-        a.unionByName(b)
-        .groupBy("grp", "bucket")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
-def dd_collapse_grouped(sketch: DataFrame, max_buckets: int) -> DataFrame:
-    """:func:`dd_collapse` applied per group: each group keeps its own
-    ``max_buckets`` highest bucket indices and folds its lower mass into
-    its own smallest kept bucket — each group's quantile guarantees
-    degrade (or not) independently, exactly as if each group were its
-    own global sketch. Same composition property per group: the cut is
-    non-decreasing as the group's data grows, so
-    collapse-after-merge-per-batch equals collapsing the full build.
-
-    Plan shape: one row_number window over the bounded |groups| x domain
-    table (replacing the global version's 1-row broadcast cut with a
-    |groups|-row cut relation joined back on the group key)."""
-    from pyspark.sql import Window
-
-    if max_buckets < 1:
-        raise ValueError(f"max_buckets must be >= 1, got {max_buckets}")
-    w = Window.partitionBy("grp").orderBy(F.col("bucket").desc())
-    cut = (
-        sketch.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_buckets)
-        .groupBy(F.col("grp").alias("_cg"))
-        .agg(F.min("bucket").alias("_cut"))
-    )
-    return (
-        sketch.join(cut, on=F.col("grp").eqNullSafe(F.col("_cg")))
-        .select(
-            "grp",
-            F.greatest(F.col("bucket"), F.col("_cut")).alias("bucket"),
-            F.col("c"),
-        )
-        .groupBy("grp", "bucket")
-        .agg(F.sum("c").cast("long").alias("c"))
+    return cells.groupBy(*_keys(cells), "bucket").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
     )
 
 
@@ -633,40 +497,58 @@ def dd_quantiles(
     element sits in the same bucket as the data's rank-r element) and
     the midpoint is within alpha of everything in its bucket.
 
-    Plan shape: ONE bounded aggregate collect of the total count (the
-    sketch is at most the bucket domain, so this is the cheap,
-    merge_mg_summaries-class action — it also serves as the empty-sketch
-    raise), then one cumulative window over the bucket table and a
-    broadcast of the tiny q-relation against it. Raises on an EMPTY
-    sketch — a quantile of nothing is a contract error, not a 0 (unlike
-    CMS point counts, where absent means zero occurrences)."""
+    A keyed table gives ``(grp, q, est)``: the same walk per group over
+    the group's own N. A group with no positive values is absent from
+    the sketch and so from the result.
+
+    Plan shape: per-group totals (one row when global) crossed with the
+    tiny q-relation, joined onto one cumulative window over the bucket
+    table — bounded by |groups| x bucket-domain x |qs|. A global sketch
+    pays ONE bounded collect of its total first, which is the
+    empty-sketch raise — a quantile of nothing is a contract error, not
+    a 0 (unlike CMS point counts, where absent means zero
+    occurrences)."""
     from pyspark.sql import Window
 
-    _dd_check_quantile_args(gamma, qs)
-    spark = sketch.sparkSession
-    total = sketch.agg(F.sum("c").cast("long").alias("N")).collect()[0]["N"]
-    if not total:
+    if gamma <= 1.0:
+        raise ValueError(f"gamma must be > 1, got {gamma}")
+    if not qs or any(q < 0 or q > 1 for q in qs):
+        raise ValueError(f"qs must be non-empty fractions in [0,1], got {qs}")
+    g = _keys(sketch)
+    totals = sketch.groupBy(*g).agg(F.sum("c").cast("long").alias("_N"))
+    if not g and not totals.collect()[0]["_N"]:
         raise ValueError("dd_quantiles: empty sketch (no positive values)")
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    cum = sketch.withColumn("cum", F.sum("c").over(w))
-    qdf = local_table(spark, [(float(q),) for q in qs], "q double")
-    # same IEEE arithmetic as the DuckDB restating: q * (N-1) in double
-    ranked = qdf.select("q", _dd_rank_col(F.lit(float(total - 1))).alias("rank"))
-    hit = (
-        ranked.join(F.broadcast(cum), on=F.col("cum") >= F.col("rank"))
-        .groupBy("q")
-        .agg(F.min("bucket").alias("bucket"))
+    qdf = local_table(sketch.sparkSession, [(float(q),) for q in qs], "q double")
+    # rank = floor(q * (N-1)) + 1 in double: the DuckDB oracle's arithmetic
+    rank = (F.floor(F.col("q") * (F.col("_N") - 1).cast("double")) + 1).cast("long")
+    ranked = totals.crossJoin(F.broadcast(qdf)).select(
+        *[F.col(c).alias("_rg") for c in g], "q", rank.alias("_rank")
     )
-    return hit.select("q", _dd_midpoint_est(gamma).alias("est"))
+    w = (
+        Window.partitionBy(*g)
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cum = sketch.withColumn("_cum", F.sum("c").over(w))
+    hit = _on_grp(cum, ranked, "_rg").filter(F.col("_cum") >= F.col("_rank"))
+    est = (
+        F.lit(2.0)
+        * F.pow(F.lit(float(gamma)), F.min("bucket").cast("double"))
+        / F.lit(float(gamma) + 1.0)
+    )
+    return hit.groupBy(*[F.col("_rg").alias(c) for c in g], "q").agg(
+        est.alias("est")
+    )
 
 
 def merge_dd_sketches(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cell-wise sum of two DDSketch tables built with the SAME gamma:
-    the merged sketch is EXACTLY the sketch of the concatenated input
-    (bucket indexing is deterministic, counter addition commutes), so
-    shard-parallel or streaming construction loses nothing and the
-    alpha guarantee carries over unchanged."""
-    return a.unionByName(b).groupBy("bucket").agg(
+    """Cell-wise sum of two DDSketch tables (global or keyed) built with
+    the SAME gamma: the merged sketch is EXACTLY the sketch of the
+    concatenated input, per group (bucket indexing is deterministic,
+    counter addition commutes), so shard-parallel or streaming
+    construction loses nothing and the alpha guarantee carries over
+    unchanged."""
+    return a.unionByName(b).groupBy(*_keys(a), "bucket").agg(
         F.sum("c").cast("long").alias("c")
     )
 
@@ -679,31 +561,38 @@ def dd_collapse(sketch: DataFrame, max_buckets: int) -> DataFrame:
     the kept range keep the full alpha guarantee, while ranks inside the
     collapsed mass degrade to "at most the collapse boundary" — the
     deliberate trade (DDSketch is typically deployed for UPPER quantiles,
-    p95/p99 latency style, which collapse never touches).
+    p95/p99 latency style, which collapse never touches). A keyed table
+    collapses each group independently, as its own global sketch.
 
     Deterministic (the cut is the max_buckets-th highest bucket index),
     so the collapsed table is still oracle-restatable. Apply AFTER
     merges when exactness matters: collapse(merge(a,b)) loses nothing
     vs merging pre-collapsed shards, whose already-collapsed mass cannot
-    be re-split.
+    be re-split (the cut is non-decreasing as data grows, so
+    collapse-after-merge-per-batch equals collapsing the full build).
 
-    Plan shape: one bounded top-k over the bucket table (domain-sized,
-    the merge_mg_summaries precedent) broadcast as a 1-row scalar onto
-    the table."""
+    Plan shape: one row_number window over the bounded bucket table,
+    whose per-group cut (one row when global) joins back onto it."""
+    from pyspark.sql import Window
+
     if max_buckets < 1:
         raise ValueError(f"max_buckets must be >= 1, got {max_buckets}")
+    g = _keys(sketch)
+    w = Window.partitionBy(*g).orderBy(F.col("bucket").desc())
     cut = (
-        sketch.orderBy(F.col("bucket").desc())
-        .limit(max_buckets)
+        sketch.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= max_buckets)
+        .groupBy(*[F.col(c).alias("_cg") for c in g])
         .agg(F.min("bucket").alias("_cut"))
     )
     return (
-        sketch.crossJoin(F.broadcast(cut))
+        _on_grp(sketch, cut, "_cg")
         .select(
+            *g,
             F.greatest(F.col("bucket"), F.col("_cut")).alias("bucket"),
             F.col("c"),
         )
-        .groupBy("bucket")
+        .groupBy(*g, "bucket")
         .agg(F.sum("c").cast("long").alias("c"))
     )
 
@@ -741,9 +630,26 @@ def dd_collapse(sketch: DataFrame, max_buckets: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _hll_reg_rho(value_col: str, b: int) -> tuple["F.Column", "F.Column"]:
-    """The (reg, rho) column pair shared by the global and grouped
-    builders — the integer-exact md5/shiftright/bin formulation."""
+def hll_register_table(
+    df: DataFrame,
+    value_col: str,
+    b: int = 10,
+    group_col: str | None = None,
+) -> DataFrame:
+    """Build the HLL register table ``(reg, rho)`` over the NON-NULL
+    values of ``df[value_col]`` (cast to string before hashing — equal
+    values collapse by construction, which is the whole point).
+    Registers never touched are absent (the estimator counts them as
+    empty). ``b`` register-index bits: 4 <= b <= 16 (m = 2^b registers;
+    the 60-bit hash leaves a 44-bit suffix even at b=16).
+
+    ``group_col``: per-group register tables in one pass,
+    ``(grp, reg, rho)`` — "distinct users per key" as ONE bounded
+    relation of at most |groups| x 2^b cells instead of one sketch
+    object per group; a NULL group is its own group. The estimator and
+    the merge take either shape."""
+    if not 4 <= b <= 16:
+        raise ValueError(f"b must be in [4, 16], got {b}")
     vbits = 60 - b
     h = F.conv(
         F.substring(F.md5(F.col(value_col).cast("string")), 1, 15), 16, 10
@@ -757,68 +663,22 @@ def _hll_reg_rho(value_col: str, b: int) -> tuple["F.Column", "F.Column"]:
     rho = F.when(suffix == 0, F.lit(vbits + 1)).otherwise(
         F.lit(vbits + 1) - F.length(F.bin(suffix))
     ).cast("int")
-    return reg, rho
-
-
-def hll_register_table(
-    df: DataFrame,
-    value_col: str,
-    b: int = 10,
-) -> DataFrame:
-    """Build the HLL register table ``(reg, rho)`` over the NON-NULL
-    values of ``df[value_col]`` (cast to string before hashing — equal
-    values collapse by construction, which is the whole point).
-    Registers never touched are absent (the estimator counts them as
-    empty). ``b`` register-index bits: 4 <= b <= 16 (m = 2^b registers;
-    the 60-bit hash leaves a 44-bit suffix even at b=16)."""
-    if not 4 <= b <= 16:
-        raise ValueError(f"b must be in [4, 16], got {b}")
-    reg, rho = _hll_reg_rho(value_col, b)
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .select(reg.alias("reg"), rho.alias("rho"))
-        .groupBy("reg")
-        .agg(F.max("rho").alias("rho"))
+    grp = [] if group_col is None else [F.col(group_col).alias("grp")]
+    cells = df.filter(F.col(value_col).isNotNull()).select(
+        *grp, reg.alias("reg"), rho.alias("rho")
     )
-
-
-def hll_register_table_grouped(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    b: int = 10,
-) -> DataFrame:
-    """Per-group HLL register tables in one pass: ``(grp, reg, rho)`` —
-    the canonical 100 TB ask ("distinct users per key") as ONE bounded
-    relation instead of one sketch object per group. Identical hash /
-    register / rho arithmetic to :func:`hll_register_table`; a NULL
-    group is its own group (the groupBy convention everywhere else in
-    the engine); NULL values are excluded per group exactly as the
-    global builder excludes them.
-
-    Scale shape: the value stream aggregates map-side onto a key domain
-    of at most |groups| x 2^b cells — still corpus-independent for any
-    bounded group domain — before one shuffle. Per-group merge stays
-    element-wise MAX (:func:`merge_hll_tables_grouped`), idempotent, so
-    shard-parallel and streaming construction lose nothing."""
-    if not 4 <= b <= 16:
-        raise ValueError(f"b must be in [4, 16], got {b}")
-    reg, rho = _hll_reg_rho(value_col, b)
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .select(F.col(group_col).alias("grp"), reg.alias("reg"), rho.alias("rho"))
-        .groupBy("grp", "reg")
-        .agg(F.max("rho").alias("rho"))
-    )
+    return cells.groupBy(*_keys(cells), "reg").agg(F.max("rho").alias("rho"))
 
 
 def hll_cardinality(registers: DataFrame, b: int = 10) -> DataFrame:
     """Cardinality estimate from a register table: one row
-    ``(n_registers, est)``. Classic HLL estimator with the small-range
-    (linear counting) correction; the 32-bit large-range correction does
-    not apply at a 60-bit hash. Standard error ~ 1.04/sqrt(2^b) — a
-    PROBABILISTIC bound (per-dataset deterministic under the fixed md5
-    hash, unlike DDSketch's worst-case alpha).
+    ``(n_registers, est)``, or ``(grp, n_registers, est)`` per group of
+    a keyed table (a group with no non-NULL values is absent). Classic
+    HLL estimator with the small-range (linear counting) correction; the
+    32-bit large-range correction does not apply at a 60-bit hash.
+    Standard error ~ 1.04/sqrt(2^b) — a PROBABILISTIC bound
+    (per-dataset deterministic under the fixed md5 hash, unlike
+    DDSketch's worst-case alpha).
 
     Deterministic across engines and partitionings: the register sum is
     the exact integer S' = Σ 2^(K-rho) + empty*2^K (K = 61-b), so the
@@ -826,8 +686,28 @@ def hll_cardinality(registers: DataFrame, b: int = 10) -> DataFrame:
     division of literals by an exact integer."""
     if not 4 <= b <= 16:
         raise ValueError(f"b must be in [4, 16], got {b}")
-    agg = registers.agg(*_hll_sum_aggs(b))
-    return agg.select("n_registers", _hll_est_expr(b).alias("est"))
+    g = _keys(registers)
+    m = 1 << b
+    k_exp = 61 - b
+    agg = registers.groupBy(*g).agg(
+        F.count(F.lit(1)).cast("long").alias("n_registers"),
+        F.coalesce(
+            F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {k_exp} - rho)")),
+            F.lit(0),
+        )
+        .cast("long")
+        .alias("_s_touched"),
+    )
+    n_empty = F.lit(m) - F.col("n_registers")
+    s_scaled = F.col("_s_touched") + n_empty.cast("long") * F.lit(1 << k_exp)
+    numer = _hll_alpha(m) * m * m * float(1 << k_exp)
+    raw = F.lit(numer) / s_scaled.cast("double")
+    # linear counting when the raw estimate is small and empties remain
+    est = F.when(
+        (raw <= F.lit(2.5 * m)) & (n_empty > 0),
+        F.lit(float(m)) * F.log(F.lit(float(m)) / n_empty.cast("double")),
+    ).otherwise(raw)
+    return agg.select(*g, "n_registers", est.alias("est"))
 
 
 def _hll_alpha(m: int) -> float:
@@ -840,71 +720,13 @@ def _hll_alpha(m: int) -> float:
     return 0.673
 
 
-def _hll_sum_aggs(b: int) -> list["F.Column"]:
-    """The two aggregates the estimator needs — touched-register count
-    and the EXACT scaled integer register sum Σ 2^(K-rho), K = 61-b."""
-    k_exp = 61 - b
-    return [
-        F.count(F.lit(1)).cast("long").alias("n_registers"),
-        F.coalesce(
-            F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {k_exp} - rho)")),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("_s_touched"),
-    ]
-
-
-def _hll_est_expr(b: int) -> "F.Column":
-    """The closed-form estimate over (n_registers, _s_touched): one float
-    division of a repr-exact literal by the exact integer register sum,
-    with the linear-counting branch selected on an exact comparison."""
-    m = 1 << b
-    k_exp = 61 - b
-    alpha = _hll_alpha(m)
-    n_empty = F.lit(m) - F.col("n_registers")
-    s_scaled = F.col("_s_touched") + n_empty.cast("long") * F.lit(1 << k_exp)
-    raw = F.lit(alpha * m * m * float(1 << k_exp)) / s_scaled.cast("double")
-    # linear counting when the raw estimate is small and empties remain
-    return F.when(
-        (raw <= F.lit(2.5 * m)) & (n_empty > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / n_empty.cast("double")),
-    ).otherwise(raw)
-
-
-def hll_cardinality_grouped(registers: DataFrame, b: int = 10) -> DataFrame:
-    """Per-group cardinality estimates from a grouped register table
-    (``(grp, reg, rho)`` — :func:`hll_register_table_grouped`): one row
-    ``(grp, n_registers, est)`` per group, via EXACTLY the global
-    estimator's closed form applied group-wise (same repr-exact literal
-    numerator, same exact integer register sum, same linear-counting
-    branch). A group absent from the table had no non-NULL values and is
-    absent here — the global builder's empty-input convention.
-
-    Scale shape: one aggregate over the bounded |groups| x 2^b register
-    domain; output is |groups| rows."""
-    if not 4 <= b <= 16:
-        raise ValueError(f"b must be in [4, 16], got {b}")
-    agg = registers.groupBy("grp").agg(*_hll_sum_aggs(b))
-    return agg.select("grp", "n_registers", _hll_est_expr(b).alias("est"))
-
-
 def merge_hll_tables(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Element-wise MAX of two register tables built with the SAME b:
-    the merged table is EXACTLY the table of the concatenated input —
-    and because max is idempotent, merging overlapping or duplicated
-    shards (redelivery, replay, re-union) changes nothing."""
-    return a.unionByName(b).groupBy("reg").agg(F.max("rho").alias("rho"))
-
-
-def merge_hll_tables_grouped(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Per-group element-wise MAX of two grouped register tables built
-    with the SAME b — exactly the concatenated-input table, and as
-    idempotent as the global merge (a group seen by only one side passes
-    through unchanged)."""
-    return (
-        a.unionByName(b).groupBy("grp", "reg").agg(F.max("rho").alias("rho"))
-    )
+    """Element-wise MAX of two register tables (global or keyed) built
+    with the SAME b: the merged table is EXACTLY the table of the
+    concatenated input, per group — and because max is idempotent,
+    merging overlapping or duplicated shards (redelivery, replay,
+    re-union) changes nothing."""
+    return a.unionByName(b).groupBy(*_keys(a), "reg").agg(F.max("rho").alias("rho"))
 
 
 # ---------------------------------------------------------------------------

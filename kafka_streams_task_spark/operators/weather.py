@@ -115,7 +115,7 @@ def weather_daily_avg(keyed: DataFrame) -> DataFrame:
     )
 
 
-def weather_by_geohash(daily: DataFrame, sort_list: bool = True) -> DataFrame:
+def weather_by_geohash(daily: DataFrame) -> DataFrame:
     """A4-A5: roll daily averages up into a per-geohash list.
 
     Reference regroups the KTable by the geohash prefix of the packed key and
@@ -125,13 +125,11 @@ def weather_by_geohash(daily: DataFrame, sort_list: bool = True) -> DataFrame:
     nondeterministic under repartitioning; sorting is the engine's
     well-defined replacement).
     """
-    lst = F.collect_list(F.struct(F.col("tmp_f"), F.col("tmp_c"), F.col("wthr_date").alias("date")))
-    if sort_list:
-        # sort by date: build (date-first) structs, sort, then reshape
-        lst = F.array_sort(
-            F.collect_list(F.struct(F.col("wthr_date").alias("date"), F.col("tmp_f"), F.col("tmp_c")))
-        )
-        lst = F.transform(lst, lambda s: F.struct(s["tmp_f"].alias("tmp_f"), s["tmp_c"].alias("tmp_c"), s["date"].alias("date")))
+    # sort by date: build (date-first) structs, sort, then reshape
+    lst = F.array_sort(
+        F.collect_list(F.struct(F.col("wthr_date").alias("date"), F.col("tmp_f"), F.col("tmp_c")))
+    )
+    lst = F.transform(lst, lambda s: F.struct(s["tmp_f"].alias("tmp_f"), s["tmp_c"].alias("tmp_c"), s["date"].alias("date")))
     return daily.groupBy("geohash").agg(lst.alias("weatherList"))
 
 
@@ -185,9 +183,16 @@ def weather_hotels_pipeline(
 
 def latest_per_key(df: DataFrame, keys: list[str] | str, order_col: str | Column) -> DataFrame:
     """A6: changelog-table view — latest record per key (KStream.toTable,
-    MyStream.java:166-168). Batch form: ``max_by(struct(*), order)`` per key,
-    one hash aggregation (no window sort, no second shuffle).
-    """
+    MyStream.java:166-168): ``max_by(struct(*), order)`` per key, one hash
+    aggregation (no window sort, no second shuffle), the same plan in batch
+    and on a stream (a JVM stateful aggregation; run it in ``update`` output
+    mode for a changelog stream).
+
+    On a stream, two things differ from the reference's per-record KTable:
+    each micro-batch emits every key the batch touched, even when a stale
+    record left its latest value unchanged; and on equal order values the
+    value already in state is kept (``max_by`` replaces only on a strictly
+    greater order)."""
     if isinstance(keys, str):
         keys = [keys]
     order = F.col(order_col) if isinstance(order_col, str) else order_col

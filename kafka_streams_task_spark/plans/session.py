@@ -90,18 +90,15 @@ def get_spark(
         # 32-core session (3x the query's wall). A small floor keeps
         # CPU-dense small shuffles at the session's parallelism; at
         # cluster scale real shuffle sizes are orders of magnitude above
-        # either floor, so the knob only binds where it should. Env
-        # override for cluster profiles that want the 1 MB default back.
+        # either floor, so the knob only binds where it should. Cluster
+        # profiles that want the 1 MB default back pass it in extra_conf.
         # r16 second pass: 64k still coalesced the embedding verify to 8
         # tasks (~512 KB of candidate pairs carrying seconds of numpy
         # cosine per task — maxTask 5.3 s); with parallelismFirst the
         # floor only binds on sub-~2 MB exchanges, so 16k trades a few
         # near-empty tasks on tiny shuffles for 4x parallelism on the
         # dense ones.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "16k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.sql.session.timeZone", "UTC")
@@ -109,12 +106,8 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         # local test files are 10-40MB singles; smaller split target keeps
         # all cores busy on a scan (cluster deployments with many files
-        # raise this back toward the 128m default). Env-overridable for
-        # cluster profiles and for the r17 sf1-scale knob validation.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        # raise this back toward the 128m default through extra_conf).
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
@@ -129,10 +122,7 @@ def get_spark(
         # for short-lived local drivers.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-XX:-UseDynamicNumberOfCompilerThreads -XX:CICompilerCount=16",
-            ),
+            "-XX:-UseDynamicNumberOfCompilerThreads -XX:CICompilerCount=16",
         )
     )
     for k, v in (extra_conf or {}).items():

@@ -1,5 +1,4 @@
 from .ann import knn_ivfpq_stream_index, streaming_ivfpq_ingest
-from .changelog import latest_per_key_stream
 from .dedup import (
     streaming_dedup_exact,
     streaming_dedup_image,
@@ -39,7 +38,6 @@ __all__ = [
     "streaming_ivfpq_ingest",
     "weather_rollup_stream",
     "weather_hotels_stream",
-    "latest_per_key_stream",
     "streaming_dedup_exact",
     "streaming_dedup_watermarked",
     "streaming_dedup_near",

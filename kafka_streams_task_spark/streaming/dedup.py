@@ -20,7 +20,7 @@ matter how large documents are.
 
 Reference parity: the reference engine keys streams and relies on
 Kafka-Streams KTable upsert semantics for "latest wins" (MyStream.java:
-166-173 — see streaming/changelog.py); an explicit first-wins dedup
+166-173 — see operators.weather.latest_per_key); an explicit first-wins dedup
 operator does not exist there. Beyond-reference training-data mandate.
 """
 

@@ -34,7 +34,6 @@ def streaming_dsir_filter(
     threshold: float,
     text_col: str = "text",
     n_features: int | None = None,
-    lowercase: bool = True,
     keep_scores: bool = True,
 ) -> DataFrame:
     """Keep stream rows whose importance log-weight clears ``threshold``
@@ -53,7 +52,7 @@ def streaming_dsir_filter(
             "weights must be a batch DataFrame (a fitted model), not a stream"
         )
     scored = dsir_score_dense(
-        stream, weights, text_col, n_features, lowercase
+        stream, weights, text_col, n_features
     ).filter(F.col("dsir_logw") >= F.lit(float(threshold)))
     if keep_scores:
         return scored

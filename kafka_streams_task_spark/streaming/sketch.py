@@ -201,8 +201,9 @@ def streaming_value_quantiles(
 
     ``group_col`` (r15): maintain PER-GROUP sketches instead — "p99 per
     endpoint maintained over the stream", the sketch's canonical
-    always-on shape — via the grouped builder/merge/collapse (each
-    group behaves exactly as its own global sketch; ``max_buckets``
+    always-on shape — via the keyed build (``dd_sketch_table(...,
+    group_col)``); merge and collapse read the key from the table, and
+    each group behaves exactly as its own global sketch (``max_buckets``
     bounds EACH group's buckets).
 
     ``max_groups`` (keyword-only, r16 — VERDICT r15 item 7): grouped
@@ -228,14 +229,7 @@ def streaming_value_quantiles(
     silently changes which ranks carry the guarantee, grouped vs global
     buckets are different sketches, and a different cap silently changes
     which domains are refused, so all of them raise instead."""
-    from ..operators.sketch import (
-        dd_collapse,
-        dd_collapse_grouped,
-        dd_sketch_table,
-        dd_sketch_table_grouped,
-        merge_dd_sketches,
-        merge_dd_sketches_grouped,
-    )
+    from ..operators.sketch import dd_collapse, dd_sketch_table, merge_dd_sketches
 
     if gamma <= 1.0:
         raise ValueError(f"gamma must be > 1, got {gamma}")
@@ -244,17 +238,10 @@ def streaming_value_quantiles(
     _check_group_cap_args(max_groups, group_col)
 
     def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        if group_col is None:
-            batch_dd = dd_sketch_table(batch_df, value_col, gamma)
-            combine, collapse = merge_dd_sketches, dd_collapse
-        else:
-            batch_dd = dd_sketch_table_grouped(
-                batch_df, group_col, value_col, gamma
-            )
-            combine, collapse = merge_dd_sketches_grouped, dd_collapse_grouped
-        merged = _fold(prev, batch_dd, combine)
+        batch_dd = dd_sketch_table(batch_df, value_col, gamma, group_col)
+        merged = _fold(prev, batch_dd, merge_dd_sketches)
         if max_buckets is not None:
-            merged = collapse(merged, max_buckets)
+            merged = dd_collapse(merged, max_buckets)
         _enforce_group_cap(merged, max_groups, state_dir, "DDSketch")
         return merged
 
@@ -312,22 +299,20 @@ def read_value_quantiles(
     """Quantile estimates against the latest committed cumulative
     sketch: ``(q, est)`` rows for global state, or ``(grp, q, est)`` per
     group when the state was built with a ``group_col`` (the shape is
-    the durable state's own, read from ``dd_meta``). ``gamma`` defaults
+    the durable state's own: its ``grp`` column). ``gamma`` defaults
     to the build value persisted with the state; passing a disagreeing
     value raises rather than reading garbage ranges. Raises if no
     sketch has committed yet, and raises — rather than trusting a
     caller-supplied gamma against durable state of unknown provenance —
     when committed sketches exist WITHOUT their meta (advice r14)."""
-    from ..operators.sketch import dd_quantiles, dd_quantiles_grouped
+    from ..operators.sketch import dd_quantiles
 
     dd, meta = read_latest_state(spark, state_dir, _DD)
     if gamma is None:
         gamma = meta["gamma"]
     else:
         check_meta(spark, state_dir, _DD, {**meta, "gamma": gamma})
-    if meta.get("group_col") is None:
-        return dd_quantiles(dd, qs, gamma=gamma)
-    return dd_quantiles_grouped(dd, qs, gamma=gamma)
+    return dd_quantiles(dd, qs, gamma=gamma)
 
 
 def streaming_distinct_values(
@@ -353,8 +338,8 @@ def streaming_distinct_values(
     registers indexed under a different b are a different sketch.
 
     ``group_col``: maintain PER-GROUP register tables instead — "distinct
-    users per key", the canonical always-on form — via the grouped
-    builder/merge (same per-cell arithmetic; state is the
+    users per key", the canonical always-on form — via the keyed
+    build and the same merge (same per-cell arithmetic; state is the
     |groups| x 2^b domain). The grouping column persists in ``hll_meta``
     alongside b and is validated identically: grouped and global
     registers are different sketches, so a caller disagreeing about
@@ -366,26 +351,15 @@ def streaming_distinct_values(
     with the bound-the-key-upstream remedy named in the error. Same
     rationale, persistence, and validation as the DDSketch twin's cap
     (see :func:`streaming_value_quantiles`); requires ``group_col``."""
-    from ..operators.sketch import (
-        hll_register_table,
-        hll_register_table_grouped,
-        merge_hll_tables,
-        merge_hll_tables_grouped,
-    )
+    from ..operators.sketch import hll_register_table, merge_hll_tables
 
     if not 4 <= b <= 16:
         raise ValueError(f"b must be in [4, 16], got {b}")
     _check_group_cap_args(max_groups, group_col)
 
     def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        if group_col is None:
-            batch_hll = hll_register_table(batch_df, value_col, b)
-            merged = _fold(prev, batch_hll, merge_hll_tables)
-        else:
-            batch_hll = hll_register_table_grouped(
-                batch_df, group_col, value_col, b
-            )
-            merged = _fold(prev, batch_hll, merge_hll_tables_grouped)
+        batch_hll = hll_register_table(batch_df, value_col, b, group_col)
+        merged = _fold(prev, batch_hll, merge_hll_tables)
         _enforce_group_cap(merged, max_groups, state_dir, "HLL")
         return merged
 
@@ -401,22 +375,20 @@ def read_distinct_count(
     """Cumulative distinct-count estimate from the latest committed
     register table: one ``(n_registers, est)`` row for global state, or
     ``(grp, n_registers, est)`` per group when the state was built with
-    a ``group_col`` (the shape is the durable state's own, read from
-    ``hll_meta``). ``b`` defaults to the persisted build value; a
+    a ``group_col`` (the shape is the durable state's own: its ``grp``
+    column). ``b`` defaults to the persisted build value; a
     disagreeing value raises. Raises if nothing has committed yet, and
     raises — rather than trusting a caller-supplied b against durable
     state of unknown provenance — when committed registers exist
     WITHOUT their meta (advice r14)."""
-    from ..operators.sketch import hll_cardinality, hll_cardinality_grouped
+    from ..operators.sketch import hll_cardinality
 
     regs, meta = read_latest_state(spark, state_dir, _HLL)
     if b is None:
         b = meta["b"]
     else:
         check_meta(spark, state_dir, _HLL, {**meta, "b": b})
-    if meta.get("group_col") is None:
-        return hll_cardinality(regs, b=b)
-    return hll_cardinality_grouped(regs, b=b)
+    return hll_cardinality(regs, b=b)
 
 
 def streaming_theta_sketch(

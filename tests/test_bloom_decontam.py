@@ -86,9 +86,8 @@ def test_bloom_alone_has_no_false_negatives(spark, sf_dir):
 
 
 def test_bloom_plan_default_is_codegen_broadcast_only(spark):
-    """Default (sparse) path: k broadcast probes, no Python stage, no
-    nested loop / cartesian; opt-in dense path: ONE array literal
-    probed by k pure expressions — zero joins before the hit filter."""
+    """k broadcast probes, no Python stage, no nested loop /
+    cartesian."""
     corpus = spark.createDataFrame([Row(doc_id=1, text=LEAK)])
     bench = spark.createDataFrame([(LEAK,)], ["text"])
     bloom = build_shingle_bloom(bench, shingle_n=8, n_items=8)
@@ -99,31 +98,6 @@ def test_bloom_plan_default_is_codegen_broadcast_only(spark):
     assert plan.count("BroadcastHashJoin") == bloom.num_hashes
     assert "Python" not in plan and "Arrow" not in plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
-    dense_plan = (
-        decontaminate_bloom(corpus, bloom, dense_max_bits=1 << 27)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Join" not in dense_plan
-    assert "Python" not in dense_plan and "Arrow" not in dense_plan
-
-
-def test_bloom_dense_and_join_paths_agree(spark):
-    """The opt-in dense-literal probe and the default sparse
-    k-broadcast-join path compute the same bit math — identical
-    flagged rows and counts."""
-    corpus = spark.createDataFrame(
-        [Row(doc_id=1, text=LEAK), Row(doc_id=2, text="c1 c2 c3 c4 c5 c6 c7 c8 c9")]
-    )
-    bench = spark.createDataFrame([(LEAK,)], ["text"])
-    bloom = build_shingle_bloom(bench, shingle_n=8, n_items=8)
-    dense = sorted(
-        map(
-            tuple,
-            decontaminate_bloom(corpus, bloom, dense_max_bits=1 << 27).collect(),
-        )
-    )
-    joins = sorted(map(tuple, decontaminate_bloom(corpus, bloom).collect()))
-    assert dense == joins
 
 
 def test_bloom_words_table_is_compact(spark):

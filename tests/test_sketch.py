@@ -973,15 +973,13 @@ def test_hll_grouped_matches_per_group_global_builds(spark):
     group is its own group, and the grouped merge is idempotent."""
     from kafka_streams_task_spark.operators.sketch import (
         hll_cardinality,
-        hll_cardinality_grouped,
         hll_register_table,
-        hll_register_table_grouped,
-        merge_hll_tables_grouped,
+        merge_hll_tables,
     )
 
     rows = [(f"u{i % 37}", ["a", "b", None][i % 3]) for i in range(200)]
     df = spark.createDataFrame(rows, "user string, grp_in string")
-    grouped = hll_register_table_grouped(df, "grp_in", "user", b=10)
+    grouped = hll_register_table(df, "user", b=10, group_col="grp_in")
     got = {
         (r["grp"], r["reg"], r["rho"]) for r in grouped.collect()
     }
@@ -996,7 +994,7 @@ def test_hll_grouped_matches_per_group_global_builds(spark):
 
     est = {
         r["grp"]: (r["n_registers"], r["est"])
-        for r in hll_cardinality_grouped(grouped, b=10).collect()
+        for r in hll_cardinality(grouped, b=10).collect()
     }
     for g in ("a", "b", None):
         sub = df.filter(
@@ -1010,16 +1008,16 @@ def test_hll_grouped_matches_per_group_global_builds(spark):
     # idempotent per-group merge: self-merge is a no-op
     merged = {
         (r["grp"], r["reg"], r["rho"])
-        for r in merge_hll_tables_grouped(grouped, grouped).collect()
+        for r in merge_hll_tables(grouped, grouped).collect()
     }
     assert merged == got
 
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="b must be"):
-        hll_register_table_grouped(df, "grp_in", "user", b=3)
+        hll_register_table(df, "user", b=3, group_col="grp_in")
     with _pytest.raises(ValueError, match="b must be"):
-        hll_cardinality_grouped(grouped, b=20)
+        hll_cardinality(grouped, b=20)
 
 
 def test_streaming_hll_grouped_equals_batch_and_guards(spark, tmpdir):
@@ -1035,7 +1033,7 @@ def test_streaming_hll_grouped_equals_batch_and_guards(spark, tmpdir):
     from pyspark.sql import types as T
 
     from kafka_streams_task_spark.operators.sketch import (
-        hll_register_table_grouped,
+        hll_register_table,
     )
     from kafka_streams_task_spark.streaming.sketch import (
         read_distinct_count,
@@ -1081,7 +1079,7 @@ def test_streaming_hll_grouped_equals_batch_and_guards(spark, tmpdir):
     )
     batch = {
         (r["grp"], r["reg"], r["rho"])
-        for r in hll_register_table_grouped(both, "seg", "value", b=10).collect()
+        for r in hll_register_table(both, "value", b=10, group_col="seg").collect()
     }
     latest = {
         (r["grp"], r["reg"], r["rho"])
@@ -1215,10 +1213,8 @@ def test_dd_grouped_matches_per_group_global_builds(spark):
     from kafka_streams_task_spark.operators.sketch import (
         dd_alpha,
         dd_quantiles,
-        dd_quantiles_grouped,
         dd_sketch_table,
-        dd_sketch_table_grouped,
-        merge_dd_sketches_grouped,
+        merge_dd_sketches,
     )
 
     rows = [
@@ -1229,7 +1225,7 @@ def test_dd_grouped_matches_per_group_global_builds(spark):
     rows = [(v if g != "zero" else -v, g) for v, g in rows]
     df = spark.createDataFrame(rows, "value double, grp_in string")
 
-    grouped = dd_sketch_table_grouped(df, "grp_in", "value", gamma=1.05)
+    grouped = dd_sketch_table(df, "value", gamma=1.05, group_col="grp_in")
     got = {(r["grp"], r["bucket"], r["c"]) for r in grouped.collect()}
     want = set()
     for g in ("a", "b", None):
@@ -1244,7 +1240,7 @@ def test_dd_grouped_matches_per_group_global_builds(spark):
     qs = [0.0, 0.5, 0.9, 1.0]
     g_est = {
         (r["grp"], r["q"]): r["est"]
-        for r in dd_quantiles_grouped(grouped, qs, gamma=1.05).collect()
+        for r in dd_quantiles(grouped, qs, gamma=1.05).collect()
     }
     alpha = dd_alpha(1.05)
     for g in ("a", "b", None):
@@ -1268,29 +1264,27 @@ def test_dd_grouped_matches_per_group_global_builds(spark):
 
     merged = {
         (r["grp"], r["bucket"], r["c"])
-        for r in merge_dd_sketches_grouped(grouped, grouped).collect()
+        for r in merge_dd_sketches(grouped, grouped).collect()
     }
     assert merged == {(g, b, 2 * c) for g, b, c in got}
 
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="gamma"):
-        dd_sketch_table_grouped(df, "grp_in", "value", gamma=1.0)
+        dd_sketch_table(df, "value", gamma=1.0, group_col="grp_in")
     with _pytest.raises(ValueError, match="qs"):
-        dd_quantiles_grouped(grouped, [], gamma=1.05)
+        dd_quantiles(grouped, [], gamma=1.05)
     with _pytest.raises(ValueError, match="qs"):
-        dd_quantiles_grouped(grouped, [1.5], gamma=1.05)
+        dd_quantiles(grouped, [1.5], gamma=1.05)
 
 
-def test_dd_collapse_grouped_matches_per_group_global(spark):
+def test_dd_collapse_keyed_matches_per_group_global(spark):
     """Grouped collapse == the per-group stack of global collapses: each
     group keeps its own top max_buckets indices and folds independently;
     counts are preserved exactly per group."""
     from kafka_streams_task_spark.operators.sketch import (
         dd_collapse,
-        dd_collapse_grouped,
         dd_sketch_table,
-        dd_sketch_table_grouped,
     )
 
     rows = [
@@ -1298,10 +1292,10 @@ def test_dd_collapse_grouped_matches_per_group_global(spark):
         for i in range(120)
     ]
     df = spark.createDataFrame(rows, "value double, grp_in string")
-    grouped = dd_sketch_table_grouped(df, "grp_in", "value", gamma=1.02)
+    grouped = dd_sketch_table(df, "value", gamma=1.02, group_col="grp_in")
     got = {
         (r["grp"], r["bucket"], r["c"])
-        for r in dd_collapse_grouped(grouped, 5).collect()
+        for r in dd_collapse(grouped, 5).collect()
     }
     want = set()
     for g in ("p", "q", None):
@@ -1322,13 +1316,13 @@ def test_dd_collapse_grouped_matches_per_group_global(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="max_buckets"):
-        dd_collapse_grouped(grouped, 0)
+        dd_collapse(grouped, 0)
 
 
 def test_streaming_dd_grouped_equals_batch_and_guards(spark, tmpdir):
     """Grouped streaming quantile twin (r15): per-group cumulative
     sketches with a per-group collapse budget — the committed state is
-    bit-identical to dd_collapse_grouped(batch grouped build over
+    bit-identical to dd_collapse(batch grouped build over
     everything), reads return the per-group shape automatically, and
     group_col rides dd_meta: global-vs-grouped callers are refused."""
     import json as _json
@@ -1337,9 +1331,9 @@ def test_streaming_dd_grouped_equals_batch_and_guards(spark, tmpdir):
     from pyspark.sql import types as T
 
     from kafka_streams_task_spark.operators.sketch import (
-        dd_collapse_grouped,
-        dd_quantiles_grouped,
-        dd_sketch_table_grouped,
+        dd_collapse,
+        dd_quantiles,
+        dd_sketch_table,
     )
     from kafka_streams_task_spark.streaming.sketch import (
         read_value_quantiles,
@@ -1379,10 +1373,10 @@ def test_streaming_dd_grouped_equals_batch_and_guards(spark, tmpdir):
     both = spark.createDataFrame(
         [(a, v, g) for a, v, g in vals], "id long, value double, ep string"
     )
-    gsk = dd_sketch_table_grouped(both, "ep", "value", gamma=1.02)
+    gsk = dd_sketch_table(both, "value", gamma=1.02, group_col="ep")
     want = {
         (r["grp"], r["bucket"], r["c"])
-        for r in dd_collapse_grouped(gsk, 10).collect()
+        for r in dd_collapse(gsk, 10).collect()
     }
     got = {
         (r["grp"], r["bucket"], r["c"])
@@ -1398,8 +1392,8 @@ def test_streaming_dd_grouped_equals_batch_and_guards(spark, tmpdir):
     }
     want_est = {
         (r["grp"], r["q"]): r["est"]
-        for r in dd_quantiles_grouped(
-            dd_collapse_grouped(gsk, 10), [0.5, 0.99], gamma=1.02
+        for r in dd_quantiles(
+            dd_collapse(gsk, 10), [0.5, 0.99], gamma=1.02
         ).collect()
     }
     assert est == want_est

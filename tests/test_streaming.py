@@ -120,13 +120,13 @@ def test_weather_hotels_stream_end_to_end(spark, tmpdir):
     ]
 
 
-def test_latest_per_key_stream(spark, tmpdir):
+def test_latest_per_key_on_stream(spark, tmpdir):
     """A6 streaming changelog: last write wins across micro-batches."""
     import os
 
     from pyspark.sql import types as T
 
-    from kafka_streams_task_spark.streaming import latest_per_key_stream
+    from kafka_streams_task_spark.operators.weather import latest_per_key
 
     schema = T.StructType(
         [
@@ -152,7 +152,10 @@ def test_latest_per_key_stream(spark, tmpdir):
 
     stream = read_json_stream(spark, src, schema, max_files_per_trigger=1)
     name = f"latest_{uuid.uuid4().hex[:8]}"
-    _run_to_memory(latest_per_key_stream(stream, "k", "offset"), name, tmpdir)
+    q = _run_to_memory(latest_per_key(stream, "k", "offset"), name, tmpdir)
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    # no Python node (applyInPandasWithState plans FlatMapGroupsInPandasWithState)
+    assert not any(n in plan for n in ("Python", "Pandas", "Arrow")), plan
 
     rows = spark.sql(f"SELECT * FROM {name}").collect()
     last = {}

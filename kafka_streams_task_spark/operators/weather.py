@@ -133,6 +133,54 @@ def weather_by_geohash(daily: DataFrame) -> DataFrame:
     return daily.groupBy("geohash").agg(lst.alias("weatherList"))
 
 
+def per_date_avgs(rows: Column) -> Column:
+    """A1-A5 as one expression: the date-sorted list of per-date
+    (tmp_f, tmp_c) means over a collected array of (wthr_date, tmp_f,
+    tmp_c) structs.
+
+    This is ``weather_by_geohash(weather_daily_avg(...))`` evaluated
+    inside a single groupBy's post-aggregation projection, so a stream
+    needs only one stateful aggregation (``collect_list`` of the rows).
+    Each mean follows ``F.avg``: nulls are skipped per field, and a field
+    with no non-null value on a date is null. Dates compare null-safely
+    and the list is sorted as ``weather_by_geohash`` sorts it.
+    """
+    zero = F.struct(
+        F.lit(0.0).alias("sf"), F.lit(0).cast("long").alias("nf"),
+        F.lit(0.0).alias("sc"), F.lit(0).cast("long").alias("nc"),
+    )
+
+    def add(acc: Column, r: Column) -> Column:
+        return F.struct(
+            (acc["sf"] + F.coalesce(r["tmp_f"], F.lit(0.0))).alias("sf"),
+            (acc["nf"] + r["tmp_f"].isNotNull().cast("long")).alias("nf"),
+            (acc["sc"] + F.coalesce(r["tmp_c"], F.lit(0.0))).alias("sc"),
+            (acc["nc"] + r["tmp_c"].isNotNull().cast("long")).alias("nc"),
+        )
+
+    def day(d: Column) -> Column:
+        # date first, so array_sort orders the days exactly as
+        # weather_by_geohash orders its (date, tmp_f, tmp_c) structs
+        return F.aggregate(
+            F.filter(rows, lambda r: r["wthr_date"].eqNullSafe(d)),
+            zero,
+            add,
+            lambda a: F.struct(
+                d.alias("date"),
+                F.when(a["nf"] > 0, a["sf"] / a["nf"]).alias("tmp_f"),
+                F.when(a["nc"] > 0, a["sc"] / a["nc"]).alias("tmp_c"),
+            ),
+        )
+
+    days = F.array_sort(
+        F.transform(F.array_distinct(F.transform(rows, lambda r: r["wthr_date"])), day)
+    )
+    return F.transform(
+        days,
+        lambda s: F.struct(s["tmp_f"].alias("tmp_f"), s["tmp_c"].alias("tmp_c"), s["date"].alias("date")),
+    )
+
+
 def enrich_hotels(hotels_keyed: DataFrame, by_geohash: DataFrame, how: str = "inner") -> DataFrame:
     """J1 (inner) / J2 (left): join per-geohash weather onto hotels.
 

@@ -64,6 +64,23 @@ def pin_driver_blas_threads(n: int = 1) -> None:
         pass
 
 
+_WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
+# the directory that holds the package, so Python workers import it from
+# any working directory
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
+
+def _worker_pythonpath(caller: str | None) -> str:
+    """The workers' PYTHONPATH: the caller's entries, then the package's
+    parent directory unless the caller already lists it."""
+    parts = [p for p in (caller or "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in parts:
+        parts.append(_PACKAGE_PARENT)
+    return os.pathsep.join(parts)
+
+
 def get_spark(
     app_name: str = "kafka_streams_task_spark",
     master: str | None = None,
@@ -125,7 +142,9 @@ def get_spark(
             "-XX:-UseDynamicNumberOfCompilerThreads -XX:CICompilerCount=16",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    extra_conf[_WORKER_PATH_KEY] = _worker_pythonpath(extra_conf.get(_WORKER_PATH_KEY))
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     pin_driver_blas_threads(
         int(os.environ.get("SPARK_GRAFT_DRIVER_BLAS_THREADS", "1"))

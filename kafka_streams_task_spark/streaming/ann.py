@@ -114,6 +114,7 @@ def streaming_ivfpq_ingest(
         bind_state_to_checkpoint,
         committed_index_state,
         compact_index_shards,
+        drain_batch,
     )
 
     spark = stream.sparkSession
@@ -128,7 +129,8 @@ def streaming_ivfpq_ingest(
             bspark, shard_root, _SHARD_PFX
         )
         if batch_id <= hi or batch_id in versions:
-            return  # redelivery: this batch's shard is already durable
+            drain_batch(batch_df)  # redelivery: this batch's shard is durable
+            return
         _, c_indexed = _ivfpq_index(
             batch_df, id_col, vec_col, centroids, books, dropped_acc
         )

@@ -20,7 +20,7 @@ Its exactly-once protocol is the versioned-state driver in
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geohash import geohash_expr
@@ -29,6 +29,7 @@ from ..operators.weather import (
     enrich_hotels,
     hotels_rekey,
     latest_per_key,
+    per_date_avgs,
     weather_by_geohash,
     weather_daily_avg,
     weather_rekey,
@@ -86,38 +87,6 @@ def run_decoupled_pipeline(
     return stage3_enrich(spark, hotels_raw, seam_dir, how)
 
 
-def _per_date_avgs(rows: Column) -> Column:
-    """Per-date (tmp_f, tmp_c) means over a collected array of
-    (wthr_date, tmp_f, tmp_c) structs, sorted by date — pure expressions,
-    no second stateful aggregation.
-
-    This reproduces ``weather_daily_avg`` + ``weather_by_geohash`` inside a
-    single groupBy's post-aggregation projection, which is what lets the
-    continuous topology stay within Spark's supported multiple-stateful-
-    operator chains (one windowed agg per side + one window-equality join).
-    """
-    dates = F.array_sort(F.array_distinct(F.transform(rows, lambda r: r["wthr_date"])))
-
-    def day_struct(d: Column) -> Column:
-        # let-bind the filtered sub-array once (Catalyst has no CSE here)
-        return F.transform(
-            F.array(F.filter(rows, lambda r: r["wthr_date"] == d)),
-            lambda sub: F.struct(
-                (
-                    F.aggregate(sub, F.lit(0.0), lambda acc, r: acc + r["tmp_f"])
-                    / F.size(sub)
-                ).alias("tmp_f"),
-                (
-                    F.aggregate(sub, F.lit(0.0), lambda acc, r: acc + r["tmp_c"])
-                    / F.size(sub)
-                ).alias("tmp_c"),
-                d.alias("date"),
-            ),
-        )[0]
-
-    return F.transform(dates, day_struct)
-
-
 def enrich_continuous_left(
     weather_stream: DataFrame,
     hotels_stream: DataFrame,
@@ -160,7 +129,7 @@ def enrich_continuous_left(
     weather_win = (
         keyed.groupBy(F.window("ts", window_duration).alias("w_win"), "geohash")
         .agg(F.collect_list(F.struct("wthr_date", "tmp_f", "tmp_c")).alias("_rows"))
-        .select("w_win", "geohash", _per_date_avgs(F.col("_rows")).alias("weatherList"))
+        .select("w_win", "geohash", per_date_avgs(F.col("_rows")).alias("weatherList"))
     )
 
     payload = ["country", "city", "address", "name", "id"]
@@ -213,8 +182,9 @@ def rollup_via_foreach_batch(
     different precision must not merge into one state, so a mismatch
     raises.
 
-    Heavier I/O than the applyInPandasWithState path but uses only batch
-    operators and survives any Spark version's streaming limitations.
+    Heavier I/O than ``weather_rollup_stream``'s streaming aggregation,
+    but its state is bounded by cells x dates (one (sum, count) row per
+    cell-day), where the streaming aggregation keeps every observation.
 
     Returns the StreamingQuery; the current rollup lives at
     ``{state_dir}/rollup`` (geohash, weatherList).

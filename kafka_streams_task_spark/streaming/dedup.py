@@ -107,6 +107,7 @@ def _index_dedup_stream(
         bind_state_to_checkpoint,
         committed_index_state,
         compact_index_shards,
+        drain_batch,
     )
 
     bind_state_to_checkpoint(stream.sparkSession, index_dir, checkpoint_dir)
@@ -117,7 +118,9 @@ def _index_dedup_stream(
             spark, index_dir, prefix
         )
         if batch_id <= hi or batch_id in versions:
-            return  # redelivery: kept output + shard for this batch are durable
+            # redelivery: kept output + shard for this batch are durable
+            drain_batch(batch_df)
+            return
 
         batch = batch_df.select(*keep_cols).localCheckpoint(eager=True)
         new_state = state_fn(batch).localCheckpoint(eager=True)

@@ -49,7 +49,7 @@ from ..operators.snapshots import (
     snapshot_versions,
     snapshot_write,
 )
-from .state import bind_state_to_checkpoint
+from .state import bind_state_to_checkpoint, drain_batch
 
 __all__ = [
     "snapshot_drift_history",
@@ -200,6 +200,8 @@ def streaming_snapshot_drift(
             new_v = snapshot_write(
                 spark, batch_df, table_path, mode="append", tag=tag
             )
+        else:
+            drain_batch(batch_df)  # redelivery: the snapshot is committed
         prev = _predecessor(spark, table_path, new_v)
         if prev is not None:
             _tagged_report(spark, table_path, prev, new_v, text_col).write.mode(

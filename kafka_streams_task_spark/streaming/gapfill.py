@@ -5,8 +5,7 @@ A live metrics/sensor stream wants the dense, filled grid CONTINUOUSLY:
 every micro-batch extends each series' grid from where the last batch
 stopped, carrying the last observation across batch boundaries. That
 cross-batch carry is per-key state, so this is one
-``applyInPandasWithState`` keyed by the series columns — the same
-operator shape as the weather rollup topology (streaming/topology.py).
+``applyInPandasWithState`` keyed by the series columns.
 
 Semantics (mirrors the batch operator, restated for streams):
 - observations bucket to ``unit`` grain; multiple observations in one

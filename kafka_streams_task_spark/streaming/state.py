@@ -21,7 +21,7 @@ serves a derived table, a publish step. The rules:
   (:func:`read_latest_state`).
 - **Redelivery.** A batch is a redelivery when ``batch_id`` is at most the
   newest committed version. Its effect is already durable, so the merge
-  is skipped.
+  is skipped, but the batch still runs (:func:`drain_batch`).
 - **Checkpoint binding.** Redelivery keys on the checkpoint's batch-id
   sequence, which restarts at 0 under a fresh checkpoint. The state dir
   is bound to one checkpoint for life (:func:`bind_state_to_checkpoint`),
@@ -203,6 +203,15 @@ def read_latest_state(
     return spark.read.parquet(f"{state_dir}/{layout.pfx}{versions[-1]}"), meta
 
 
+def drain_batch(batch_df: DataFrame) -> None:
+    """Execute a micro-batch into the ``noop`` sink. A foreachBatch skip
+    path calls it for a redelivered batch: when the batch's plan holds a
+    stateful operator (say ``dropDuplicates`` upstream), Spark refuses to
+    commit a micro-batch whose plan never ran
+    (STATE_STORE_COMMIT_VALIDATION_FAILED)."""
+    batch_df.write.format("noop").mode("overwrite").save()
+
+
 def run_versioned_state(
     stream: DataFrame,
     state_dir: str,
@@ -237,6 +246,7 @@ def run_versioned_state(
             else None
         )
         if versions and batch_id <= versions[-1]:
+            drain_batch(batch_df)
             if publish is not None:
                 publish(prev)
             return

@@ -53,6 +53,44 @@ def test_weather_pipeline_has_no_python_nodes(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def _node_names(plan) -> list[str]:
+    names = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _node_names(children.apply(i))
+    return names
+
+
+def test_weather_hotels_stream_has_no_python_nodes(spark, tmp_path):
+    """The streaming rollup is one JVM aggregation: a started query's
+    executed plan holds no Python, pandas or Arrow operator."""
+    from kafka_streams_task_spark.schemas import HOTELS_RAW, WEATHER_RAW
+    from kafka_streams_task_spark.sources.files import read_json_stream
+    from kafka_streams_task_spark.streaming import weather_hotels_stream
+
+    src = tmp_path / "weather"
+    src.mkdir()
+    (src / "b0.json").write_text(
+        '{"lat":51.51,"lng":-0.07,"wthr_date":"d","avg_tmpr_f":1.0,"avg_tmpr_c":1.0}\n'
+    )
+    hotels = spark.createDataFrame(
+        [("1", "n", "c", "c", "a", "1", "2", "gcpv")], schema=HOTELS_RAW
+    )
+    stream = read_json_stream(spark, str(src), WEATHER_RAW)
+    q = (
+        weather_hotels_stream(stream, hotels)
+        .writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    names = _node_names(q._jsq.streamingQuery().lastExecution().executedPlan())
+    assert "StateStoreSave" in " ".join(names), names
+    assert not [n for n in names if any(w in n for w in ("Python", "Pandas", "Arrow"))], names
+
+
 def test_q1_pushes_filter_and_prunes_columns(spark, sf_dir):
     from kafka_streams_task_spark.catalog.relational import q1_pricing_summary
 

@@ -411,71 +411,45 @@ def test_weather_rollup_checkpoint_restart(spark, tmpdir):
     assert got == expect
 
 
-def test_rollup_state_ttl_drops_idle_cell(spark, tmpdir):
-    """Drive the ProcessingTimeTimeout branch (_make_rollup_fn: hasTimedOut
-    -> state.remove()): a cell idle past state_ttl_ms is dropped during a
-    later batch, and a subsequent record for it rebuilds state from scratch
-    (its emission shows only the new data, NOT an average with pre-TTL
-    rows). The test polls the memory sink rather than calling
-    processAllAvailable(): with a processing-time timeout the engine keeps
-    scheduling timer-only batches to evict expired state, so
-    processAllAvailable's no-new-data condition never settles."""
+def test_rollup_null_temperature_matches_batch(spark, tmpdir):
+    """A missing or unparseable temperature is skipped by the mean, as the
+    batch path's ``avg`` skips it: one cell-day gets 70.0, then no
+    ``avg_tmpr_f``, then ``"oops"`` (null under the typed schema), one
+    record per micro-batch. The stream's last weatherList must equal the
+    batch rollup of the same records (tmp_f 70.0, not null)."""
     import os
-    import time
 
+    from kafka_streams_task_spark.operators.weather import (
+        weather_by_geohash,
+        weather_daily_avg,
+        weather_rekey,
+    )
     from kafka_streams_task_spark.streaming import weather_rollup_stream
 
-    src = f"{tmpdir}/weather_ttl_in"
+    src = f"{tmpdir}/weather_null_in"
     os.makedirs(src)
+    base = {"lat": 51.51, "lng": -0.07, "wthr_date": "2020-01-01"}
+    recs = [
+        {**base, "avg_tmpr_f": 70.0, "avg_tmpr_c": 30.0},
+        {**base, "avg_tmpr_c": 32.0},
+        {**base, "avg_tmpr_f": "oops", "avg_tmpr_c": 34.0},
+    ]
+    for i, rec in enumerate(recs):
+        path = f"{src}/b{i}.json"
+        with open(path, "w") as f:
+            f.write(json.dumps(rec) + "\n")
+        os.utime(path, (1_000_000_000 + 30 * i,) * 2)
 
-    def write_batch(i, recs):
-        with open(f"{src}/b{i}.json", "w") as f:
-            for rec in recs:
-                f.write(json.dumps(rec) + "\n")
+    stream = read_json_stream(spark, src, WEATHER_RAW, max_files_per_trigger=1)
+    name = f"rollup_null_{uuid.uuid4().hex[:8]}"
+    _run_to_memory(weather_rollup_stream(stream), name, tmpdir)
+    rows = spark.sql(f"SELECT * FROM {name}").collect()
+    got = [(w.tmp_f, w.tmp_c, w.date) for w in rows[-1].weatherList]
 
-    write_batch(0, [{"lat": 51.51, "lng": -0.07, "wthr_date": "2020-01-01",
-                     "avg_tmpr_f": 70.0, "avg_tmpr_c": 30.0}])
-    stream = read_json_stream(spark, src, WEATHER_RAW)
-    name = f"ttl_{uuid.uuid4().hex[:8]}"
-    q = (
-        weather_rollup_stream(stream, state_ttl_ms=1000)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_{name}")
-        .start()
-    )
-
-    def wait_for(pred, what, timeout_s=90):
-        for _ in range(timeout_s * 2):
-            assert q.exception() is None, q.exception()
-            rows = spark.sql(f"SELECT * FROM {name}").collect()
-            if pred(rows):
-                return rows
-            time.sleep(0.5)
-        raise AssertionError(f"timed out waiting for {what}: {rows}")
-
-    try:
-        wait_for(lambda rs: any(r.geohash == GH for r in rs), "batch 0")
-        time.sleep(3)  # let cell A's 1s processing-time timer expire
-        # batch 1: a different cell; processing it fires A's timeout branch
-        write_batch(1, [{"lat": 10.0, "lng": 10.0, "wthr_date": "2020-01-01",
-                         "avg_tmpr_f": 99.0, "avg_tmpr_c": 37.0}])
-        wait_for(lambda rs: any(r.geohash != GH for r in rs), "batch 1")
-        time.sleep(1)
-        # batch 2: cell A returns — state must have been rebuilt empty
-        write_batch(2, [{"lat": 51.51, "lng": -0.07, "wthr_date": "2020-01-01",
-                         "avg_tmpr_f": 90.0, "avg_tmpr_c": 40.0}])
-        rows = wait_for(
-            lambda rs: sum(1 for r in rs if r.geohash == GH) >= 2, "batch 2"
-        )
-    finally:
-        q.stop()
-
-    a_emissions = [r.weatherList for r in rows if r.geohash == GH]
-    assert [(w.tmp_f, w.date) for w in a_emissions[0]] == [(70.0, "2020-01-01")]
-    # fresh state: 90.0 alone, not avg(70, 90) = 80.0
-    assert [(w.tmp_f, w.date) for w in a_emissions[-1]] == [(90.0, "2020-01-01")]
+    batch = spark.read.schema(WEATHER_RAW).json(src)
+    (expect,) = weather_by_geohash(weather_daily_avg(weather_rekey(batch))).collect()
+    assert got == [(w.tmp_f, w.tmp_c, w.date) for w in expect.weatherList]
+    assert got[0][0] == 70.0
 
 
 def test_repetition_filter_on_stream(spark, tmpdir):

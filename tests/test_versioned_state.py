@@ -160,3 +160,43 @@ def test_rollup_refuses_a_different_precision(spark, tmpdir):
     with pytest.raises(ValueError, match="built with precision"):
         rollup_via_foreach_batch(stream(), state, ck, precision=5)
     assert read(spark, state) == before
+
+
+def test_redelivery_drains_a_stateful_upstream(spark, tmpdir):
+    """A redelivered batch over a stateful upstream (``dropDuplicates``)
+    must still be executed: Spark refuses to commit the upstream's state
+    store for a micro-batch that foreachBatch left unconsumed
+    (STATE_STORE_COMMIT_VALIDATION_FAILED). The skip path drains the
+    batch, so the restarted query commits and the rollup is unchanged."""
+    from kafka_streams_task_spark.streaming.decoupled import (
+        rollup_via_foreach_batch,
+    )
+
+    _, batches, _, read = _rollup()
+    batches[1].append(batches[1][0])  # a duplicate for dropDuplicates to drop
+    src, state, ck = f"{tmpdir}/in", f"{tmpdir}/state", f"{tmpdir}/ckpt"
+    _write_batches(src, batches)
+
+    def run():
+        stream = (
+            spark.readStream.schema(WEATHER_RAW)
+            .option("maxFilesPerTrigger", 1)
+            .json(src)
+            .dropDuplicates()
+        )
+        q = rollup_via_foreach_batch(stream, state, ck)
+        q.awaitTermination(120)
+        return q
+
+    run()
+    before = read(spark, state)
+    for name in ("1", ".1.crc"):
+        if os.path.exists(f"{ck}/commits/{name}"):
+            os.remove(f"{ck}/commits/{name}")
+
+    q = run()
+    assert q.exception() is None
+    assert [p["batchId"] for p in q.recentProgress] == [1]
+    assert os.path.exists(f"{ck}/commits/1")
+    assert read(spark, state) == before
+    assert before[0][1] == [(71.0, 31.0, "2020-01-01"), (72.0, 32.0, "2020-01-02")]

@@ -801,36 +801,6 @@ def lang_id_script(text: Column | str) -> Column:
     )
 
 
-def simhash64(text: Column | str, n: int = 3) -> Column:
-    """64-bit SimHash over word n-gram shingles as a scalar column
-    expression: xxhash64 per shingle, per-bit majority vote.
-
-    The 64 per-bit votes each walk the shingle array, so this form costs
-    64 array passes per row — fine for small/medium rows and for using
-    simhash inside arbitrary expressions. The HOT PATH for whole-table
-    dedup is ``operators.dedup.simhash_table`` (explode + one groupBy with
-    64 fused aggregates — one pass over the data, partial aggregation
-    map-side).
-    """
-    hashed = F.transform(shingles(text, n), lambda s: F.xxhash64(s))
-    k = F.size(hashed).cast("double")
-
-    def bit_adder(b: int):
-        # closure (not a default arg): F.aggregate requires a 2-ary merge fn
-        return lambda acc, h: acc + F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)).cast("double")
-
-    bits = []
-    for b in range(64):
-        ones = F.aggregate(hashed, F.lit(0).cast("double"), bit_adder(b))
-        bits.append(
-            F.shiftleft(F.when(ones * 2 >= k, F.lit(1)).otherwise(F.lit(0)).cast("long"), b)
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def rolling_fingerprint(text: Column | str, window: int = 8) -> Column:
     """Document fingerprint: min of rolling xxhash64 over token windows
     (winnowing-style). Deterministic; used for cheap near-dup candidate

@@ -413,16 +413,12 @@ def shingle_posting_table(
     id_col: str = "doc_id",
     shingle_n: int = 3,
 ) -> DataFrame:
-    """The persistable containment/Jaccard index: ``(id, n_sh, shingle)``
+    """The containment/Jaccard posting table: ``(id, n_sh, shingle)``
     rows, one per (document, distinct shingle hash) — the exploded form
-    every inverted-index pairing operator groups on, exposed (r12) so a
-    pipeline can WRITE it once per corpus and probe future shards
-    incrementally (:func:`containment_incremental_pairs`, the streaming
-    containment tier) instead of re-shingling 100 TB per crawl.
+    every inverted-index pairing operator groups on.
 
     Shingles are xxhash64 longs: ~24 bytes/row x distinct-shingles rows
-    per doc, text never rides the index. ``shingle_n`` must match
-    between the index write and every later incremental call."""
+    per doc, text never rides the index."""
     # opt-r16: fan the projected scan out — the tokenize/hash/explode
     # chain fuses into the scan stage, and a single-split source would
     # run it in one task regardless of session cores (guide §2.5;
@@ -627,97 +623,6 @@ def keep_best_per_cluster(
     )
 
 
-def containment_incremental_pairs(
-    new_sh: DataFrame,
-    index: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.95,
-    max_shingle_freq: int = 10000,
-) -> DataFrame:
-    """Incremental DROP-DECISION pairs for containment dedup: a NEW
-    shard's :func:`shingle_posting_table` against a committed posting
-    index (r12, VERDICT r11 item 6 — the streaming twin of
-    :func:`drop_contained_documents`). Emits ``(id_a, id_b, a_is_new,
-    b_is_new)`` in the victim-oriented contract the index-backed
-    streaming choreography consumes:
-
-    - MIXED pairs (one new, one indexed) appear ONLY when the NEW doc
-      loses the batch rank rule — contained >= ``threshold`` in an
-      indexed doc with more distinct shingles (ties to smaller id).
-      The reverse case (an indexed doc contained in a new superset) is
-      deliberately NOT emitted: landed documents are never retracted at
-      ingest — the documented conservative asymmetry, caught by the
-      at-rest batch pass.
-    - NEW-NEW pairs are normalized so ``id_b`` IS the victim (``id_a``
-      the survivor) under exactly the batch drop rule, so within one
-      batch streaming == :func:`drop_contained_documents` row-for-row
-      (the rank rule makes a_loses/b_loses mutually exclusive).
-
-    Scale shape: index postings prune FIRST with a semi-join against
-    the shard's shingle set — a 100 TB index contributes only postings
-    a new doc actually touches; the pair shuffle carries 8-byte hashes;
-    combined posting lists over ``max_shingle_freq`` drop whole (the
-    boilerplate guard — the same cap applied to the SURVIVOR index plus
-    batch membership, not to the full raw corpus: a shingle whose raw
-    frequency exceeded the cap in a from-scratch batch pass can fall
-    back under it here once earlier victims left the index, so pair
-    emission may diverge across batches even though within-batch
-    equivalence to :func:`drop_contained_documents` holds exactly;
-    ADVICE r12). ``new_sh`` should be materialized — it feeds the probe
-    and the union."""
-    hit = new_sh.select("shingle").distinct()
-    relevant = index.join(hit, on="shingle", how="left_semi")
-    members = relevant.select(
-        id_col, "n_sh", "shingle", F.lit(False).alias("is_new")
-    ).unionByName(
-        new_sh.select(id_col, "n_sh", "shingle", F.lit(True).alias("is_new"))
-    )
-    postings = (
-        members.groupBy("shingle")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), "n_sh", "is_new"))
-            ).alias("ms")
-        )
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= max_shingle_freq))
-    )
-    common = (
-        postings.select(F.posexplode("ms").alias("i", "a"), "ms")
-        .select("a", F.explode(F.expr("slice(ms, i + 2, size(ms))")).alias("b"))
-        .filter(F.col("a.is_new") | F.col("b.is_new"))
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("a.is_new").alias("a_is_new"),
-            F.col("b.id").alias("id_b"),
-            F.col("b.n_sh").alias("n_b"),
-            F.col("b.is_new").alias("b_is_new"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    t = F.lit(float(threshold))
-    a_loses = (F.col("n_common") / F.col("n_a") >= t) & (
-        (F.col("n_a") < F.col("n_b"))
-        | ((F.col("n_a") == F.col("n_b")) & (F.col("id_a") > F.col("id_b")))
-    )
-    b_loses = (F.col("n_common") / F.col("n_b") >= t) & (
-        (F.col("n_b") < F.col("n_a"))
-        | ((F.col("n_b") == F.col("n_a")) & (F.col("id_b") > F.col("id_a")))
-    )
-    mixed = F.col("a_is_new") != F.col("b_is_new")
-    both_new = F.col("a_is_new") & F.col("b_is_new")
-    mixed_drop = common.filter(
-        mixed & ((F.col("a_is_new") & a_loses) | (F.col("b_is_new") & b_loses))
-    ).select("id_a", "id_b", "a_is_new", "b_is_new")
-    both_drop = common.filter(both_new & (a_loses | b_loses)).select(
-        F.when(a_loses, F.col("id_b")).otherwise(F.col("id_a")).alias("id_a"),
-        F.when(a_loses, F.col("id_a")).otherwise(F.col("id_b")).alias("id_b"),
-        F.lit(True).alias("a_is_new"),
-        F.lit(True).alias("b_is_new"),
-    )
-    return mixed_drop.unionByName(both_drop).distinct()
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -781,117 +686,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def embedding_bucket_index_table(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tables: int = 8,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """The persistable embedding-LSH index (r12): ``(id, tbl, bkt,
-    embedding)`` rows — ``n_tables`` sign-bit bucket rows per vector,
-    with the vector itself stored ONCE (on the ``tbl == 0`` row, null
-    elsewhere) so the index carries each embedding exactly one time
-    while bucket probes stay 24-byte rows. The hyperplane family is a
-    pure function of (dim, n_planes, n_tables, seed): an index written
-    once dedups every future shard incrementally
-    (:func:`embedding_incremental_pairs`, the streaming embedding tier)
-    as long as the parameters match."""
-    from .similarity import lsh_table_buckets, random_hyperplanes
-
-    planes = np.vstack(
-        [random_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
-    )
-    buckets = lsh_table_buckets(
-        emb, planes, n_tables, n_planes, id_col, vec_col, id_col
-    )
-    vecs = emb.select(F.col(id_col), F.col(vec_col).alias("_vec"))
-    return buckets.join(vecs, id_col).select(
-        id_col,
-        "tbl",
-        "bkt",
-        F.when(F.col("tbl") == 0, F.col("_vec")).alias("embedding"),
-    )
-
-
-def embedding_incremental_pairs(
-    new_state: DataFrame,
-    index: DataFrame,
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    max_bucket: int = 4000,
-) -> DataFrame:
-    """Incremental embedding near-dup pairs (r12): a NEW shard's
-    :func:`embedding_bucket_index_table` against a committed index.
-    Emits ``(id_a, id_b, a_is_new, b_is_new)`` candidate pairs touching
-    a new id, cosine-verified >= ``threshold`` — the flag contract the
-    index-backed streaming choreography consumes (mixed pairs drop the
-    new side; new-new pairs drop ``id_b``, the larger id).
-
-    Scale shape: index buckets prune FIRST with a semi-join against the
-    shard's (tbl, bkt) set; the pairing shuffle carries 24-byte bucket
-    rows; vectors rejoin only for VERIFIED-candidate ids (semi-join
-    pruned from the once-per-id ``tbl == 0`` rows), so no shuffle
-    carries a vector per candidate. Combined buckets over ``max_bucket``
-    drop whole (the mass-duplicate guard shared with the batch form)."""
-    from .similarity import cosine_similarity
-
-    hit = new_state.select("tbl", "bkt").distinct()
-    relevant = index.join(hit, on=["tbl", "bkt"], how="left_semi")
-    members = relevant.select(
-        id_col, "tbl", "bkt", F.lit(False).alias("is_new")
-    ).unionByName(
-        new_state.select(id_col, "tbl", "bkt", F.lit(True).alias("is_new"))
-    )
-    grouped = (
-        members.groupBy("tbl", "bkt")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), "is_new"))
-            ).alias("ms")
-        )
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
-    )
-    cand = (
-        grouped.select(F.posexplode("ms").alias("i", "a"), "ms")
-        .select("a", F.explode(F.expr("slice(ms, i + 2, size(ms))")).alias("b"))
-        .filter(F.col("a.is_new") | F.col("b.is_new"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.is_new").alias("a_is_new"),
-            F.col("b.is_new").alias("b_is_new"),
-        )
-        .distinct()
-    )
-    all_vecs = (
-        index.filter(F.col("embedding").isNotNull())
-        .select(id_col, "embedding")
-        .unionByName(
-            new_state.filter(F.col("embedding").isNotNull()).select(
-                id_col, "embedding"
-            )
-        )
-    )
-    va = all_vecs.select(
-        F.col(id_col).alias("id_a"), F.col("embedding").alias("_va")
-    )
-    vb = all_vecs.select(
-        F.col(id_col).alias("id_b"), F.col("embedding").alias("_vb")
-    )
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .filter(
-            stable_round(cosine_similarity(F.col("_va"), F.col("_vb")), 6)
-            >= F.lit(float(threshold))
-        )
-        .select("id_a", "id_b", "a_is_new", "b_is_new")
-    )
-
-
 def simhash_table(
     df: DataFrame,
     text_col: str = "text",
@@ -903,9 +697,9 @@ def simhash_table(
     aggregates (single pass, map-side partial aggregation), then the
     majority vote reassembles the fingerprint.
 
-    Semantically identical to ``functions.text.simhash64`` (same shingles,
-    same xxhash64, same vote) but one data pass instead of 64 array walks
-    per row.
+    The fingerprint: word n-gram shingles, xxhash64 per shingle, and a
+    per-bit majority vote (a bit is set when at least half the shingle
+    hashes set it), computed in one data pass.
 
     opt-r16 (guide §1.2 planning cost, §2.5 input skew): the original
     form carried 65 separate aggregates plus a 64-term bitwiseOR chain
@@ -1159,7 +953,6 @@ def hamming_incremental_pairs(
     max_hamming: int = 3,
     n_blocks: int = 4,
     max_bucket: int | None = None,
-    keep_flags: bool = False,
 ) -> DataFrame:
     """Near-dup pairs TOUCHING a new shard, against a persisted
     :func:`hamming_block_table` index — the production re-crawl shape
@@ -1173,10 +966,7 @@ def hamming_incremental_pairs(
     Ids should be disjoint between the index and the new shard (as with
     the MinHash incremental tier); a re-crawled identical id never
     self-pairs, but its cross-pairs can surface under both flag combos.
-    Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``;
-    ``keep_flags=True`` appends ``a_is_new``/``b_is_new`` (the
-    streaming drop policy needs to know WHICH side is the shard's —
-    the ``incremental_pairs_from_bands`` convention)."""
+    Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``."""
     if 64 % n_blocks != 0:
         raise ValueError(f"n_blocks must divide 64, got {n_blocks}")
     if max_hamming >= n_blocks:
@@ -1221,22 +1011,16 @@ def hamming_incremental_pairs(
             F.col(f"b.{id_col}").alias("id_b"),
             F.col(f"a.{hash_col}").alias("sh_a"),
             F.col(f"b.{hash_col}").alias("sh_b"),
-            F.col("a.is_new").alias("a_is_new"),
-            F.col("b.is_new").alias("b_is_new"),
         )
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    out_cols = ["id_a", "id_b", "hamming"] + (
-        ["a_is_new", "b_is_new"] if keep_flags else []
-    )
-    # distinct AFTER projecting the output columns: with keep_flags off,
-    # a pair whose ids both sit in index AND shard surfaces under
-    # several flag combos — a flag-inclusive distinct would emit the
-    # same (id_a, id_b, hamming) row up to 3x (review r9 pass 2)
+    # a pair meets once per shared bucket and, when its ids sit in both
+    # index AND shard, once per flag combo: distinct collapses them
+    # (review r9 pass 2)
     return (
         cand.withColumn("hamming", hamming.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
-        .select(*out_cols)
+        .select("id_a", "id_b", "hamming")
         .distinct()
     )
 

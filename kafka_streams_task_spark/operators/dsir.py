@@ -299,17 +299,6 @@ def _check_width(stamped: int | None, n_features: int | None) -> int:
     return stamped
 
 
-def _resolve_width(weights: DataFrame, n_features: int | None) -> int:
-    """The hash width to score with: the model's stamped ``n_features``
-    when present, else the explicit param (hand-built weight tables)."""
-    stamped = None
-    if "n_features" in weights.columns:
-        row = weights.select("n_features").first()
-        if row is not None and row[0] is not None:
-            stamped = int(row[0])
-    return _check_width(stamped, n_features)
-
-
 def _model_meta(
     weights: DataFrame, n_features: int | None
 ) -> tuple[int, float]:
@@ -348,7 +337,7 @@ def dsir_score(
     shuffle end to end. Docs with no grams (empty/NULL text) keep
     ``dsir_logw = 0`` (weight 1) via ``explode_outer`` — no second
     pass, no re-join against the id set. The hash width comes from the
-    model's stamp by default (see :func:`_resolve_width`).
+    model's stamp by default (see :func:`_model_meta`).
 
     A hand-built weights table WITHOUT the idx-NULL default row scores
     out-of-model grams at 0.0 (weight 1) — deliberate for the minimal

@@ -545,7 +545,7 @@ def merge_into_partitioned(
 ) -> list:
     """MERGE INTO a partitioned parquet snapshot, rewriting ONLY the
     partitions the delta touches, under a WRITE-AUDIT-PUBLISH commit
-    (r6; the discipline streaming/cdc.py's versioned ``_SUCCESS``
+    (r6; the discipline streaming/state.py's versioned ``_SUCCESS``
     protocol applies, adapted to an in-place partition layout — VERDICT
     r5 item 5). Returns the touched partition values.
 
@@ -571,7 +571,7 @@ def merge_into_partitioned(
 
     Readers racing the publish window see partition swaps (same
     non-isolation plain parquet always had); readers needing snapshot
-    isolation belong on the versioned-view layout (streaming/cdc.py).
+    isolation belong on the versioned-state layout (streaming/state.py).
     WRITERS are single-writer by contract (like any non-locking table
     layout): the pending-manifest guard catches a crashed predecessor,
     not a concurrent one.

@@ -1,18 +1,15 @@
 from .ann import knn_ivfpq_stream_index, streaming_ivfpq_ingest
 from .dedup import (
     streaming_dedup_exact,
-    streaming_dedup_image,
     streaming_dedup_near,
     streaming_dedup_watermarked,
 )
 from .dsir import streaming_dsir_filter
-from .anomaly import streaming_zscore
 from .drift import (
     read_drift_log,
     snapshot_drift_history,
     streaming_snapshot_drift,
 )
-from .gapfill import streaming_locf
 from .joins import interval_join
 from .kn import streaming_kn_filter
 from .mixing import (
@@ -41,10 +38,7 @@ __all__ = [
     "streaming_dedup_exact",
     "streaming_dedup_watermarked",
     "streaming_dedup_near",
-    "streaming_dedup_image",
     "streaming_dsir_filter",
-    "streaming_locf",
-    "streaming_zscore",
     "streaming_kn_filter",
     "streaming_crawl_to_snapshot",
     "commit_batch_to_snapshot",

@@ -12,8 +12,9 @@ property: every stage is independently restartable and its intermediate
 stream is inspectable.
 
 foreachBatch variant: `rollup_via_foreach_batch` is mitigation (b) from
-SURVEY §7.4.1 — per micro-batch, merge the batch's partial (sum,count)
-deltas into a durable state table, then publish the recomputed rollup.
+SURVEY §7.4.1 — per micro-batch, merge the batch's partial sums and
+per-field counts into a durable state table, then publish the recomputed
+rollup.
 Its exactly-once protocol is the versioned-state driver in
 ``streaming/state.py``, whose module docstring describes it.
 """
@@ -36,8 +37,11 @@ from ..operators.weather import (
 )
 from .state import StateLayout, run_versioned_state
 
+# ``counts`` names the state's count scheme: a meta written before the
+# per-field counts reads it as None, so such a state is refused.
 _ROLLUP = StateLayout(
-    "rollup", "state_v", "rollup state", "rollup_meta", "precision int"
+    "rollup", "state_v", "rollup state", "rollup_meta",
+    "precision int, counts string",
 )
 
 
@@ -171,20 +175,23 @@ def rollup_via_foreach_batch(
 ):
     """Two-level stateful aggregation via foreachBatch (SURVEY §7.4.1(b)).
 
-    Each micro-batch computes its own per-(geohash, date) partial
-    (sum, count) and merges it into a durable parquet state table,
-    versioned by batch id (``state_v{N}`` holds the full state after
-    batch N). The driver in ``streaming/state.py`` makes the merge
+    Each micro-batch computes its own per-(geohash, date) partial sums
+    and counts, one count per temperature field so that a mean skips
+    nulls as ``F.avg`` does. It merges them into a durable parquet state
+    table, versioned by batch id (``state_v{N}`` holds the full state
+    after batch N). The driver in ``streaming/state.py`` makes the merge
     exactly-once: a redelivered batch skips the merge and only
     republishes the rollup, which covers a crash between the state write
     and the rollup write. The state dir is bound to ``checkpoint_dir``,
     and ``precision`` is its meta (``rollup_meta``): cells of a
     different precision must not merge into one state, so a mismatch
-    raises.
+    raises. A state written with one shared count per cell-day is
+    refused the same way.
 
     Heavier I/O than ``weather_rollup_stream``'s streaming aggregation,
-    but its state is bounded by cells x dates (one (sum, count) row per
-    cell-day), where the streaming aggregation keeps every observation.
+    but its state is bounded by cells x dates (one row of sums and
+    counts per cell-day), where the streaming aggregation keeps every
+    observation.
 
     Returns the StreamingQuery; the current rollup lives at
     ``{state_dir}/rollup`` (geohash, weatherList).
@@ -193,21 +200,20 @@ def rollup_via_foreach_batch(
 
     def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         partial = batch_df.groupBy(*keys).agg(
-            F.sum("tmp_f").alias("sum_f"),
-            F.sum("tmp_c").alias("sum_c"),
-            F.count(F.lit(1)).alias("cnt"),
+            *(F.sum(f"tmp_{u}").alias(f"sum_{u}") for u in "fc"),
+            *(F.count(f"tmp_{u}").alias(f"cnt_{u}") for u in "fc"),
         )
         if prev is None:
             return partial
         return partial.unionByName(prev).groupBy(*keys).agg(
-            *(F.sum(c).alias(c) for c in ("sum_f", "sum_c", "cnt"))
+            *(F.sum(c).alias(c) for c in ("sum_f", "sum_c", "cnt_f", "cnt_c"))
         )
 
     def publish(state: DataFrame) -> None:
+        # a field with no value has a null sum, so its mean is null
         daily = state.select(
             *keys,
-            (F.col("sum_f") / F.col("cnt")).alias("tmp_f"),
-            (F.col("sum_c") / F.col("cnt")).alias("tmp_c"),
+            *((F.col(f"sum_{u}") / F.col(f"cnt_{u}")).alias(f"tmp_{u}") for u in "fc"),
         )
         weather_by_geohash(daily).write.mode("overwrite").parquet(f"{state_dir}/rollup")
 
@@ -217,6 +223,6 @@ def rollup_via_foreach_batch(
         checkpoint_dir,
         _ROLLUP,
         merge,
-        {"precision": precision},
+        {"precision": precision, "counts": "per_field"},
         publish,
     )

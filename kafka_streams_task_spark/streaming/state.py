@@ -7,8 +7,8 @@ batch the checkpoint has not marked committed, with the same
 job). Exactly-once therefore needs an idempotent sink keyed on
 ``batch_id``. :func:`run_versioned_state` is that sink. It serves the
 six sketch families in ``sketch.py`` (MG, CMS, DDSketch, HLL, theta,
-theta sample), the mixing count table (``mixing.py``), the CDC view
-(``cdc.py``) and the foreachBatch weather rollup (``decoupled.py``).
+theta sample), the mixing count table (``mixing.py``) and the
+foreachBatch weather rollup (``decoupled.py``).
 Each family supplies only its merge step, its parameters and, if it
 serves a derived table, a publish step. The rules:
 

@@ -411,82 +411,6 @@ class TestReviewR9Fixes:
         assert uncapped.count() == 20 * 19 // 2 + 1
 
 
-def test_streaming_dedup_image_cross_batch(spark, tmp_path):
-    """r9 streaming image dedup: within-batch perceptual near-copies
-    drop (smaller id survives), a later batch's near-copy of an INDEXED
-    image drops on arrival, the committed index holds only survivors'
-    blocks, and replay is a no-op."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
-    from kafka_streams_task_spark.catalog.extensions import _ih_payloads
-    from kafka_streams_task_spark.streaming.dedup import streaming_dedup_image
-    from kafka_streams_task_spark.streaming.state import committed_versions
-
-    v = {m: bytes(p) for m, p in _ih_payloads()}
-    src = tmp_path / "img_in"
-    src.mkdir()
-
-    def write(path, rows):
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "payload": pa.array([r[1] for r in rows], pa.binary()),
-                }
-            ),
-            path,
-        )
-
-    # batch 0: base image, an unrelated one, and a same-batch near-copy
-    write(src / "b0.parquet", [(1, v[0]), (2, v[5]), (3, v[1])])
-    # batch 1: near-copy of INDEXED image 1, plus a fresh unrelated one
-    write(src / "b1.parquet", [(10, v[2]), (11, v[3])])
-    os.utime(src / "b0.parquet", (1000000000, 1000000000))
-    os.utime(src / "b1.parquet", (1000000100, 1000000100))
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    index_dir = str(tmp_path / "img_index")
-    q = streaming_dedup_image(stream, index_dir, str(tmp_path / "ckpt"))
-    q.awaitTermination(180)
-
-    kept = spark.read.parquet(f"{index_dir}/kept")
-    kept_ids = {r["doc_id"] for r in kept.collect()}
-    assert kept_ids == {1, 2, 11}  # 3 dropped in-batch, 10 vs the index
-
-    versions = committed_versions(spark, index_dir, "hblk_v")
-    assert len(versions) == 2
-    idx = spark.read.parquet(*[f"{index_dir}/hblk_v{x}" for x in versions])
-    assert {
-        r["doc_id"] for r in idx.select("doc_id").distinct().collect()
-    } == kept_ids
-
-    # replay on the same index dir: the shard-commit check no-ops
-    stream2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q2 = streaming_dedup_image(stream2, index_dir, str(tmp_path / "ckpt"))
-    q2.awaitTermination(180)
-    assert {
-        r["doc_id"] for r in spark.read.parquet(f"{index_dir}/kept").collect()
-    } == kept_ids
-
-
 class TestVideoFingerprint:
     """r9 video near-dedup: fused sample+hash stage (frame bytes never
     leave the task), inverted frame-hash index, shared-frame threshold,
@@ -717,9 +641,9 @@ def test_multimodal_dedup_capstone(spark, tmp_path):
 
 
 def test_incremental_pairs_no_duplicates_when_ids_overlap(spark):
-    """r9 review pass 2: with keep_flags off, a pair whose ids sit in
-    BOTH the index and the shard must surface exactly once — the
-    flag-inclusive distinct used to emit it up to 3x."""
+    """r9 review pass 2: a pair whose ids sit in BOTH the index and the
+    shard must surface exactly once — the flag-inclusive distinct used
+    to emit it up to 3x."""
     from kafka_streams_task_spark.operators.dedup import (
         hamming_block_table,
         hamming_incremental_pairs,
@@ -758,64 +682,6 @@ def test_video_every_n_guard(spark):
         video_frame_hashes(df, every_n=0)
     with pytest.raises(ValueError, match="every_n"):
         video_frame_hashes(df, every_n=-4)
-
-
-def test_streaming_dedup_image_drops_recrawled_same_id(spark, tmp_path):
-    """r9 review pass 2: a later batch re-delivering an ALREADY-INDEXED
-    id (exact re-crawl — not a foreachBatch redelivery) must not
-    re-enter kept/ or re-index its blocks."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
-    from kafka_streams_task_spark.catalog.extensions import _ih_payloads
-    from kafka_streams_task_spark.streaming.dedup import streaming_dedup_image
-
-    v = {m: bytes(p) for m, p in _ih_payloads()}
-    src = tmp_path / "in"
-    src.mkdir()
-
-    def write(path, rows):
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "payload": pa.array([r[1] for r in rows], pa.binary()),
-                }
-            ),
-            path,
-        )
-
-    write(src / "b0.parquet", [(1, v[0])])
-    # batch 1: id 1 re-crawled identically + genuinely new id 2
-    write(src / "b1.parquet", [(1, v[0]), (2, v[5])])
-    os.utime(src / "b0.parquet", (1000000000, 1000000000))
-    os.utime(src / "b1.parquet", (1000000100, 1000000100))
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    index_dir = str(tmp_path / "idx")
-    q = streaming_dedup_image(stream, index_dir, str(tmp_path / "ckpt"))
-    q.awaitTermination(180)
-    kept = spark.read.parquet(f"{index_dir}/kept").collect()
-    ids = sorted(r.doc_id for r in kept)
-    assert ids == [1, 2]  # id 1 exactly once, from batch 0
-    idx = spark.read.parquet(f"{index_dir}/hblk_v0", f"{index_dir}/hblk_v1")
-    per_id = {
-        r["doc_id"]: r["n"]
-        for r in idx.groupBy("doc_id").count().withColumnRenamed("count", "n").collect()
-    }
-    assert per_id[1] == 8 and per_id[2] == 8  # one block set per id
 
 
 @settings(max_examples=5, deadline=None)

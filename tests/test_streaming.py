@@ -154,7 +154,7 @@ def test_latest_per_key_on_stream(spark, tmpdir):
     name = f"latest_{uuid.uuid4().hex[:8]}"
     q = _run_to_memory(latest_per_key(stream, "k", "offset"), name, tmpdir)
     plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
-    # no Python node (applyInPandasWithState plans FlatMapGroupsInPandasWithState)
+    # no Python node (a pandas state operator plans FlatMapGroupsInPandasWithState)
     assert not any(n in plan for n in ("Python", "Pandas", "Arrow")), plan
 
     rows = spark.sql(f"SELECT * FROM {name}").collect()
@@ -411,12 +411,39 @@ def test_weather_rollup_checkpoint_restart(spark, tmpdir):
     assert got == expect
 
 
-def test_rollup_null_temperature_matches_batch(spark, tmpdir):
+def _last_streamed_weather(spark, stream, tmpdir):
+    from kafka_streams_task_spark.streaming import weather_rollup_stream
+
+    name = f"rollup_null_{uuid.uuid4().hex[:8]}"
+    _run_to_memory(weather_rollup_stream(stream), name, tmpdir)
+    return spark.sql(f"SELECT * FROM {name}").collect()[-1].weatherList
+
+
+def _published_weather(spark, stream, tmpdir):
+    from kafka_streams_task_spark.streaming.decoupled import (
+        rollup_via_foreach_batch,
+    )
+
+    state = f"{tmpdir}/rollup_state"
+    q = rollup_via_foreach_batch(stream, state, f"{tmpdir}/ckpt_rollup")
+    q.awaitTermination(120)
+    (row,) = spark.read.parquet(f"{state}/rollup").collect()
+    return row.weatherList
+
+
+@pytest.mark.parametrize(
+    "rollup",
+    [_last_streamed_weather, _published_weather],
+    ids=["stream", "foreach_batch"],
+)
+def test_rollup_null_temperature_matches_batch(spark, tmpdir, rollup):
     """A missing or unparseable temperature is skipped by the mean, as the
     batch path's ``avg`` skips it: one cell-day gets 70.0, then no
     ``avg_tmpr_f``, then ``"oops"`` (null under the typed schema), one
-    record per micro-batch. The stream's last weatherList must equal the
-    batch rollup of the same records (tmp_f 70.0, not null)."""
+    record per micro-batch. Each rollup's last weatherList (the streaming
+    aggregation's last emission, the foreachBatch rollup's published
+    table) must equal the batch rollup of the same records (tmp_f 70.0,
+    not null and not 70.0 / 3)."""
     import os
 
     from kafka_streams_task_spark.operators.weather import (
@@ -424,7 +451,6 @@ def test_rollup_null_temperature_matches_batch(spark, tmpdir):
         weather_daily_avg,
         weather_rekey,
     )
-    from kafka_streams_task_spark.streaming import weather_rollup_stream
 
     src = f"{tmpdir}/weather_null_in"
     os.makedirs(src)
@@ -441,10 +467,7 @@ def test_rollup_null_temperature_matches_batch(spark, tmpdir):
         os.utime(path, (1_000_000_000 + 30 * i,) * 2)
 
     stream = read_json_stream(spark, src, WEATHER_RAW, max_files_per_trigger=1)
-    name = f"rollup_null_{uuid.uuid4().hex[:8]}"
-    _run_to_memory(weather_rollup_stream(stream), name, tmpdir)
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    got = [(w.tmp_f, w.tmp_c, w.date) for w in rows[-1].weatherList]
+    got = [(w.tmp_f, w.tmp_c, w.date) for w in rollup(spark, stream, tmpdir)]
 
     batch = spark.read.schema(WEATHER_RAW).json(src)
     (expect,) = weather_by_geohash(weather_daily_avg(weather_rekey(batch))).collect()
@@ -594,135 +617,47 @@ def test_streaming_dedup_near_rejects_foreign_checkpoint(spark, tmpdir):
         streaming_dedup_near(stream2, index_dir, f"{tmpdir}/bind_ckpt_B")
 
 
-def test_streaming_cdc_materialized_view(spark, tmpdir):
-    """Streaming CDC apply: latest-wins across batches, delete tombstones
-    persist (a STALE late update must not resurrect or overwrite), and
-    replaying the same input is a no-op."""
+def test_streaming_dedup_near_drops_recrawled_same_id(spark, tmpdir):
+    """A later batch re-delivering an ALREADY-INDEXED id (a re-crawl, not
+    a foreachBatch redelivery) is dropped even when its text changed and
+    shares no band with the indexed copy: it must not re-enter kept/ or
+    re-index its bands."""
     import os
 
     from pyspark.sql import types as T
 
-    from kafka_streams_task_spark.streaming.cdc import (
-        read_cdc_view,
-        streaming_apply_changes,
-    )
+    from kafka_streams_task_spark.streaming.dedup import streaming_dedup_near
 
-    src = f"{tmpdir}/cdc_in"
+    first = "the quick brown fox jumps over the lazy dog near the river bank"
+    changed = "compilers allocate registers by coloring an interference graph"
+    fresh = "a short unrelated note on tea kettles and whistling steam"
+    src = f"{tmpdir}/recrawl_in"
     os.makedirs(src)
     with open(f"{src}/b0.json", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in [
-            {"k": 1, "v": "a1", "op": "U", "version": 1},
-            {"k": 1, "v": "a2", "op": "U", "version": 2},   # in-batch supersede
-            {"k": 2, "v": "b1", "op": "U", "version": 1},
-            {"k": 3, "v": "c1", "op": "U", "version": 5},
-        ]))
+        f.write(json.dumps({"doc_id": 1, "text": first}))
     with open(f"{src}/b1.json", "w") as f:
         f.write("\n".join(json.dumps(r) for r in [
-            {"k": 2, "v": None, "op": "D", "version": 9},   # delete
-            {"k": 3, "v": "stale", "op": "U", "version": 3},  # LATE stale update
-            {"k": 4, "v": "d1", "op": "U", "version": 1},
+            {"doc_id": 1, "text": changed},   # id 1 re-crawled, new text
+            {"doc_id": 2, "text": fresh},
         ]))
-    with open(f"{src}/b2.json", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in [
-            {"k": 2, "v": "b-stale", "op": "U", "version": 4},  # loses to tombstone v9
-            {"k": 1, "v": None, "op": "D", "version": 7},       # delete k=1
-            {"k": 1, "v": "a9", "op": "U", "version": 8},       # resurrect above
-        ]))
-    for i, name in enumerate(["b0.json", "b1.json", "b2.json"]):
-        os.utime(f"{src}/{name}", (1000000000 + i * 100,) * 2)
-
-    schema = T.StructType([
-        T.StructField("k", T.LongType()),
-        T.StructField("v", T.StringType()),
-        T.StructField("op", T.StringType()),
-        T.StructField("version", T.LongType()),
-    ])
+    os.utime(f"{src}/b0.json", (1000000000, 1000000000))
+    os.utime(f"{src}/b1.json", (1000000100, 1000000100))
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    )
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
-    state_dir = f"{tmpdir}/cdc_state"
-    q = streaming_apply_changes(stream, state_dir, f"{tmpdir}/cdc_ckpt", ["k"])
+    index_dir = f"{tmpdir}/recrawl_index"
+    q = streaming_dedup_near(stream, index_dir, f"{tmpdir}/recrawl_ckpt")
     q.awaitTermination(180)
 
-    view = {r.k: (r.v, r.version) for r in read_cdc_view(spark, state_dir).collect()}
-    assert view == {
-        1: ("a9", 8),   # deleted then resurrected at a higher version
-        3: ("c1", 5),   # stale v3 lost to the standing v5
-        4: ("d1", 1),
-        # 2 absent: v9 tombstone beats the late v4 upsert
+    kept = spark.read.parquet(f"{index_dir}/kept").collect()
+    assert sorted((r.doc_id, r.text) for r in kept) == [(1, first), (2, fresh)]
+    idx = spark.read.parquet(f"{index_dir}/bands_v0", f"{index_dir}/bands_v1")
+    per_id = {
+        r["doc_id"]: r["n"]
+        for r in idx.groupBy("doc_id").count().withColumnRenamed("count", "n").collect()
     }
-
-    # replay on the same checkpoint+state: batch ids redeliver, no change
-    stream2 = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
-    q2 = streaming_apply_changes(stream2, state_dir, f"{tmpdir}/cdc_ckpt", ["k"])
-    q2.awaitTermination(180)
-    view2 = {r.k: (r.v, r.version) for r in read_cdc_view(spark, state_dir).collect()}
-    assert view2 == view
-
-    # a FRESH checkpoint against the bound state dir must be refused
-    import pytest as _pytest
-
-    stream3 = spark.readStream.schema(schema).json(src)
-    with _pytest.raises(ValueError, match="bound to checkpoint"):
-        streaming_apply_changes(stream3, state_dir, f"{tmpdir}/cdc_ckpt_other", ["k"])
-
-    # r7 (VERDICT r6 item 7): batch-equivalence invariant — the streaming
-    # view's final state must equal the BATCH apply_changes of the same
-    # change log over an empty snapshot, however the log was micro-batched.
-    from kafka_streams_task_spark.operators.merge import apply_changes
-
-    empty = spark.createDataFrame([], "k long, v string")
-    all_changes = spark.read.schema(schema).json(src)
-    batch = {r.k: r.v for r in apply_changes(empty, all_changes, ["k"]).collect()}
-    assert batch == {k: v for k, (v, _ver) in view.items()}
-
-
-def test_streaming_cdc_tombstone_compaction(spark, tmpdir):
-    """With a tombstone watermark, compacted deletes leave the state
-    (bounded growth); the view is unchanged. Without it (default), the
-    tombstone is retained and still beats a later stale upsert."""
-    import os
-
-    from pyspark.sql import types as T
-
-    from kafka_streams_task_spark.streaming.cdc import (
-        read_cdc_view,
-        streaming_apply_changes,
-    )
-
-    rows_b0 = [
-        {"k": 1, "v": "a", "op": "U", "version": 10},
-        {"k": 2, "v": "b", "op": "U", "version": 10},
-        {"k": 2, "v": None, "op": "D", "version": 11},  # old tombstone
-    ]
-    schema = T.StructType([
-        T.StructField("k", T.LongType()),
-        T.StructField("v", T.StringType()),
-        T.StructField("op", T.StringType()),
-        T.StructField("version", T.LongType()),
-    ])
-
-    for name, wm, expect_tombstones in (
-        ("keep", None, 1),
-        ("compact", 100, 0),
-    ):
-        src = f"{tmpdir}/tomb_in_{name}"
-        os.makedirs(src)
-        with open(f"{src}/b0.json", "w") as f:
-            f.write("\n".join(json.dumps(r) for r in rows_b0))
-        stream = spark.readStream.schema(schema).json(src)
-        state_dir = f"{tmpdir}/tomb_state_{name}"
-        q = streaming_apply_changes(
-            stream, state_dir, f"{tmpdir}/tomb_ckpt_{name}", ["k"],
-            tombstone_min_version=wm,
-        )
-        q.awaitTermination(120)
-        view = {r.k: r.v for r in read_cdc_view(spark, state_dir).collect()}
-        assert view == {1: "a"}, name
-        from kafka_streams_task_spark.streaming.state import committed_versions
-
-        last = committed_versions(spark, state_dir, "state_v")[-1]
-        state = spark.read.parquet(f"{state_dir}/state_v{last}")
-        n_tomb = state.filter("_op = 'D'").count()
-        assert n_tomb == expect_tombstones, name
+    assert per_id == {1: 32, 2: 32}  # one band set per id
 
 
 def test_streaming_dedup_near_compacts_index_shards(spark, tmpdir):
@@ -857,162 +792,3 @@ def test_compact_index_shards_unit(spark, tmpdir):
         r["doc_id"] for r in spark.read.parquet(p2).collect()
     ) == [0, 1, 2, 3]
     shutil.rmtree(root)
-
-
-def test_streaming_dedup_contained_batch_equivalence_and_cross_batch(spark, tmpdir):
-    """r12 (VERDICT r11 item 6): containment dedup at ingest. Batch 0 is
-    the chain decision corpus (A⊂B⊂C + mutual pair + disjoint): one batch
-    through the streaming tier must keep EXACTLY drop_contained_documents'
-    survivors (stream == batch equivalence). Batch 1 pins the cross-batch
-    contract: a new doc contained in an indexed doc drops on arrival; a
-    new SUPERSET of an indexed doc is kept and the landed doc is never
-    retracted (the documented conservative asymmetry)."""
-    import os
-
-    from pyspark.sql import types as T
-
-    from kafka_streams_task_spark.operators.dedup import drop_contained_documents
-    from kafka_streams_task_spark.streaming.dedup import streaming_dedup_contained
-
-    b0 = [
-        {"doc_id": 11, "text": "w1 w2 w3 w4 w5 w6"},
-        {"doc_id": 12, "text": "w1 w2 w3 w4 w5 w6 y1 y2 y3 y4"},
-        {"doc_id": 13, "text": "w1 w2 w3 w4 w5 w6 y1 y2 y3 y4 z1 z2 z3 z4"},
-        {"doc_id": 14, "text": "m1 m2 m3 m4 m5"},
-        {"doc_id": 15, "text": "m1 m2 m3 m4 m5"},
-        {"doc_id": 16, "text": "q1 q2 q3 q4 q5"},
-    ]
-    b1 = [
-        # every shingle of 20 sits inside indexed 13 -> drops on arrival
-        {"doc_id": 20, "text": "w1 w2 w3 w4 w5 w6 y1 y2"},
-        # SUPERSET of indexed 16: kept, and 16 is never retracted
-        {"doc_id": 21, "text": "q1 q2 q3 q4 q5 r1 r2 r3 r4 r5 r6 r7"},
-        {"doc_id": 22, "text": "s1 s2 s3 s4 s5"},
-    ]
-    src = f"{tmpdir}/cont_in"
-    os.makedirs(src)
-    with open(f"{src}/b0.json", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in b0))
-    with open(f"{src}/b1.json", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in b1))
-    os.utime(f"{src}/b0.json", (1000000000, 1000000000))
-    os.utime(f"{src}/b1.json", (1000000100, 1000000100))
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
-    )
-    index_dir = f"{tmpdir}/cont_index"
-    q = streaming_dedup_contained(stream, index_dir, f"{tmpdir}/cont_ckpt")
-    q.awaitTermination(180)
-
-    kept = spark.read.parquet(f"{index_dir}/kept")
-    batch0_kept = {
-        r["doc_id"]
-        for r in spark.read.parquet(f"{index_dir}/kept/batch_id=0").collect()
-    }
-    # stream == batch on the same rows
-    batch_survivors = {
-        r["doc_id"]
-        for r in drop_contained_documents(
-            spark.createDataFrame(
-                [(d["doc_id"], d["text"]) for d in b0], "doc_id long, text string"
-            )
-        ).collect()
-    }
-    assert batch0_kept == batch_survivors == {13, 14, 16}
-
-    kept_ids = {r["doc_id"] for r in kept.collect()}
-    assert kept_ids == {13, 14, 16, 21, 22}  # 20 dropped vs index; 16 not retracted
-
-    # the index holds exactly the survivors' postings
-    from kafka_streams_task_spark.streaming.state import committed_versions
-
-    versions = committed_versions(spark, index_dir, "shpost_v")
-    assert len(versions) == 2
-    idx = spark.read.parquet(*[f"{index_dir}/shpost_v{v}" for v in versions])
-    assert {r["doc_id"] for r in idx.select("doc_id").distinct().collect()} == kept_ids
-
-    # redelivery is a no-op
-    stream2 = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
-    )
-    q2 = streaming_dedup_contained(stream2, index_dir, f"{tmpdir}/cont_ckpt")
-    q2.awaitTermination(180)
-    assert {r["doc_id"] for r in spark.read.parquet(f"{index_dir}/kept").collect()} == kept_ids
-
-
-def test_streaming_dedup_embedding_cross_batch(spark, tmpdir):
-    """r12: embedding near-dup dedup at ingest. Within-batch exact copy
-    drops (smaller id survives); a later batch's near-copy (cos ~0.999)
-    of an INDEXED vector drops on arrival; an orthogonal vector lands;
-    the committed index stores each survivor's vector exactly once (on
-    its tbl==0 row); replay is a no-op."""
-    import os
-
-    from pyspark.sql import types as T
-
-    from kafka_streams_task_spark.streaming.dedup import streaming_dedup_embedding
-
-    dim = 64
-    base = [1.0] + [0.0] * (dim - 1)
-    near = [1.0, 0.01] + [0.0] * (dim - 2)       # cosine ~0.99995 with base
-    ortho = [0.0, 0.0, 1.0] + [0.0] * (dim - 3)
-    other = [0.0] * (dim - 1) + [1.0]
-    b0 = [
-        {"vec_id": 1, "embedding": base},
-        {"vec_id": 2, "embedding": base},        # exact copy -> drops vs 1
-        {"vec_id": 3, "embedding": other},
-    ]
-    b1 = [
-        {"vec_id": 10, "embedding": near},       # near-dup of indexed 1 -> drops
-        {"vec_id": 11, "embedding": ortho},      # novel -> kept
-    ]
-    src = f"{tmpdir}/emb_in"
-    os.makedirs(src)
-    with open(f"{src}/b0.json", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in b0))
-    with open(f"{src}/b1.json", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in b1))
-    os.utime(f"{src}/b0.json", (1000000000, 1000000000))
-    os.utime(f"{src}/b1.json", (1000000100, 1000000100))
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
-    )
-    index_dir = f"{tmpdir}/emb_index"
-    q = streaming_dedup_embedding(
-        stream, index_dir, f"{tmpdir}/emb_ckpt", threshold=0.99
-    )
-    q.awaitTermination(180)
-
-    kept = spark.read.parquet(f"{index_dir}/kept")
-    kept_ids = {r["vec_id"] for r in kept.collect()}
-    assert kept_ids == {1, 3, 11}
-
-    from kafka_streams_task_spark.streaming.state import committed_versions
-
-    versions = committed_versions(spark, index_dir, "evec_v")
-    assert len(versions) == 2
-    idx = spark.read.parquet(*[f"{index_dir}/evec_v{v}" for v in versions])
-    assert {r["vec_id"] for r in idx.select("vec_id").distinct().collect()} == kept_ids
-    # each survivor's vector stored exactly once (tbl==0 row only)
-    vec_rows = idx.filter(idx.embedding.isNotNull()).collect()
-    assert len(vec_rows) == len(kept_ids)
-    assert all(r["tbl"] == 0 for r in vec_rows)
-
-    # replay no-op
-    stream2 = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
-    )
-    q2 = streaming_dedup_embedding(
-        stream2, index_dir, f"{tmpdir}/emb_ckpt", threshold=0.99
-    )
-    q2.awaitTermination(180)
-    assert {r["vec_id"] for r in spark.read.parquet(f"{index_dir}/kept").collect()} == kept_ids

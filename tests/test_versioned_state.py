@@ -14,6 +14,7 @@ import tempfile
 import pytest
 from pyspark.sql import types as T
 
+from kafka_streams_task_spark.functions.geohash import geohash_encode
 from kafka_streams_task_spark.schemas import WEATHER_RAW
 
 
@@ -24,38 +25,10 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-_CDC_SCHEMA = T.StructType([
-    T.StructField("k", T.LongType()),
-    T.StructField("v", T.StringType()),
-    T.StructField("op", T.StringType()),
-    T.StructField("version", T.LongType()),
-])
 _DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("text", T.StringType()),
 ])
-
-
-def _cdc():
-    from kafka_streams_task_spark.streaming.cdc import (
-        read_cdc_view,
-        streaming_apply_changes,
-    )
-
-    batches = [
-        [{"k": 1, "v": "a", "op": "U", "version": 1},
-         {"k": 2, "v": "b", "op": "U", "version": 1}],
-        [{"k": 1, "v": "a2", "op": "U", "version": 2},
-         {"k": 2, "v": None, "op": "D", "version": 3}],
-    ]
-    return (
-        _CDC_SCHEMA,
-        batches,
-        lambda stream, state, ck: streaming_apply_changes(stream, state, ck, ["k"]),
-        lambda spark, state: sorted(
-            (r.k, r.v, r.version) for r in read_cdc_view(spark, state).collect()
-        ),
-    )
 
 
 def _cms():
@@ -102,6 +75,20 @@ def _rollup():
     )
 
 
+def _near():
+    from kafka_streams_task_spark.streaming.dedup import streaming_dedup_near
+
+    return (
+        _DOC_SCHEMA,
+        [[{"doc_id": 1, "text": "the cat sat on the mat by the door"}],
+         [{"doc_id": 2, "text": "a dog ran across the park at noon"}]],
+        streaming_dedup_near,
+        lambda spark, state: sorted(
+            r.doc_id for r in spark.read.parquet(f"{state}/kept").collect()
+        ),
+    )
+
+
 def _write_batches(src: str, batches: list[list[dict]]) -> None:
     os.makedirs(src)
     for i, rows in enumerate(batches):
@@ -110,7 +97,7 @@ def _write_batches(src: str, batches: list[list[dict]]) -> None:
         os.utime(f"{src}/b{i}.json", (1000000000 + i * 100,) * 2)
 
 
-@pytest.mark.parametrize("case", [_cdc, _cms, _rollup], ids=["cdc", "cms", "rollup"])
+@pytest.mark.parametrize("case", [_cms, _rollup], ids=["cms", "rollup"])
 def test_true_redelivery_takes_the_skip_branch(spark, tmpdir, case):
     schema, batches, start, read = case()
     src, state, ck = f"{tmpdir}/in", f"{tmpdir}/state", f"{tmpdir}/ckpt"
@@ -162,29 +149,36 @@ def test_rollup_refuses_a_different_precision(spark, tmpdir):
     assert read(spark, state) == before
 
 
-def test_redelivery_drains_a_stateful_upstream(spark, tmpdir):
+@pytest.mark.parametrize(
+    "case, expect",
+    [
+        (_rollup, [(geohash_encode(51.51, -0.07, 4),
+                    [(71.0, 31.0, "2020-01-01"), (72.0, 32.0, "2020-01-02")])]),
+        (_near, [1, 2]),
+    ],
+    ids=["rollup", "near_dedup"],
+)
+def test_redelivery_drains_a_stateful_upstream(spark, tmpdir, case, expect):
     """A redelivered batch over a stateful upstream (``dropDuplicates``)
     must still be executed: Spark refuses to commit the upstream's state
     store for a micro-batch that foreachBatch left unconsumed
-    (STATE_STORE_COMMIT_VALIDATION_FAILED). The skip path drains the
-    batch, so the restarted query commits and the rollup is unchanged."""
-    from kafka_streams_task_spark.streaming.decoupled import (
-        rollup_via_foreach_batch,
-    )
-
-    _, batches, _, read = _rollup()
+    (STATE_STORE_COMMIT_VALIDATION_FAILED). Both skip paths, the
+    versioned-state driver's (the rollup) and the index dedup's, drain
+    the batch, so the restarted query commits and the output is
+    unchanged."""
+    schema, batches, start, read = case()
     batches[1].append(batches[1][0])  # a duplicate for dropDuplicates to drop
     src, state, ck = f"{tmpdir}/in", f"{tmpdir}/state", f"{tmpdir}/ckpt"
     _write_batches(src, batches)
 
     def run():
         stream = (
-            spark.readStream.schema(WEATHER_RAW)
+            spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .json(src)
             .dropDuplicates()
         )
-        q = rollup_via_foreach_batch(stream, state, ck)
+        q = start(stream, state, ck)
         q.awaitTermination(120)
         return q
 
@@ -199,4 +193,23 @@ def test_redelivery_drains_a_stateful_upstream(spark, tmpdir):
     assert [p["batchId"] for p in q.recentProgress] == [1]
     assert os.path.exists(f"{ck}/commits/1")
     assert read(spark, state) == before
-    assert before[0][1] == [(71.0, 31.0, "2020-01-01"), (72.0, 32.0, "2020-01-02")]
+    assert before == expect
+
+
+def test_rollup_refuses_state_with_one_shared_count(spark, tmpdir):
+    """A rollup state written before the per-field counts (meta without
+    ``counts``) divides both sums by one shared count, so the rollup
+    refuses it instead of merging into it."""
+    from kafka_streams_task_spark.streaming.decoupled import (
+        rollup_via_foreach_batch,
+    )
+
+    _, batches, _, _ = _rollup()
+    src, state, ck = f"{tmpdir}/in", f"{tmpdir}/state", f"{tmpdir}/ckpt"
+    _write_batches(src, batches[:1])
+    spark.createDataFrame([(4,)], "precision int").write.parquet(
+        f"{state}/rollup_meta"
+    )
+    stream = spark.readStream.schema(WEATHER_RAW).json(src)
+    with pytest.raises(ValueError, match="built with precision=4/counts=None"):
+        rollup_via_foreach_batch(stream, state, ck)

@@ -143,8 +143,8 @@ def snapshot_write(
     ``tag`` (r9) stamps an idempotence key into the version manifest —
     because the manifest IS the atomic commit marker, a foreachBatch
     sink can make at-least-once redelivery exactly-once: skip the write
-    when :func:`snapshot_has_tag` already sees the batch's tag on a
-    COMMITTED version (see ``streaming/pipeline.py``).
+    when :func:`committed_tag_version` already finds the batch's tag on
+    a COMMITTED version (see ``streaming/state.py``).
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
@@ -251,39 +251,50 @@ def snapshot_write(
     return version
 
 
+def _tagged_iter(spark: SparkSession, path: str):
+    """Newest-first walk of the committed versions that carry a tag."""
+    return (m for m in _lineage_iter(spark, path) if m.get("tag") is not None)
+
+
+def committed_tag_version(
+    spark: SparkSession, path: str, tag: str, deep: bool = True
+) -> int | None:
+    """The version on the COMMITTED LINEAGE stamped with ``tag``, or
+    None: the redelivery probe of exactly-once foreachBatch snapshot
+    sinks. A crash AFTER the pointer move left the tag visible (skip the
+    redelivered batch); a crash BEFORE it left an orphan (rewrite is
+    correct). The walk follows the parent-pointer
+    lineage (:func:`committed_lineage`), never raw version numbers — a
+    TAGGED ORPHAN manifest sitting below a later commit would otherwise
+    satisfy the probe and the redelivered batch's rows would be lost.
+
+    ``deep`` walks every committed version (KB-sized manifest reads, no
+    data scan). Otherwise only the newest tagged version counts: a few
+    manifest reads, enough for a SEQUENTIAL tagged writer (one
+    foreachBatch stream) whose batch ids are monotonic and whose tags no
+    other tagged writer interleaves (a deep walk per batch sums to
+    O(N²) manifest reads over a stream's life)."""
+    for m in _tagged_iter(spark, path):
+        if m["tag"] == tag:
+            return int(m["version"])
+        if not deep:
+            return None
+    return None
+
+
 def snapshot_has_tag(spark: SparkSession, path: str, tag: str) -> bool:
-    """Whether any version on the COMMITTED LINEAGE was stamped with
-    ``tag``. The redelivery check for exactly-once foreachBatch
-    snapshot sinks: a crash AFTER the pointer move left the tag visible
-    (skip the redelivered batch); a crash BEFORE it left an orphan
-    (rewrite is correct). r11 review catch: the scan follows the
-    parent-pointer lineage (:func:`committed_lineage`), never raw
-    version numbers — a TAGGED ORPHAN manifest sitting below a later
-    commit would otherwise satisfy the probe and the redelivered
-    batch's rows would be skipped, i.e. lost forever. Bounded by the
-    number of committed versions — KB-sized manifest reads, no data
-    scan."""
-    return any(m.get("tag") == tag for m in _lineage_iter(spark, path))
+    """Whether any version on the committed lineage was stamped with
+    ``tag`` (:func:`committed_tag_version`'s deep walk)."""
+    return committed_tag_version(spark, path, tag) is not None
 
 
 def snapshot_latest_tag(spark: SparkSession, path: str) -> str | None:
     """The tag of the MOST RECENT committed tagged version (walking the
     committed lineage down from ``_latest`` past any untagged manual
-    commits — orphan tags never count, same rationale as
-    :func:`snapshot_has_tag`), or None on a table with no tagged
-    versions. The O(few-manifest-reads) redelivery check for a
-    SEQUENTIAL tagged writer (one foreachBatch stream): batch ids are
-    monotonic per checkpoint and each batch commits at most one
-    version, so a redelivered batch's tag either IS the latest tag
-    (crash after commit → skip) or is absent entirely (crash before →
-    rewrite). The general any-version scan is :func:`snapshot_has_tag`
-    — O(versions), use it for non-sequential writers (review r9: the
-    capstone called it per batch, paying N manifest reads at batch
-    N)."""
-    for m in _lineage_iter(spark, path):
-        if m.get("tag") is not None:
-            return m["tag"]
-    return None
+    commits — orphan tags never count, as in
+    :func:`committed_tag_version`), or None on a table with no tagged
+    versions."""
+    return next((m["tag"] for m in _tagged_iter(spark, path)), None)
 
 
 def snapshot_read(
@@ -327,9 +338,9 @@ def committed_lineage(spark: SparkSession, path: str) -> list[dict]:
 
 def _lineage_iter(spark: SparkSession, path: str):
     """Lazy newest-first walk of the committed lineage — the tag probes
-    consume only as far as they need (``snapshot_latest_tag`` stays
-    O(distance-to-first-tag) manifest reads per steady-state batch, the
-    r9 review requirement)."""
+    consume only as far as they need (the shortcut of
+    :func:`committed_tag_version` stays O(distance-to-first-tag)
+    manifest reads per steady-state batch)."""
     v = _latest_version(spark, path)
     via_pointer = False
     while v >= 1:

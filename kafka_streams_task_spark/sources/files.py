@@ -215,25 +215,16 @@ def streaming_ingest_jsonl(
     (``availableNow`` trigger: drain what exists, then stop — rerun on a
     schedule or swap the trigger for continuous tailing).
 
-    Exactly-once despite foreachBatch's at-least-once delivery: each
-    batch writes (overwrites) its OWN ``batch=<id>`` partition directory
-    in both sinks, so a redelivered batch rewrites the same directory
-    instead of appending duplicates, and clean/quarantine cannot fork.
-    Readers see the batch id as a partition column (ingest provenance).
-    Per-batch work is one text scan of the new shards (the from_json
-    split; no shuffle).
+    Exactly-once: each batch overwrites its OWN ``batch=<id>``
+    partition directory in both sinks, so a redelivered batch rewrites
+    the same directory instead of appending duplicates, and
+    clean/quarantine cannot fork. Both output dirs are bound to the
+    checkpoint for life; ``streaming/state.py``'s module docstring gives
+    the protocol. Readers see the batch id as a partition column (ingest
+    provenance). Per-batch work is one text scan of the new shards (the
+    from_json split; no shuffle)."""
+    from ..streaming.state import run_foreach_batch
 
-    The output dirs are BOUND to their checkpoint for life (the
-    ``_checkpoint`` marker protocol shared with the streaming CDC/dedup
-    state dirs): batch-id-keyed overwrite is only idempotent while batch
-    ids are monotone, and a FRESH checkpoint restarts them at 0 — which
-    would silently overwrite ``batch=0``'s earlier data. Restarting on
-    the same checkpoint resumes normally; pointing a new checkpoint at a
-    used ``clean_path`` refuses with the recovery options."""
-    from ..streaming.state import bind_state_to_checkpoint
-
-    bind_state_to_checkpoint(spark, clean_path, checkpoint_dir)
-    bind_state_to_checkpoint(spark, quarantine_path, checkpoint_dir)
     full = _with_corrupt_field(schema)
     opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT}
 
@@ -242,23 +233,15 @@ def streaming_ingest_jsonl(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     lines = reader.text(path).filter(F.trim("value") != "")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def write(batch_df: DataFrame, batch_id: int, _) -> None:
         clean, quarantine = _split_parsed(
             batch_df, F.from_json(F.col("value"), full, opts)
         )
-        # batch_id-keyed partition directories, OVERWRITTEN per batch: a
-        # blind append under foreachBatch's at-least-once contract would
-        # duplicate rows on redelivery; rewriting batch=<id> makes the
-        # replay idempotent. Readers see a `batch` partition column — the
-        # ingest commit id, free provenance.
         clean.write.mode("overwrite").parquet(f"{clean_path}/batch={batch_id}")
         quarantine.write.mode("overwrite").parquet(
             f"{quarantine_path}/batch={batch_id}"
         )
 
-    return (
-        lines.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        lines, checkpoint_dir, [clean_path, quarantine_path], write
     )

@@ -659,17 +659,14 @@ def streaming_ingest_warc(
 
     Same exactly-once discipline as ``streaming_ingest_jsonl``
     (sources/files.py): each micro-batch overwrites its own
-    ``batch=<id>`` partition directory, so foreachBatch redelivery
-    rewrites instead of duplicating, and the output dir is BOUND to its
-    checkpoint via the shared ``_checkpoint`` marker — a fresh
-    checkpoint pointed at a used ``out_path`` refuses instead of
-    silently overwriting ``batch=0``. Malformed records travel in-band
+    ``batch=<id>`` partition directory, and ``out_path`` is bound to its
+    checkpoint (``streaming/state.py``'s module docstring gives the
+    protocol). Malformed records travel in-band
     (``warc_type='_malformed'`` rows), so the quarantine shares the
     commit atomically with the clean rows.
     """
-    from ..streaming.state import bind_state_to_checkpoint
+    from ..streaming.state import run_foreach_batch
 
-    bind_state_to_checkpoint(spark, out_path, checkpoint_dir)
     kept = set(record_types) | {"_malformed"} if record_types else None
 
     reader = spark.readStream.format("binaryFile").schema(
@@ -681,7 +678,7 @@ def streaming_ingest_warc(
     # twin — shard bytes are opened in-task, not shipped through Arrow
     files = reader.load(path).select("path")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def write(batch_df: DataFrame, batch_id: int, _) -> None:
         records = _records_from_files(
             batch_df, strip_http_headers, kept,
             max_payload_bytes=max_payload_bytes,
@@ -703,12 +700,7 @@ def streaming_ingest_warc(
         else:
             records.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
 
-    return (
-        files.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_foreach_batch(files, checkpoint_dir, [out_path], write)
 
 
 def warc_link_graph(records: DataFrame, node: str = "domain") -> DataFrame:

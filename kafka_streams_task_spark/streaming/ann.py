@@ -7,20 +7,16 @@ STREAM of new vectors under foreachBatch's at-least-once contract: a
 blind parquet append is not idempotent — a redelivered micro-batch would
 double-insert its vectors, and duplicate index rows silently skew every
 downstream k-NN (the duplicate occupies a shortlist slot). This module
-ingests exactly-once via the family's versioned-shard protocol
-(``streaming/state.py``, the ``streaming_dedup_near`` pattern): batch N
-encodes its vectors with the FROZEN persisted model (the same one
-Arrow-stage encode the batch appender uses) and writes them as a
-``codes_v{N}`` shard published by ``_SUCCESS``; a redelivered batch
-whose shard is committed skips wholesale; ``compact_every=K`` folds
-committed shards into one compact root so a long-lived stream's index
-read stays bounded instead of one root per ever-committed batch (the
-r9 O(N^2) listing lesson). Because the search here is an EXTERNAL
-reader of the shard dir (unlike the dedup stream, which only reads its
-own shards inside process()), compaction runs with deferred cleanup:
-shards covered by the NEWEST compact root survive until the round
-after, so a search that listed the state just before a compaction
-published still finds every root it planned to read.
+ingests exactly-once as an append-shard family of ``streaming/state.py``
+(its module docstring gives the protocol): batch N encodes its vectors
+with the FROZEN persisted model (the same one Arrow-stage encode the
+batch appender uses) and writes them as one ``codes_v{N}`` shard.
+Because the search here is an EXTERNAL reader of the shard dir (unlike
+the dedup stream, which reads its own shards only inside its write
+step), compaction runs with deferred cleanup: shards covered by the
+NEWEST compact root survive until the round after, so a search that
+listed the state just before a compaction published still finds every
+root it planned to read.
 
 Search (:func:`knn_ivfpq_stream_index`) delegates to
 ``knn_ivf_pq_from_index`` with the committed shards as ``extra_index``
@@ -102,55 +98,32 @@ def streaming_ivfpq_ingest(
     under ``{index_path}/stream_shards``. Returns the StreamingQuery;
     search with :func:`knn_ivfpq_stream_index`.
 
-    Exactly-once: overwrite-idempotent ``_SUCCESS``-published shards,
-    committed batch ids skip wholesale, the shard dir is bound to its
-    checkpoint for life (a fresh checkpoint against existing shards
-    would replay batch ids and silently drop real batches) AND to the
-    model's content fingerprint (see module docstring). Id uniqueness
-    across the base build and the stream is the caller's ingest
-    contract, as everywhere else in the engine."""
+    Exactly-once: the shard dir is an append-shard family of
+    ``streaming/state.py`` (its module docstring gives the protocol),
+    bound to its checkpoint for life AND to the model's content
+    fingerprint (see module docstring). Id uniqueness across the base
+    build and the stream is the caller's ingest contract, as everywhere
+    else in the engine."""
     from ..operators.similarity import _ivfpq_index
-    from .state import (
-        bind_state_to_checkpoint,
-        committed_index_state,
-        compact_index_shards,
-        drain_batch,
-    )
+    from .state import run_index_shards
 
-    spark = stream.sparkSession
     shard_root = f"{index_path}/{_SHARD_DIR}"
-    centroids, books = _check_or_bind_model(spark, index_path)
-    bind_state_to_checkpoint(spark, shard_root, checkpoint_dir)
+    centroids, books = _check_or_bind_model(stream.sparkSession, index_path)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bspark = batch_df.sparkSession
-        _check_or_bind_model(bspark, index_path)
-        compact_path, hi, versions = committed_index_state(
-            bspark, shard_root, _SHARD_PFX
-        )
-        if batch_id <= hi or batch_id in versions:
-            drain_batch(batch_df)  # redelivery: this batch's shard is durable
-            return
+    def write(batch_df: DataFrame, batch_id: int, _) -> None:
         _, c_indexed = _ivfpq_index(
             batch_df, id_col, vec_col, centroids, books, dropped_acc
         )
         c_indexed.write.mode("overwrite").parquet(
             f"{shard_root}/{_SHARD_PFX}{batch_id}"
         )
-        # compaction AFTER the shard commit (publish-then-cleanup), with
-        # DEFERRED covered-shard deletion: external searches that listed
-        # the dir just before this publish keep their planned roots on
-        # disk until the next compaction round
-        if compact_every and len(versions) + 1 >= compact_every:
-            compact_index_shards(
-                bspark, shard_root, _SHARD_PFX, defer_cleanup=True
-            )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    # deferred cleanup: external searches that listed the dir just
+    # before a compaction keep their planned roots until the next one
+    return run_index_shards(
+        stream, shard_root, checkpoint_dir, _SHARD_PFX, write,
+        compact_every, defer_cleanup=True,
+        check=lambda spark: _check_or_bind_model(spark, index_path),
     )
 
 
@@ -175,17 +148,11 @@ def knn_ivfpq_stream_index(
     supplies raw vectors for the broadcast-shortlist rerank, base and
     stream vectors alike."""
     from ..operators.similarity import knn_ivf_pq_from_index
-    from .state import committed_index_state
+    from .state import index_roots
 
     spark = queries.sparkSession
     _check_or_bind_model(spark, index_path)
-
-    compact_path, _, live = committed_index_state(
-        spark, f"{index_path}/{_SHARD_DIR}", _SHARD_PFX
-    )
-    roots = ([compact_path] if compact_path else []) + [
-        f"{index_path}/{_SHARD_DIR}/{_SHARD_PFX}{v}" for v in live
-    ]
+    _, _, roots = index_roots(spark, f"{index_path}/{_SHARD_DIR}", _SHARD_PFX)
     extra = spark.read.parquet(*roots) if roots else None
     return knn_ivf_pq_from_index(
         queries, corpus, index_path,

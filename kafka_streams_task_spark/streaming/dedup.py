@@ -65,104 +65,6 @@ def streaming_dedup_watermarked(
     )
 
 
-def _index_dedup_stream(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    id_col: str,
-    keep_cols: list,
-    prefix: str,
-    state_fn,
-    pairs_fn,
-    compact_every: int | None = None,
-):
-    """The exactly-once commit choreography of the index-backed
-    streaming dedup (:func:`streaming_dedup_near`).
-
-    Per micro-batch: redelivery skip on the committed-shard set →
-    pin the batch and its ``state_fn`` output (the bands) → probe
-    ``pairs_fn(new_state, committed index)`` for flagged
-    ``(id_a, id_b, a_is_new, b_is_new)`` candidates with ``id_a < id_b``
-    → drop policy (drop the new side of mixed pairs, ``id_b`` of
-    both-new pairs, so the smaller id survives) → ALSO drop ids already
-    committed to the index (ingest ids are unique: a re-crawl of the
-    SAME id is a no-op, and changed content under one id is an update
-    for the merge tier, not an ingest insert) → kept FIRST (overwrite:
-    redelivery-idempotent), then the batch's append-only state shard.
-
-    ``compact_every=K`` merges the committed shards into one compact
-    root (``state.compact_index_shards``) whenever K live shards have
-    accumulated, bounding the per-batch index read at 1 root + <K
-    shards. Without it every batch reads one parquet root PER
-    ever-committed batch — listing and scan setup grow linearly, O(N²)
-    cumulative over a long-lived stream (advice r9) — acceptable only
-    for scheduled availableNow runs with few batches per run.
-    """
-    from .state import (
-        bind_state_to_checkpoint,
-        committed_index_state,
-        compact_index_shards,
-        drain_batch,
-    )
-
-    bind_state_to_checkpoint(stream.sparkSession, index_dir, checkpoint_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        compact_path, hi, versions = committed_index_state(
-            spark, index_dir, prefix
-        )
-        if batch_id <= hi or batch_id in versions:
-            # redelivery: kept output + shard for this batch are durable
-            drain_batch(batch_df)
-            return
-
-        batch = batch_df.select(*keep_cols).localCheckpoint(eager=True)
-        new_state = state_fn(batch).localCheckpoint(eager=True)
-        roots = ([compact_path] if compact_path else []) + [
-            f"{index_dir}/{prefix}{v}" for v in versions
-        ]
-        if roots:
-            index = spark.read.parquet(*roots)
-        else:
-            # id-type-agnostic empty bootstrap (string ids etc. work)
-            index = new_state.limit(0)
-        pairs = pairs_fn(new_state, index).localCheckpoint(eager=True)
-        drop_old = pairs.filter(
-            F.col("a_is_new") != F.col("b_is_new")
-        ).select(
-            F.when(F.col("a_is_new"), F.col("id_a")).otherwise(F.col("id_b")).alias(id_col)
-        )
-        drop_new = pairs.filter(
-            F.col("a_is_new") & F.col("b_is_new")
-        ).select(F.col("id_b").alias(id_col))
-        already = batch.select(id_col).join(
-            index.select(id_col).distinct(), on=id_col, how="left_semi"
-        )
-        kept = batch.join(
-            drop_old.unionByName(drop_new).unionByName(already).distinct(),
-            on=id_col,
-            how="left_anti",
-        ).localCheckpoint(eager=True)
-
-        # kept FIRST (overwrite: redelivery-idempotent), then the shard
-        kept.write.mode("overwrite").parquet(f"{index_dir}/kept/batch_id={batch_id}")
-        new_state.join(kept.select(id_col), on=id_col, how="left_semi").write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/{prefix}{batch_id}")
-        # compaction AFTER this batch's shard commit: a crash anywhere
-        # in it leaves the committed view intact (publish-then-cleanup)
-        if compact_every and len(versions) + 1 >= compact_every:
-            compact_index_shards(spark, index_dir, prefix)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def streaming_dedup_near(
     stream: DataFrame,
     index_dir: str,
@@ -193,54 +95,72 @@ def streaming_dedup_near(
     ingest, over-dropping near-duplicates is the safe direction, and the
     at-rest corpus can always re-run the exact batch operator.
 
-    Exactly-once under foreachBatch's at-least-once contract, via
-    APPEND-ONLY per-batch index shards (the versioned-state family of
-    ``decoupled.rollup_via_foreach_batch``, adapted so per-batch WRITE I/O is
-    shard-sized — a 100 TB index is never rewritten): the live index is
-    the union of committed (``_SUCCESS``-marked) ``bands_v{N}`` shards,
-    each holding only batch N's surviving bands. A batch writes its kept
-    docs FIRST (``kept/batch_id={N}``, overwrite-idempotent), then its
-    shard; a redelivered batch whose shard is committed skips wholesale,
-    and a crash between the two writes recomputes both from the
-    still-unchanged committed shard set. Uncommitted (crashed) shards
-    are never read — the index is assembled from explicit committed
-    paths, not directory globbing.
-
-    The index directory is BOUND to its checkpoint directory for life
-    (``state.bind_state_to_checkpoint``): redelivery detection keys on
-    the checkpoint's batch_id sequence, so feeding an existing index from
-    a fresh checkpoint (whose batch ids restart at 0) would silently
-    mistake real batches for redeliveries — that misuse now raises up
-    front instead. Per-batch WRITE I/O is shard-sized (the index is
-    never rewritten); the probe read scans the committed shards (parquet
-    min/max and Spark's runtime bloom-filter join prune what they can —
-    an exact O(shard) probe is not expressible because the hit set is
-    only known at runtime).
+    Exactly-once: the index is an append-shard family of
+    ``streaming/state.py`` (its module docstring gives the protocol),
+    bound to its checkpoint for life. The live index is the union of
+    committed ``bands_v{N}`` shards, each holding only batch N's
+    surviving bands, so per-batch WRITE I/O is shard-sized (a 100 TB
+    index is never rewritten). A batch writes its kept docs FIRST
+    (``kept/batch_id={N}``, overwrite-idempotent), then its shard; a
+    crash between the two writes recomputes both from the unchanged
+    committed shard set. The probe read scans the committed shards
+    (parquet min/max and Spark's runtime bloom-filter join prune what
+    they can — an exact O(shard) probe is not expressible because the
+    hit set is only known at runtime).
 
     Returns the StreamingQuery. Kept documents accumulate under
     ``{index_dir}/kept/batch_id={N}``; the live index is the union of
     committed ``{index_dir}/bands_v{N}`` shards (the
     ``minhash_band_table`` layout, reusable by batch
-    ``minhash_lsh_candidates_incremental`` runs); every
+    ``minhash_lsh_candidates_incremental`` runs). Every
     ``compact_every`` committed shards (default 32; None disables) the
-    shards merge into one ``bands_vcompact_{N}`` root so per-batch index
-    reads stay bounded over a long-lived stream.
+    shards merge into one ``bands_vcompact_{N}`` root, so the per-batch
+    index read stays at 1 root + fewer than ``compact_every`` shards;
+    without it every batch reads one root PER ever-committed batch —
+    O(N²) listing and scan setup over a long-lived stream (advice r9).
     """
     from ..operators.dedup import incremental_pairs_from_bands, minhash_band_table
+    from .state import run_index_shards
 
-    return _index_dedup_stream(
-        stream,
-        index_dir,
-        checkpoint_dir,
-        id_col=id_col,
-        keep_cols=[id_col, text_col],
-        prefix="bands_v",
-        state_fn=lambda batch: minhash_band_table(
+    def write(batch_df: DataFrame, batch_id: int, roots: list) -> None:
+        spark = batch_df.sparkSession
+        batch = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
+        new_bands = minhash_band_table(
             batch, text_col, id_col, num_hashes, bands,
             shingle_n=shingle_n, seed=seed,
-        ),
-        pairs_fn=lambda new_bands, index: incremental_pairs_from_bands(
+        ).localCheckpoint(eager=True)
+        if roots:
+            index = spark.read.parquet(*roots)
+        else:
+            # id-type-agnostic empty bootstrap (string ids etc. work)
+            index = new_bands.limit(0)
+        # flagged (id_a, id_b, a_is_new, b_is_new) candidates, id_a < id_b
+        pairs = incremental_pairs_from_bands(
             new_bands, index, id_col=id_col, max_bucket=max_bucket
-        ),
-        compact_every=compact_every,
+        ).localCheckpoint(eager=True)
+        drop_old = pairs.filter(
+            F.col("a_is_new") != F.col("b_is_new")
+        ).select(
+            F.when(F.col("a_is_new"), F.col("id_a")).otherwise(F.col("id_b")).alias(id_col)
+        )
+        drop_new = pairs.filter(
+            F.col("a_is_new") & F.col("b_is_new")
+        ).select(F.col("id_b").alias(id_col))
+        already = batch.select(id_col).join(
+            index.select(id_col).distinct(), on=id_col, how="left_semi"
+        )
+        kept = batch.join(
+            drop_old.unionByName(drop_new).unionByName(already).distinct(),
+            on=id_col,
+            how="left_anti",
+        ).localCheckpoint(eager=True)
+
+        # kept FIRST (overwrite: redelivery-idempotent), then the shard
+        kept.write.mode("overwrite").parquet(f"{index_dir}/kept/batch_id={batch_id}")
+        new_bands.join(kept.select(id_col), on=id_col, how="left_semi").write.mode(
+            "overwrite"
+        ).parquet(f"{index_dir}/bands_v{batch_id}")
+
+    return run_index_shards(
+        stream, index_dir, checkpoint_dir, "bands_v", write, compact_every
     )

@@ -8,11 +8,9 @@ version and the monitoring row should appear with it. This module is
 that loop:
 
 - :func:`streaming_snapshot_drift` — foreachBatch sink: commit each
-  microbatch as the next snapshot version (exactly-once under
-  foreachBatch's at-least-once contract via the batch-id tag stamped
-  INTO the manifest — it publishes with the same atomic pointer move
-  as the data, so redelivery detection has no crash window), then
-  write the one-row drift report of (predecessor -> new version) to a
+  microbatch as the next snapshot version (exactly-once as a
+  snapshot-tag family of ``streaming/state.py``), then write the
+  one-row drift report of (predecessor -> new version) to a
   batch-id-keyed directory with overwrite (idempotent on redelivery;
   a crash between commit and report is healed by recomputing the
   report from the committed, immutable versions).
@@ -28,7 +26,7 @@ Scale shape: the per-batch cost is ``corpus_drift_report`` between the
 two versions — two token-count aggregations and a vocabulary-sized
 join; manifests are KB-sized JSON reads. Nothing here adds state to
 the stream itself (the snapshot table IS the state), so the stream
-restarts from any checkpoint with no rebuild.
+restarts from its checkpoint with no rebuild.
 
 Reference provenance: no analogue in idavkaev/kafka-streams-task —
 beyond-reference training-data mandate (corpus versioning family).
@@ -41,15 +39,12 @@ from pyspark.sql import functions as F
 
 from ..operators.drift import snapshot_drift
 from ..operators.snapshots import (
-    _latest_version,
     _vname,
     _VERSIONS_DIR,
     read_json_file,
-    snapshot_latest_tag,
     snapshot_versions,
-    snapshot_write,
 )
-from .state import bind_state_to_checkpoint, drain_batch
+from .state import run_tagged_snapshots
 
 __all__ = [
     "snapshot_drift_history",
@@ -99,22 +94,6 @@ def snapshot_drift_history(
     return out
 
 
-def _version_with_tag(spark: SparkSession, path: str, tag: str) -> int | None:
-    """The COMMITTED-LINEAGE version stamped with ``tag`` (None if
-    absent) — the redelivery probe, bounded by the number of committed
-    versions. Walks the parent lineage, never raw version numbers
-    (second-review catch): a tagged ORPHAN from a pre-pointer crash
-    sitting below a later commit would otherwise satisfy the probe,
-    the redelivered batch's rows would never be committed, and the
-    drift report would read the orphan's partial data."""
-    from ..operators.snapshots import _lineage_iter
-
-    for m in _lineage_iter(spark, path):
-        if m.get("tag") == tag:
-            return int(m["version"])
-    return None
-
-
 def _predecessor(spark: SparkSession, path: str, version: int) -> int | None:
     """The committed predecessor of ``version`` — its manifest's
     ``parent`` pointer (r11, review catch: a plain version-minus-one
@@ -162,57 +141,29 @@ def streaming_snapshot_drift(
     the predecessor version) to ``drift_dir`` — exactly-once on both
     surfaces:
 
-    - the COMMIT dedupes on the ``{tag_prefix}-{batch_id}`` manifest
-      tag (atomic with the version pointer, so a redelivered batch is
-      recognized even after a crash landing between commit and report);
+    - the COMMIT is a snapshot-tag family of ``streaming/state.py``
+      (its module docstring gives the protocol), tagged
+      ``{tag_prefix}-{batch_id}``;
     - the REPORT writes to ``drift_dir/batch_id={batch_id}`` with
-      overwrite (redelivery rewrites the same bytes; a commit-then-
-      crash gap is healed by recomputing from the committed versions,
-      which are immutable).
+      overwrite. A redelivered batch rewrites the same bytes from the
+      committed, immutable versions, which heals a crash between the
+      commit and the report.
 
     The first batch on an empty table commits version 1 and writes no
     report (no predecessor); empty batches (availableNow reruns on a
-    quiet source) commit nothing. Redelivery detection pays the
-    O(versions) manifest walk only on the FIRST batch after a
-    (re)start — the only batch that can be a redelivery — and the
-    O(1) latest-tag shortcut afterwards (the
-    ``commit_batch_to_snapshot`` discipline; this sink needs the
-    VERSION back, not just a skip, to heal a commit-then-crash report
-    gap, hence its own probe). Returns the started StreamingQuery
+    quiet source) commit nothing. Returns the started StreamingQuery
     (``availableNow`` trigger — rerun per ingest cycle, the crawl
     cadence)."""
-    bind_state_to_checkpoint(stream.sparkSession, table_path, checkpoint_dir)
-    first_after_start = [True]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"{tag_prefix}-{batch_id}"
-        deep = first_after_start[0]
-        first_after_start[0] = False
-        new_v = None
-        if deep:
-            new_v = _version_with_tag(spark, table_path, tag)
-        elif snapshot_latest_tag(spark, table_path) == tag:
-            new_v = _latest_version(spark, table_path)
-        if new_v is None:
-            if batch_df.isEmpty():
-                return
-            new_v = snapshot_write(
-                spark, batch_df, table_path, mode="append", tag=tag
-            )
-        else:
-            drain_batch(batch_df)  # redelivery: the snapshot is committed
+    def report(spark: SparkSession, batch_id: int, new_v: int) -> None:
         prev = _predecessor(spark, table_path, new_v)
         if prev is not None:
             _tagged_report(spark, table_path, prev, new_v, text_col).write.mode(
                 "overwrite"
             ).parquet(f"{drift_dir}/batch_id={batch_id}")
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_tagged_snapshots(
+        stream, table_path, checkpoint_dir, tag_prefix, after=report
     )
 
 

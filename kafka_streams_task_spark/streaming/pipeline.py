@@ -14,15 +14,9 @@ quality-gated versions.
 Exactly-once without an idempotent sink format: foreachBatch is
 at-least-once, and a blind snapshot append would double-ingest on
 redelivery (or, under the r9 table-level uniqueness gate, crash the
-query). Instead each batch's commit is stamped with ``tag =
-"batch-<id>"`` in the version manifest — the manifest is published by
-the same atomic pointer move as the data, so the tag is visible iff
-the batch committed. Redelivery checks the latest committed tag
-(:func:`snapshot_latest_tag` — sequential batch ids make it
-sufficient) and skips. A crash mid-write leaves an orphan (no tag reachable) and the
-redelivered batch rewrites cleanly; a crash after commit leaves the
-tag and the redelivered batch is a no-op. The checkpoint/table pairing
-is enforced by ``bind_state_to_checkpoint`` as in every durable sink.
+query). Each batch's commit is instead stamped with ``tag =
+"batch-<id>"`` in the version manifest, as a snapshot-tag family of
+``streaming/state.py``, whose module docstring gives the protocol.
 
 Reference parity: no analogue (the reference engine has no file
 sources, filters, or storage versioning) — beyond-reference
@@ -33,14 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.snapshots import (
-    snapshot_has_tag,
-    snapshot_latest_tag,
-    snapshot_write,
-)
 from ..sources.warc import _records_from_files, warc_to_documents
 from .dsir import streaming_dsir_filter
-from .state import bind_state_to_checkpoint
+from .state import run_batch, run_tagged_snapshots, tagged_snapshot_steps
 
 
 def commit_batch_to_snapshot(
@@ -55,43 +44,23 @@ def commit_batch_to_snapshot(
     """Idempotently commit one micro-batch frame as an ``append``
     snapshot version tagged ``batch-<id>``; returns the new version, or
     None when the batch was skipped — already committed (foreachBatch
-    redelivery) or empty. Factored out of the foreachBatch closure so
-    the redelivery contract is directly unit-testable.
-
-    Redelivery detection compares against :func:`snapshot_latest_tag`
-    (a few manifest reads), not a full version scan — sequential batch
-    ids make the latest tag sufficient (review r9: the O(versions) scan
-    per batch summed to O(N²) manifest reads over a stream's life) —
-    UNLESS ``deep_check`` is set, which scans every committed version
-    via :func:`snapshot_has_tag`. The stream passes ``deep_check`` for
-    the FIRST batch after a (re)start, the only batch that can be a
-    redelivery: the latest-tag shortcut assumes the stream is the
-    table's only tagged writer, and an ops commit with its own tag
-    landing between the batch's snapshot commit and its checkpoint ack
-    would hide the batch's tag from the shortcut and double-ingest it
-    (advice r9). One O(versions) manifest walk per restart, O(1) per
-    steady-state batch.
+    redelivery) or empty. It runs the stream's own commit step
+    (``state.run_batch`` over ``state.tagged_snapshot_steps``) for one
+    frame: the latest-tag shortcut, or with ``deep_check`` the walk over
+    every committed version that the stream takes for its FIRST batch
+    after a (re)start, the only batch that can be a redelivery. The
+    shortcut assumes no other tagged writer: an ops commit with its own
+    tag landing between the batch's snapshot commit and its checkpoint
+    ack would hide the batch's tag from it (advice r9).
     Empty batches (availableNow reruns on a quiet source) commit
     NOTHING — no empty-version spam inflating the manifest walk
     (review r9); the emptiness probe stops at the first row, so
     non-empty batches pay one short partial pass."""
-    tag = f"batch-{batch_id}"
-    if deep_check:
-        if snapshot_has_tag(spark, table_path, tag):
-            return None
-    elif snapshot_latest_tag(spark, table_path) == tag:
-        return None
-    if df.isEmpty():
-        return None
-    return snapshot_write(
-        spark,
-        df,
-        table_path,
-        mode="append",
-        expectations=expectations,
-        unique_keys=unique_keys,
-        tag=tag,
+    probe, write = tagged_snapshot_steps(
+        table_path, "batch", deep_check,
+        expectations=expectations, unique_keys=unique_keys,
     )
+    return run_batch(df, batch_id, write, probe)
 
 
 def streaming_crawl_to_snapshot(
@@ -134,7 +103,6 @@ def streaming_crawl_to_snapshot(
         raise ValueError(
             "weights must be a batch DataFrame (a fitted model), not a stream"
         )
-    bind_state_to_checkpoint(spark, table_path, checkpoint_dir)
     kept = set(record_types) | {"_malformed"} if record_types else None
 
     reader = spark.readStream.format("binaryFile").schema(
@@ -144,12 +112,7 @@ def streaming_crawl_to_snapshot(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     files = reader.load(path).select("path")
 
-    # only the FIRST batch after a (re)start can be a foreachBatch
-    # redelivery — deep-scan the manifest walk for that one, use the
-    # O(1) latest-tag shortcut for every steady-state batch
-    first_after_start = [True]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def documents(batch_df: DataFrame) -> DataFrame:
         records = _records_from_files(
             batch_df,
             strip_http_headers=True,
@@ -157,17 +120,9 @@ def streaming_crawl_to_snapshot(
             max_payload_bytes=max_payload_bytes,
         )
         docs = warc_to_documents(records, min_chars=min_chars)
-        filtered = streaming_dsir_filter(docs, weights, threshold)
-        commit_batch_to_snapshot(
-            spark, filtered, table_path, batch_id,
-            expectations=expectations, unique_keys=unique_keys,
-            deep_check=first_after_start[0],
-        )
-        first_after_start[0] = False
+        return streaming_dsir_filter(docs, weights, threshold)
 
-    return (
-        files.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_tagged_snapshots(
+        files, table_path, checkpoint_dir, "batch", prepare=documents,
+        expectations=expectations, unique_keys=unique_keys,
     )

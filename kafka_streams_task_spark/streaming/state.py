@@ -1,50 +1,71 @@
-"""Durable versioned state for the foreachBatch sinks: the one
-exactly-once protocol every cumulative-state family runs through.
+"""The one exactly-once protocol for the package's foreachBatch sinks.
 
 foreachBatch is at-least-once. After a crash, Spark re-runs the newest
 batch the checkpoint has not marked committed, with the same
 ``batch_id`` and the same input (a micro-batch is a deterministic batch
-job). Exactly-once therefore needs an idempotent sink keyed on
-``batch_id``. :func:`run_versioned_state` is that sink. It serves the
-six sketch families in ``sketch.py`` (MG, CMS, DDSketch, HLL, theta,
-theta sample), the mixing count table (``mixing.py``) and the
-foreachBatch weather rollup (``decoupled.py``).
-Each family supplies only its merge step, its parameters and, if it
-serves a derived table, a publish step. The rules:
+job). Exactly-once therefore needs a sink that is idempotent on
+``batch_id``. :func:`run_foreach_batch` is the one place in the package
+where a foreachBatch query starts. It binds every output dir to the
+checkpoint and starts the ``availableNow`` query. Each batch runs
+through :func:`run_batch`, which asks the family's probe whether the
+batch's effect is already durable: if so, it drains the batch and runs
+the family's heal step, if any; if not, it runs the family's write
+step. The rules every family shares:
 
-- **Commit marker.** Batch N writes the full cumulative state to
-  ``{state_dir}/{pfx}N`` with ``mode("overwrite")``. A version counts as
-  committed only once parquet's ``_SUCCESS`` marker exists
-  (:func:`committed_versions`). A crash mid-write leaves no marker, so the
-  retry merges again from the previous version and overwrites the partial
-  output. Readers resolve the newest committed version
-  (:func:`read_latest_state`).
-- **Redelivery.** A batch is a redelivery when ``batch_id`` is at most the
-  newest committed version. Its effect is already durable, so the merge
-  is skipped, but the batch still runs (:func:`drain_batch`).
 - **Checkpoint binding.** Redelivery keys on the checkpoint's batch-id
-  sequence, which restarts at 0 under a fresh checkpoint. The state dir
-  is bound to one checkpoint for life (:func:`bind_state_to_checkpoint`),
-  and any other checkpoint is refused at query start.
-- **Parameter meta.** Parameters that give the state its meaning (a
-  sketch's width, the rollup's geohash precision) persist beside it in a
-  one-row parquet dir, written on first contact and re-checked at query
-  start, on every batch and on every read that takes a parameter
-  (:func:`check_meta`). A mismatch raises instead of merging or reading
-  under the wrong parameters.
-- **Publish.** An optional step that derives a serving table from the
-  state. It runs after each commit and again on a redelivery, which
-  covers a crash between the commit and the publish.
-- **Retention.** After each commit the newest two versions are kept
-  (:func:`prune_state_versions`): the new one, and the one a concurrent
-  reader may have resolved just before it.
+  sequence, which restarts at 0 under a fresh checkpoint. Each output
+  dir is bound for life to the directory its first checkpoint names
+  (:func:`bind_state_to_checkpoint`), and any other checkpoint is
+  refused at query start.
+- **Drain.** A batch whose write is skipped still runs
+  (:func:`drain_batch`): over a stateful upstream, Spark refuses to
+  commit a micro-batch whose plan never ran.
+- **Commit marker.** A parquet dir counts as written only once its
+  ``_SUCCESS`` marker exists. A crash mid-write leaves no marker, and
+  the retry overwrites the partial output.
 
-A state dir has one writer: the query bound to it. Every probe goes
-through the Hadoop FS API, so state dirs on any reachable scheme
-(file://, hdfs://, s3a://) work. The near-dedup and ANN indexes
-(``dedup.py``, ``ann.py``) reuse the commit marker and the binding, but
-append per-batch shards instead of rewriting one state, and merge them
-with :func:`compact_index_shards`.
+Each probe shape is written once, here:
+
+- **Versioned state** (:func:`run_versioned_state`: the six sketch
+  families in ``sketch.py``, the mixing count table in ``mixing.py``
+  and the foreachBatch weather rollup in ``decoupled.py``). Batch N
+  writes the full cumulative state to ``{state_dir}/{pfx}N``, and
+  readers resolve the newest committed version
+  (:func:`read_latest_state`). The probe: ``batch_id`` is at most the
+  newest committed version. Parameters that give the state its meaning
+  (a sketch's width, the rollup's precision) persist beside it and are
+  re-checked at start, on every batch and on every read that takes one
+  (:func:`check_meta`). An optional publish step derives a serving
+  table after each commit, and is the heal step of a redelivery. After
+  each commit the newest two versions are kept
+  (:func:`prune_state_versions`).
+- **Append shards** (:func:`run_index_shards`: the near-dedup index in
+  ``dedup.py`` and the IVF-PQ stream index in ``ann.py``). Batch N
+  appends only its own shard ``{pfx}N``, so write I/O stays
+  shard-sized. The probe: N is covered by the newest compact root or is
+  a committed live shard (:func:`committed_index_state`). Every K live
+  shards are merged into one compact root
+  (:func:`compact_index_shards`); readers scan the compact root plus
+  the live shards (:func:`index_roots`).
+- **Snapshot tags** (:func:`run_tagged_snapshots`: the crawl capstone
+  in ``pipeline.py`` and the drift monitor in ``drift.py``). Batch N
+  commits one snapshot version tagged ``{prefix}-N``, and the tag is
+  published by the same pointer move as the data. The probe
+  (``operators/snapshots.py``'s :func:`committed_tag_version`) returns
+  the committed version that carries the tag. Only the first batch
+  after a (re)start can be a redelivery, so that batch walks the whole
+  committed lineage; later batches look only at the newest tagged
+  version. An empty batch commits nothing. The probe and write are
+  built once (:func:`tagged_snapshot_steps`); the capstone's
+  one-batch ``commit_batch_to_snapshot`` runs the same two.
+- **``batch=<id>`` overwrite** (``sources/files.py`` and
+  ``sources/warc.py``). Batch N overwrites its own ``batch=N``
+  partition dirs, so a redelivery rewrites the same bytes and needs no
+  probe.
+
+Each output dir has one writer: the query bound to it. Every probe goes
+through the Hadoop FS API, so dirs on any reachable scheme (file://,
+hdfs://, s3a://) work.
 """
 
 from __future__ import annotations
@@ -53,6 +74,8 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..operators.snapshots import committed_tag_version, snapshot_write
 
 
 @dataclass(frozen=True)
@@ -110,13 +133,30 @@ def committed_versions(spark: SparkSession, root_dir: str, pfx: str) -> list[int
     return versions
 
 
+def _qualified(spark: SparkSession, path: str) -> str:
+    """``path`` as the absolute URI Hadoop (and so Spark) resolves it to,
+    spelled one way: ``file:/x`` and ``/x`` qualify to ``file:/x`` and
+    ``file:///x``, so the URI is rebuilt as ``scheme://authority/path``."""
+    Path, fs = _fs(spark, path)
+    uri = fs.makeQualified(Path(path)).toUri()
+    return f"{uri.getScheme()}://{uri.getAuthority() or ''}{uri.getPath()}"
+
+
 def bind_state_to_checkpoint(spark: SparkSession, state_dir: str, checkpoint_dir: str) -> None:
     """Pair a durable state directory with ONE streaming checkpoint for
     life. Writes a ``_checkpoint`` marker on first use; raises if the dir
     is already bound to a different checkpoint. Restarts on the SAME
     checkpoint pass, which is the supported recovery path. See the module
-    docstring for why a fresh checkpoint must be refused."""
+    docstring for why a fresh checkpoint must be refused.
+
+    The marker holds the checkpoint's Hadoop-qualified URI, and both
+    sides compare qualified: Spark resolves a relative
+    ``checkpointLocation`` against the JVM's working directory, so
+    ``ck`` from two directories names two checkpoints, while ``/x/ck``,
+    ``/x/ck/`` and ``file:/x/ck`` name one. A marker holding a relative
+    path names no knowable directory and is refused."""
     Path, fs = _fs(spark, state_dir)
+    want = _qualified(spark, checkpoint_dir)
     marker = Path(state_dir, "_checkpoint")
     if fs.exists(marker):
         stream = fs.open(marker)
@@ -124,10 +164,18 @@ def bind_state_to_checkpoint(spark: SparkSession, state_dir: str, checkpoint_dir
             bound = bytes(stream.readAllBytes()).decode("utf-8").strip()
         finally:
             stream.close()
-        if bound != checkpoint_dir:
+        if not Path(bound).isAbsolute():
+            raise ValueError(
+                f"state dir {state_dir!r} is bound to checkpoint {bound!r}, "
+                "a relative path: the directory it names depends on the "
+                "working directory of the JVM that bound it. Use a fresh "
+                "state dir, or rewrite its _checkpoint marker with the "
+                "checkpoint's absolute URI."
+            )
+        if _qualified(spark, bound) != want:
             raise ValueError(
                 f"state dir {state_dir!r} is bound to checkpoint {bound!r}; "
-                f"starting it under {checkpoint_dir!r} would replay batch ids "
+                f"starting it under {want!r} would replay batch ids "
                 "and silently skip real batches. Use the original checkpoint "
                 "dir to resume, or a fresh state dir for a new ingest run."
             )
@@ -135,7 +183,7 @@ def bind_state_to_checkpoint(spark: SparkSession, state_dir: str, checkpoint_dir
     fs.mkdirs(Path(state_dir))
     out = fs.create(marker, True)
     try:
-        out.write(bytearray(checkpoint_dir.encode("utf-8")))
+        out.write(bytearray(want.encode("utf-8")))
     finally:
         out.close()
 
@@ -212,6 +260,55 @@ def drain_batch(batch_df: DataFrame) -> None:
     batch_df.write.format("noop").mode("overwrite").save()
 
 
+def run_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    write: Callable,
+    probe: Callable | None = None,
+    heal: Callable | None = None,
+):
+    """One micro-batch under the module's protocol.
+    ``probe(spark, batch_id)`` returns ``(committed, view)``: whether the
+    batch's effect is already durable, and whatever the family read to
+    decide it. A committed batch is drained, then
+    ``heal(spark, batch_id, view)`` runs, and None is returned; any
+    other batch returns ``write(batch_df, batch_id, view)``. Without a
+    probe every batch is written."""
+    spark = batch_df.sparkSession
+    committed, view = probe(spark, batch_id) if probe else (False, None)
+    if not committed:
+        return write(batch_df, batch_id, view)
+    drain_batch(batch_df)
+    if heal is not None:
+        heal(spark, batch_id, view)
+    return None
+
+
+def run_foreach_batch(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    bound_dirs: list[str],
+    write: Callable,
+    probe: Callable | None = None,
+    heal: Callable | None = None,
+):
+    """Start the ``availableNow`` foreachBatch query that runs each batch
+    through :func:`run_batch`, after binding each of ``bound_dirs`` to
+    ``checkpoint_dir``. Returns the StreamingQuery."""
+    for d in bound_dirs:
+        bind_state_to_checkpoint(stream.sparkSession, d, checkpoint_dir)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        run_batch(batch_df, batch_id, write, probe, heal)
+
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def run_versioned_state(
     stream: DataFrame,
     state_dir: str,
@@ -221,46 +318,40 @@ def run_versioned_state(
     params: dict | None = None,
     publish: Callable[[DataFrame], None] | None = None,
 ):
-    """Start the ``availableNow`` foreachBatch query that maintains
-    ``layout``'s state at ``state_dir`` under the module's protocol.
-    ``merge(batch_df, prev)`` returns the new cumulative state from the
-    micro-batch and the newest committed state (None before the first
-    commit). ``params`` is the meta, checked at start and on every
-    batch. ``publish(state)`` runs after each commit and on each
-    redelivery. Returns the StreamingQuery."""
+    """Start the query that maintains ``layout``'s versioned state at
+    ``state_dir``. ``merge(batch_df, prev)`` returns the new cumulative
+    state from the micro-batch and the newest committed state (None
+    before the first commit). ``params`` is the meta, checked at start
+    and on every batch. ``publish(state)`` runs after each commit and on
+    each redelivery. Returns the StreamingQuery."""
 
     def check(spark: SparkSession) -> None:
         if layout.meta is not None:
             check_meta(spark, state_dir, layout, params or {})
 
-    bind_state_to_checkpoint(stream.sparkSession, state_dir, checkpoint_dir)
-    check(stream.sparkSession)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def probe(spark: SparkSession, batch_id: int):
         check(spark)
         versions = committed_versions(spark, state_dir, layout.pfx)
-        prev = (
-            spark.read.parquet(f"{state_dir}/{layout.pfx}{versions[-1]}")
-            if versions
-            else None
-        )
-        if versions and batch_id <= versions[-1]:
-            drain_batch(batch_df)
-            if publish is not None:
-                publish(prev)
-            return
+        if not versions:
+            return False, None
+        prev = spark.read.parquet(f"{state_dir}/{layout.pfx}{versions[-1]}")
+        return batch_id <= versions[-1], prev
+
+    def write(batch_df: DataFrame, batch_id: int, prev) -> None:
+        spark = batch_df.sparkSession
         path = f"{state_dir}/{layout.pfx}{batch_id}"
         merge(batch_df, prev).write.mode("overwrite").parquet(path)
         if publish is not None:
             publish(spark.read.parquet(path))
         prune_state_versions(spark, state_dir, layout.pfx, keep_last=2)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    def heal(spark: SparkSession, batch_id: int, prev) -> None:
+        if publish is not None:
+            publish(prev)
+
+    check(stream.sparkSession)
+    return run_foreach_batch(
+        stream, checkpoint_dir, [state_dir], write, probe, heal
     )
 
 
@@ -328,6 +419,57 @@ def committed_index_state(
     return path, compact_hi, live
 
 
+def index_roots(
+    spark: SparkSession, root_dir: str, pfx: str
+) -> tuple[int, list[int], list[str]]:
+    """``(covered_hi, live_shard_versions, roots)``: the
+    :func:`committed_index_state` view, with the compact root and the
+    live shards as one list of parquet roots to read the index from."""
+    compact_path, hi, live = committed_index_state(spark, root_dir, pfx)
+    roots = ([compact_path] if compact_path else []) + [
+        f"{root_dir}/{pfx}{v}" for v in live
+    ]
+    return hi, live, roots
+
+
+def run_index_shards(
+    stream: DataFrame,
+    root_dir: str,
+    checkpoint_dir: str,
+    pfx: str,
+    write: Callable[[DataFrame, int, list[str]], None],
+    compact_every: int | None = None,
+    defer_cleanup: bool = False,
+    check: Callable[[SparkSession], None] | None = None,
+):
+    """Start the query that appends one ``{root_dir}/{pfx}N`` shard per
+    batch. ``write(batch_df, batch_id, roots)`` writes batch N's shard
+    (and anything it must land first), given the committed index's
+    roots. ``check(spark)`` runs before every probe. Once
+    ``compact_every`` live shards have committed, they are merged after
+    the write (:func:`compact_index_shards` with ``defer_cleanup``).
+    Returns the StreamingQuery."""
+
+    def probe(spark: SparkSession, batch_id: int):
+        if check is not None:
+            check(spark)
+        hi, live, roots = index_roots(spark, root_dir, pfx)
+        return batch_id <= hi or batch_id in live, (roots, len(live))
+
+    def write_then_compact(batch_df: DataFrame, batch_id: int, view) -> None:
+        roots, n_live = view
+        write(batch_df, batch_id, roots)
+        # after the shard commit, so a crash leaves the committed view whole
+        if compact_every and n_live + 1 >= compact_every:
+            compact_index_shards(
+                batch_df.sparkSession, root_dir, pfx, defer_cleanup
+            )
+
+    return run_foreach_batch(
+        stream, checkpoint_dir, [root_dir], write_then_compact, probe
+    )
+
+
 def compact_index_shards(
     spark: SparkSession, root_dir: str, pfx: str, defer_cleanup: bool = False
 ) -> str | None:
@@ -362,12 +504,9 @@ def compact_index_shards(
     trade: each compaction rewrites the index once, so run it every K
     batches (K ~ tens) — reads stay O(K) roots, writes stay O(N/K)
     full rewrites over the stream's life."""
-    compact_path, old_hi, live = committed_index_state(spark, root_dir, pfx)
+    old_hi, live, roots = index_roots(spark, root_dir, pfx)
     if not live:
         return None
-    roots = ([compact_path] if compact_path else []) + [
-        f"{root_dir}/{pfx}{v}" for v in live
-    ]
     new_hi = live[-1]
     new_path = f"{root_dir}/{pfx}compact_{new_hi}"
     spark.read.parquet(*roots).write.mode("overwrite").parquet(new_path)
@@ -393,3 +532,68 @@ def compact_index_shards(
         if stale:
             fs.delete(st.getPath(), True)
     return new_path
+
+
+def tagged_snapshot_steps(
+    table_path: str,
+    tag_prefix: str,
+    deep_first: bool = True,
+    prepare: Callable[[DataFrame], DataFrame] | None = None,
+    after: Callable[[SparkSession, int, int], None] | None = None,
+    **snapshot_kw,
+):
+    """``(probe, write)`` of the snapshot-tag family for :func:`run_batch`.
+    The probe resolves the version tagged ``{tag_prefix}-{batch_id}``
+    (:func:`committed_tag_version`), walking the whole lineage on its
+    first call if ``deep_first`` and taking the shortcut afterwards. The
+    write commits the batch, mapped through ``prepare``, as one
+    ``append`` version with that tag (``snapshot_kw`` goes to
+    ``snapshot_write``), then runs ``after(spark, batch_id, version)``
+    and returns the version; an empty batch commits nothing and returns
+    None."""
+    deep = [deep_first]
+
+    def probe(spark: SparkSession, batch_id: int):
+        first, deep[0] = deep[0], False
+        v = committed_tag_version(
+            spark, table_path, f"{tag_prefix}-{batch_id}", first
+        )
+        return v is not None, v
+
+    def write(batch_df: DataFrame, batch_id: int, _) -> int | None:
+        df = prepare(batch_df) if prepare is not None else batch_df
+        if df.isEmpty():
+            return None
+        spark = batch_df.sparkSession
+        v = snapshot_write(
+            spark, df, table_path, mode="append",
+            tag=f"{tag_prefix}-{batch_id}", **snapshot_kw,
+        )
+        if after is not None:
+            after(spark, batch_id, v)
+        return v
+
+    return probe, write
+
+
+def run_tagged_snapshots(
+    stream: DataFrame,
+    table_path: str,
+    checkpoint_dir: str,
+    tag_prefix: str,
+    prepare: Callable[[DataFrame], DataFrame] | None = None,
+    after: Callable[[SparkSession, int, int], None] | None = None,
+    **snapshot_kw,
+):
+    """Start the query that commits each batch through
+    :func:`tagged_snapshot_steps`; ``after`` also runs on each
+    redelivery of a committed batch. The first batch after a start
+    takes the deep tag probe, since only it can be a redelivery: an
+    interleaved tagged ops commit can hide its tag from the shortcut.
+    Returns the StreamingQuery."""
+    probe, write = tagged_snapshot_steps(
+        table_path, tag_prefix, True, prepare, after, **snapshot_kw
+    )
+    return run_foreach_batch(
+        stream, checkpoint_dir, [table_path], write, probe, heal=after
+    )

@@ -234,16 +234,16 @@ def test_orphan_tag_never_satisfies_redelivery_probes(spark, tmpdir):
     """Second-review catch: a TAGGED orphan manifest must not satisfy
     any redelivery probe once a later commit advances _latest past it —
     otherwise the redelivered batch's rows are skipped, i.e. lost
-    forever. All three probes (has_tag, latest_tag, the drift sink's
-    version resolver) walk the committed lineage."""
+    forever. All three probes (has_tag, latest_tag, the snapshot-tag
+    sinks' version resolver) walk the committed lineage."""
     import json as _json
 
     from kafka_streams_task_spark.operators.snapshots import (
+        committed_tag_version,
         snapshot_has_tag,
         snapshot_latest_tag,
         snapshot_write,
     )
-    from kafka_streams_task_spark.streaming.drift import _version_with_tag
 
     path = f"{tmpdir}/tbl"
     snapshot_write(
@@ -268,7 +268,7 @@ def test_orphan_tag_never_satisfies_redelivery_probes(spark, tmpdir):
     )
     assert not snapshot_has_tag(spark, path, "batch-9")
     assert snapshot_latest_tag(spark, path) == "ops-1"
-    assert _version_with_tag(spark, path, "batch-9") is None
+    assert committed_tag_version(spark, path, "batch-9") is None
 
 
 def test_corrupt_parent_pointer_raises_not_loops(spark, tmpdir):

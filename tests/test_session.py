@@ -1,5 +1,7 @@
 """``get_spark`` sessions work outside the repository root: Python workers
-import the package through ``spark.executorEnv.PYTHONPATH``."""
+import the package through ``spark.executorEnv.PYTHONPATH``. They also
+write checkpoints through Hadoop's FileSystem API and leave the JIT pool's
+size to HotSpot."""
 
 from __future__ import annotations
 
@@ -46,3 +48,21 @@ def test_workers_import_the_package_from_another_cwd():
     assert "ModuleNotFoundError" not in proc.stderr, proc.stderr[-3000:]
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert f"GEOHASH {geohash_encode(51.51, -0.07, 4)}" in proc.stdout.splitlines()
+
+
+def test_checkpoint_manager_and_jit_pool_come_from_get_spark(spark, tmp_path):
+    """Checkpoints are written by the FileSystem-based manager, which
+    renames without forking ``readlink``, and the compiler thread count is
+    HotSpot's ergonomic choice for the host, not a pinned value."""
+    jvm = spark.sparkContext._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(f"file:{tmp_path}"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("CICompilerCount").getOrigin().toString() == "ERGONOMIC"

@@ -497,15 +497,6 @@ def text_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(bpe_cols, on="doc_id")
 
 
-def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """drop_exact_duplicates: full-schema surviving rows (lowest id per
-    distinct text), the operator a training-data pipeline actually applies."""
-    from ..operators.dedup import drop_exact_duplicates
-
-    d = load_table(spark, sf_dir, "documents")
-    return drop_exact_duplicates(d).select("doc_id", "lang", "source")
-
-
 # r13: driver slot folded into profile_agg_suite (catalog/relational.py);
 # the builder stays importable and its oracle rides the folded suite.
 _APPROX_AGG_ORACLE = """

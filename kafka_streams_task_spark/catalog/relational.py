@@ -757,367 +757,6 @@ def unpivot_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("o_orderkey", "metric", F.round(F.col("val") + 1e-05, 2).alias("val"))
 
 
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: 4-way join, agg, top-20. Deregistered in r2 to free
-    a driver-correctness slot for the CC-clustering query (the join+agg+
-    top-k shape stays driver-covered by q3/q5/q18); still exercised by
-    tests/test_catalog_extra.py."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) + 1e-05, 2).alias("revenue"))
-        .select("c_custkey", "c_name", "revenue", "n_name")
-        .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(20)
-    )
-
-
-def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape (nation-pair shipping volume): lineitem joins its
-    supplier's nation AND its order's customer's nation, grouped by the
-    (supp_nation, cust_nation, ship-year) triple. Generalized to all
-    cross-nation pairs (the stock query pins two nations). Outside the
-    50-slot driver window; DuckDB-mirrored in tests/test_relational_extra.py.
-    Scale shape: the one big join is lineitem⋈orders; supplier, customer,
-    and nation are broadcast dims (q5's pattern)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1995-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-    )
-    n1 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), s.s_nationkey == n1.s_nk)
-        .join(F.broadcast(n2), c.c_nationkey == n2.c_nk)
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) + 1e-05, 2
-            ).alias("revenue")
-        )
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape (customer order-count distribution): LEFT join so
-    zero-order customers survive with count 0, then a second aggregation
-    over the counts. The o_comment NOT LIKE filter becomes an
-    o_orderpriority exclusion (trimmed schema has no comment column).
-    Outside the driver window; DuckDB-mirrored in tests/test_relational_extra.py."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    ).select("o_custkey", "o_orderkey")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
-    )
-
-
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape (top supplier by quarterly revenue): the revenue
-    "view" is a groupBy, the scalar max is a 1-row broadcast cross join
-    (the engine's scalar-subquery idiom), and ties all surface. Outside
-    the driver window; DuckDB-mirrored in tests/test_relational_extra.py."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
-    )
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) + 1e-05, 2
-        ).alias("total_revenue")
-    )
-    top = revenue.agg(F.max("total_revenue").alias("max_revenue"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        revenue.crossJoin(F.broadcast(top))
-        .filter(F.col("total_revenue") == F.col("max_revenue"))
-        .join(F.broadcast(s), F.col("supplier_no") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
-    )
-
-
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape (small-quantity-order revenue): the correlated
-    per-part AVG subquery decorrelates to a groupBy + equi-join back on
-    partkey — no per-row subquery execution, one extra shuffle of the
-    (partkey, avg) pairs. Generalized over all parts (the stock query
-    pins one brand/container). Outside the driver window; DuckDB-mirrored
-    in tests/test_relational_extra.py."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    part_avg = li.groupBy("l_partkey").agg(
-        (F.avg("l_quantity") * 0.2).alias("qty_cut")
-    )
-    return (
-        li.join(part_avg, "l_partkey")
-        .filter(F.col("l_quantity") < F.col("qty_cut"))
-        .agg(
-            F.round((F.sum("l_extendedprice") / 7.0) + 1e-05, 2).alias("avg_yearly")
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Correlated-subquery family (TPC-H q2/q4/q11/q14/q16/q21/q22 shapes).
-#
-# The reference has no subqueries (SURVEY.md §2.7); these close the checklist's
-# subquery row. Each is written the Spark-first way: the correlated subquery is
-# decorrelated BY CONSTRUCTION into the join/aggregate Catalyst would produce —
-# EXISTS -> left_semi, NOT EXISTS / NOT IN (non-null keys) -> left_anti,
-# correlated scalar agg -> groupBy + equi-join back, uncorrelated scalar ->
-# 1-row broadcast crossJoin. Shapes needing partsupp/l_commitdate (absent from
-# the driver tables) are adapted to lineitem equivalents, noted per docstring.
-# Outside the 50-slot driver window; DuckDB-mirrored with real subquery SQL in
-# tests/test_relational_extra.py, so Spark's decorrelated plans are value-
-# checked against DuckDB's actual correlated-subquery execution.
-# ---------------------------------------------------------------------------
-
-
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 (order-priority checking): count 1996 orders per priority
-    where EXISTS a lineitem shipped after the order date (the driver
-    schema has no l_commitdate/l_receiptdate; lateness = l_shipdate >
-    o_orderdate). EXISTS decorrelates to a left_semi join whose condition
-    carries the correlated non-equi predicate — at 100 TB this is one
-    shuffle on orderkey with the semi side pruned to (l_orderkey,
-    l_shipdate)."""
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-    )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = o.join(
-        li,
-        (o.o_orderkey == li.l_orderkey) & (li.l_shipdate > o.o_orderdate),
-        "left_semi",
-    )
-    return (
-        late.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 (promotion effect): percentage of one month's revenue from
-    parts of PROMO type — conditional aggregation over a broadcast part
-    join. One row; no subquery, but the classic case-when-over-join shape
-    that pairs with Q16's NOT IN in the checklist."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-02-01 00:00:00").cast("timestamp"))
-    )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                F.lit(100.0)
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0)))
-                / F.sum(rev)
-                + 1e-07,
-                4,
-            ).alias("promo_revenue_pct")
-        )
-    )
-
-
-def q16_parts_supplier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape (parts/supplier relationship): distinct suppliers
-    per (brand, type, size) bucket, excluding a NOT IN supplier set
-    (complaint proxy: s_acctbal < 1000; the driver schema has no comment
-    field). Adapted to lineitem as the part-supplier bridge (no partsupp
-    table). NOT IN over a non-nullable key decorrelates to a left_anti
-    join; the exclusion set is tiny and broadcasts. count_distinct rides
-    the same (brand, type, size) shuffle."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    p = _t(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#5")
-        & (~F.col("p_type").startswith("PROMO"))
-        & (F.col("p_size").isin(3, 9, 14, 19, 23, 36, 45, 49))
-    )
-    excluded = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 1000).select(
-        "s_suppkey"
-    )
-    return (
-        li.join(F.broadcast(excluded), li.l_suppkey == excluded.s_suppkey, "left_anti")
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
-    )
-
-
-def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape (suppliers who kept orders waiting): for finished
-    ('F') orders, count per supplier the late lineitems (l_shipdate >
-    o_orderdate — no l_receiptdate in the driver schema) in multi-supplier
-    orders where EXISTS another supplier's line in the same order and NOT
-    EXISTS another supplier's line that was ALSO late — i.e. this supplier
-    is the sole blocker. The two correlated subqueries decorrelate to a
-    left_semi and a left_anti self-join on orderkey, each with the
-    suppkey-inequality riding the join condition; every join keys on
-    orderkey (sort-merge at scale, exchanges reusable across the three
-    reads of the joined lines), supplier names broadcast at the end."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
-        "o_orderkey", "o_orderdate"
-    )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    lines = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "l_orderkey", "l_suppkey", (F.col("l_shipdate") > F.col("o_orderdate")).alias("late")
-    )
-    l1 = lines.filter(F.col("late")).select("l_orderkey", "l_suppkey")
-    other = lines.select(
-        F.col("l_orderkey").alias("o2_orderkey"), F.col("l_suppkey").alias("o2_suppkey")
-    )
-    other_late = lines.filter(F.col("late")).select(
-        F.col("l_orderkey").alias("o3_orderkey"), F.col("l_suppkey").alias("o3_suppkey")
-    )
-    waiting = l1.join(
-        other,
-        (l1.l_orderkey == other.o2_orderkey) & (l1.l_suppkey != other.o2_suppkey),
-        "left_semi",
-    ).join(
-        other_late,
-        (l1.l_orderkey == other_late.o3_orderkey)
-        & (l1.l_suppkey != other_late.o3_suppkey),
-        "left_anti",
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        waiting.join(F.broadcast(s), waiting.l_suppkey == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.col("numwait").desc(), "s_name")
-        .limit(10)
-    )
-
-
-def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (global sales opportunity): customers with account
-    balance above the positive-balance average (uncorrelated scalar
-    subquery -> 1-row broadcast crossJoin) who have placed NO orders
-    (NOT EXISTS -> left_anti on custkey), bucketed by the last two digits
-    of the customer name (the schema has no phone country code). The
-    scalar is one partial+final aggregate; the anti join shuffles only
-    (custkey) pairs."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-    avg_bal = c.filter(F.col("c_acctbal") > 0).agg(
-        F.avg("c_acctbal").alias("avg_bal")
-    )
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
-    return (
-        c.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .select(
-            F.expr("substr(c_name, length(c_name) - 1, 2)").alias("code"),
-            "c_acctbal",
-        )
-        .groupBy("code")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum("c_acctbal") + 1e-05, 2).alias("totacctbal"),
-        )
-        .orderBy("code")
-    )
-
-
-def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape (important stock): per-part revenue HAVING sum >
-    fraction-of-global-total (uncorrelated scalar subquery). Adapted to
-    lineitem revenue (no partsupp). The global total is a second partial
-    aggregate over the SAME per-part aggregates (not a second scan),
-    broadcast back as one row — the standard two-level plan at 100 TB."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev")
-    )
-    per_part = li.groupBy("l_partkey").agg(
-        F.round(F.sum("rev") + 1e-05, 2).alias("value")
-    )
-    total = per_part.agg(F.round(F.sum("value") + 1e-05, 2).alias("total"))
-    # both sides of the HAVING comparison are pre-rounded so the threshold
-    # cannot flip on cross-engine summation-order ULP noise
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(F.col("value") > F.lit(0.001) * F.col("total"))
-        .select("l_partkey", "value")
-        .orderBy(F.col("value").desc(), "l_partkey")
-    )
-
-
-def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape (minimum-cost supplier): for each part, the EUROPE
-    supplier(s) whose lineitem price equals the per-part minimum across
-    EUROPE suppliers — the correlated MIN subquery. Adapted to lineitem
-    prices (no partsupp). Decorrelation: the region-filtered supplier dim
-    broadcasts into lineitem, the per-part MIN is a groupBy re-joined on
-    (partkey, price) — two shuffles on partkey, no per-row subquery."""
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    s = (
-        _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
-        .select("s_suppkey", "s_name", "n_name")
-    )
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_extendedprice")
-    eu_lines = li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-    min_price = eu_lines.groupBy(F.col("l_partkey").alias("m_partkey")).agg(
-        F.min("l_extendedprice").alias("min_price")
-    )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-    return (
-        eu_lines.join(
-            min_price,
-            (eu_lines.l_partkey == min_price.m_partkey)
-            & (eu_lines.l_extendedprice == min_price.min_price),
-        )
-        .join(F.broadcast(p), eu_lines.l_partkey == p.p_partkey)
-        .select(
-            "p_partkey",
-            "p_name",
-            "s_name",
-            "n_name",
-            F.round(F.col("l_extendedprice") + 1e-05, 2).alias("price"),
-        )
-        .distinct()
-        .orderBy("p_partkey", "s_name")
-    )
-
-
 def q19_revenue_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs predicates across a broadcast join.
     Registered via ``q6_q19_filter_aggregates``."""

@@ -251,11 +251,6 @@ def snapshot_write(
     return version
 
 
-def _tagged_iter(spark: SparkSession, path: str):
-    """Newest-first walk of the committed versions that carry a tag."""
-    return (m for m in _lineage_iter(spark, path) if m.get("tag") is not None)
-
-
 def committed_tag_version(
     spark: SparkSession, path: str, tag: str, deep: bool = True
 ) -> int | None:
@@ -274,27 +269,12 @@ def committed_tag_version(
     foreachBatch stream) whose batch ids are monotonic and whose tags no
     other tagged writer interleaves (a deep walk per batch sums to
     O(N²) manifest reads over a stream's life)."""
-    for m in _tagged_iter(spark, path):
-        if m["tag"] == tag:
+    for m in _lineage_iter(spark, path):
+        if m.get("tag") == tag:
             return int(m["version"])
-        if not deep:
+        if not deep and m.get("tag") is not None:
             return None
     return None
-
-
-def snapshot_has_tag(spark: SparkSession, path: str, tag: str) -> bool:
-    """Whether any version on the committed lineage was stamped with
-    ``tag`` (:func:`committed_tag_version`'s deep walk)."""
-    return committed_tag_version(spark, path, tag) is not None
-
-
-def snapshot_latest_tag(spark: SparkSession, path: str) -> str | None:
-    """The tag of the MOST RECENT committed tagged version (walking the
-    committed lineage down from ``_latest`` past any untagged manual
-    commits — orphan tags never count, as in
-    :func:`committed_tag_version`), or None on a table with no tagged
-    versions."""
-    return next((m["tag"] for m in _tagged_iter(spark, path)), None)
 
 
 def snapshot_read(

@@ -208,22 +208,14 @@ def enrich_hotels(hotels_keyed: DataFrame, by_geohash: DataFrame, how: str = "in
 
 
 def weather_hotels_pipeline(
-    weather_raw: DataFrame,
-    hotels_raw: DataFrame,
-    precision: int = GEOHASH_PRECISION,
-    how: str = "inner",
-    parse_json: bool = False,
+    weather_raw: DataFrame, hotels_raw: DataFrame, how: str = "inner"
 ) -> DataFrame:
     """The full canonical topology (WeatherHotelsApp.getStreamingAppTopology,
-    WeatherHotelsApp.java:46-66) as one lazily-planned DAG.
-
-    With ``parse_json=True`` the inputs are one-string-column frames (Kafka
-    ``value``); otherwise already-typed DataFrames.
+    WeatherHotelsApp.java:46-66) as one lazily-planned DAG over typed
+    frames; Kafka ``value`` frames go through ``parse_weather`` /
+    ``parse_hotels`` first.
     """
-    if parse_json:
-        weather_raw = parse_weather(weather_raw)
-        hotels_raw = parse_hotels(hotels_raw)
-    keyed = weather_rekey(weather_raw, precision)
+    keyed = weather_rekey(weather_raw)
     daily = weather_daily_avg(keyed)
     rollup = weather_by_geohash(daily)
     return enrich_hotels(hotels_rekey(hotels_raw), rollup, how=how)

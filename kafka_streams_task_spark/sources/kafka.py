@@ -30,43 +30,15 @@ def kafka_available(spark: SparkSession) -> bool:
         return "Failed to find data source: kafka" not in str(ex)
 
 
-def read_kafka_stream(
-    spark: SparkSession,
-    topic: str,
-    bootstrap_servers: str = "localhost:9092",
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """S1: streaming read of a topic; key/value as strings (the reference's
-    ``Consumed.with(keySerde, Serdes.String())``)."""
+def _read_kafka(reader, topic: str, bootstrap_servers: str) -> DataFrame:
+    """``reader`` subscribed to ``topic`` from its earliest offset; key and
+    value as strings (the reference's ``Consumed.with(keySerde,
+    Serdes.String())``) next to the record's topic/partition/offset/time."""
     raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return raw.select(
-        F.col("key").cast("string").alias("key"),
-        F.col("value").cast("string").alias("value"),
-        "topic",
-        "partition",
-        "offset",
-        "timestamp",
-    )
-
-
-def read_kafka_batch(
-    spark: SparkSession,
-    topic: str,
-    bootstrap_servers: str = "localhost:9092",
-) -> DataFrame:
-    """Batch twin of S1 (bounded reprocessing of a topic)."""
-    raw = (
-        spark.read.format("kafka")
+        reader.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
         .option("startingOffsets", "earliest")
-        .option("endingOffsets", "latest")
         .load()
     )
     return raw.select(
@@ -76,6 +48,23 @@ def read_kafka_batch(
         "partition",
         "offset",
         "timestamp",
+    )
+
+
+def read_kafka_stream(
+    spark: SparkSession, topic: str, bootstrap_servers: str = "localhost:9092"
+) -> DataFrame:
+    """S1: streaming read of a topic."""
+    return _read_kafka(spark.readStream, topic, bootstrap_servers)
+
+
+def read_kafka_batch(
+    spark: SparkSession, topic: str, bootstrap_servers: str = "localhost:9092"
+) -> DataFrame:
+    """Batch twin of S1 (bounded reprocessing of a topic, up to its latest
+    offset)."""
+    return _read_kafka(
+        spark.read.option("endingOffsets", "latest"), topic, bootstrap_servers
     )
 
 
@@ -135,11 +124,11 @@ def write_kafka_stream(
     key_col: str | None = None,
     value_cols: list[str] | None = None,
     bootstrap_servers: str = "localhost:9092",
-    output_mode: str = "update",
     trigger_available_now: bool = False,
 ):
     """S3: keyed JSON write to a topic (``Produced.with(keySerde, valueSerde)``
-    — WeatherHotelsApp.java:52,64). The byte layout is :func:`to_wire` —
+    — WeatherHotelsApp.java:52,64), in update mode: the rollup changelog
+    the reference's KTable emits. The byte layout is :func:`to_wire` —
     behaviorally pinned by ``tests/test_kafka_contract.py`` through the file
     seam (no broker exists in this container); returns the StreamingQuery."""
     out = to_wire(df, key_col=key_col, value_cols=value_cols)
@@ -148,7 +137,7 @@ def write_kafka_stream(
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("topic", topic)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
+        .outputMode("update")
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)

@@ -27,7 +27,7 @@ from .sketch import (
     streaming_top_tokens,
     streaming_value_quantiles,
 )
-from .pipeline import commit_batch_to_snapshot, streaming_crawl_to_snapshot
+from .pipeline import streaming_crawl_to_snapshot
 from .topology import weather_hotels_stream, weather_rollup_stream
 
 __all__ = [
@@ -41,7 +41,6 @@ __all__ = [
     "streaming_dsir_filter",
     "streaming_kn_filter",
     "streaming_crawl_to_snapshot",
-    "commit_batch_to_snapshot",
     "snapshot_drift_history",
     "streaming_snapshot_drift",
     "read_drift_log",

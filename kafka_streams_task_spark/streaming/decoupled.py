@@ -96,7 +96,6 @@ def enrich_continuous_left(
     hotels_stream: DataFrame,
     window_duration: str = "1 hour",
     watermark: str = "10 minutes",
-    precision: int = GEOHASH_PRECISION,
 ) -> DataFrame:
     """Continuous (single always-on query) form of the decoupled topology's
     KTable–KTable left join (MyStream.java:168-173).
@@ -125,7 +124,7 @@ def enrich_continuous_left(
     """
     keyed = weather_stream.withWatermark("ts", watermark).select(
         "ts",
-        geohash_expr(F.col("lat"), F.col("lng"), precision).alias("geohash"),
+        geohash_expr(F.col("lat"), F.col("lng"), GEOHASH_PRECISION).alias("geohash"),
         "wthr_date",
         F.col("avg_tmpr_f").alias("tmp_f"),
         F.col("avg_tmpr_c").alias("tmp_c"),

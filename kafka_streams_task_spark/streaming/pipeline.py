@@ -29,38 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.warc import _records_from_files, warc_to_documents
 from .dsir import streaming_dsir_filter
-from .state import run_batch, run_tagged_snapshots, tagged_snapshot_steps
-
-
-def commit_batch_to_snapshot(
-    spark: SparkSession,
-    df: DataFrame,
-    table_path: str,
-    batch_id: int,
-    expectations: dict | None = None,
-    unique_keys: dict | None = None,
-    deep_check: bool = False,
-) -> int | None:
-    """Idempotently commit one micro-batch frame as an ``append``
-    snapshot version tagged ``batch-<id>``; returns the new version, or
-    None when the batch was skipped — already committed (foreachBatch
-    redelivery) or empty. It runs the stream's own commit step
-    (``state.run_batch`` over ``state.tagged_snapshot_steps``) for one
-    frame: the latest-tag shortcut, or with ``deep_check`` the walk over
-    every committed version that the stream takes for its FIRST batch
-    after a (re)start, the only batch that can be a redelivery. The
-    shortcut assumes no other tagged writer: an ops commit with its own
-    tag landing between the batch's snapshot commit and its checkpoint
-    ack would hide the batch's tag from it (advice r9).
-    Empty batches (availableNow reruns on a quiet source) commit
-    NOTHING — no empty-version spam inflating the manifest walk
-    (review r9); the emptiness probe stops at the first row, so
-    non-empty batches pay one short partial pass."""
-    probe, write = tagged_snapshot_steps(
-        table_path, "batch", deep_check,
-        expectations=expectations, unique_keys=unique_keys,
-    )
-    return run_batch(df, batch_id, write, probe)
+from .state import run_tagged_snapshots
 
 
 def streaming_crawl_to_snapshot(

@@ -56,8 +56,7 @@ Each probe shape is written once, here:
   after a (re)start can be a redelivery, so that batch walks the whole
   committed lineage; later batches look only at the newest tagged
   version. An empty batch commits nothing. The probe and write are
-  built once (:func:`tagged_snapshot_steps`); the capstone's
-  one-batch ``commit_batch_to_snapshot`` runs the same two.
+  built once (:func:`tagged_snapshot_steps`).
 - **``batch=<id>`` overwrite** (``sources/files.py`` and
   ``sources/warc.py``). Batch N overwrites its own ``batch=N``
   partition dirs, so a redelivery rewrites the same bytes and needs no

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..operators.weather import hotels_rekey, per_date_avgs, weather_rekey
 
 
-def weather_rollup_stream(weather_raw_stream: DataFrame, precision: int = 4) -> DataFrame:
+def weather_rollup_stream(weather_raw_stream: DataFrame) -> DataFrame:
     """A1-A5 on a stream: rekey, then one stateful aggregation per cell.
 
     Input: streaming DataFrame with the raw weather schema (lat, lng,
@@ -45,7 +45,7 @@ def weather_rollup_stream(weather_raw_stream: DataFrame, precision: int = 4) -> 
     observation count (every (wthr_date, tmp_f, tmp_c) it has received),
     and each batch re-folds the whole list of every touched cell.
     """
-    keyed = weather_rekey(weather_raw_stream, precision)
+    keyed = weather_rekey(weather_raw_stream)
     return keyed.groupBy("geohash").agg(
         per_date_avgs(F.collect_list(F.struct("wthr_date", "tmp_f", "tmp_c"))).alias(
             "weatherList"
@@ -54,9 +54,7 @@ def weather_rollup_stream(weather_raw_stream: DataFrame, precision: int = 4) -> 
 
 
 def weather_hotels_stream(
-    weather_raw_stream: DataFrame,
-    hotels_static: DataFrame,
-    precision: int = 4,
+    weather_raw_stream: DataFrame, hotels_static: DataFrame
 ) -> DataFrame:
     """J1 on a stream: the rollup changelog stream joined onto the hotel
     dimension (stream-static inner equi-join; the static side is broadcast).
@@ -72,7 +70,7 @@ def weather_hotels_stream(
     a foreachBatch wrapper, or the continuous stream–stream form
     (``streaming/decoupled.py: enrich_continuous_left``) for that topology.
     """
-    rollup = weather_rollup_stream(weather_raw_stream, precision)
+    rollup = weather_rollup_stream(weather_raw_stream)
     hotels = hotels_rekey(hotels_static)
     joined = rollup.withColumnRenamed("geohash", "hash").join(
         F.broadcast(hotels), on="hash", how="inner"

@@ -548,17 +548,15 @@ def test_dedup_queries_leave_no_cached_blocks(spark, sf_dir):
         dedup_minhash_lsh_recall,
         dedup_ngram_jaccard,
         dedup_simhash_recall,
-        dedup_survivors,
     )
 
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     before = {int(k) for k in jmap.keySet().toArray()}
-    # r6: the first three folded into dedup_exact_family_suite — the raw
+    # r6: the first two folded into dedup_exact_family_suite — the raw
     # query fns remain the per-operator probes here
     probes = {
         "dedup_exact_digest": dedup_exact_digest,
         "dedup_ngram_jaccard": dedup_ngram_jaccard,
-        "dedup_survivors": dedup_survivors,
         # r12: folded into dedup_recall_suite — the raw gate fns remain
         # the per-operator probes here
         "dedup_minhash_lsh_recall": dedup_minhash_lsh_recall,

@@ -40,7 +40,11 @@ def test_enrich_join_is_broadcast(spark):
 def test_weather_pipeline_has_no_python_nodes(spark):
     """Geohash is a native expression: the whole batch pipeline must stay
     JVM-side (no Arrow/Python eval)."""
-    from kafka_streams_task_spark.operators.weather import weather_hotels_pipeline
+    from kafka_streams_task_spark.operators.weather import (
+        parse_hotels,
+        parse_weather,
+        weather_hotels_pipeline,
+    )
 
     weather = spark.createDataFrame(
         [('{"lat":1.0,"lng":2.0,"wthr_date":"d","avg_tmpr_f":1.0,"avg_tmpr_c":1.0}',)], ["value"]
@@ -49,7 +53,7 @@ def test_weather_pipeline_has_no_python_nodes(spark):
         [('{"Id":"1","Name":"n","Country":"c","City":"c","Address":"a","Latitude":"1","Longitude":"2","Hash":"s000"}',)],
         ["value"],
     )
-    plan = _plan(weather_hotels_pipeline(weather, hotels, parse_json=True))
+    plan = _plan(weather_hotels_pipeline(parse_weather(weather), parse_hotels(hotels)))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 

@@ -116,28 +116,35 @@ def test_capstone_filter_gate_restart_no_reingest(
     )
 
 
+def _commit_batch(df, tbl, batch_id, deep_check=False, **gates):
+    """One capstone micro-batch commit: the stream's own probe and write
+    (``state.tagged_snapshot_steps``) run once through ``state.run_batch``."""
+    from kafka_streams_task_spark.streaming.state import (
+        run_batch,
+        tagged_snapshot_steps,
+    )
+
+    probe, write = tagged_snapshot_steps(tbl, "batch", deep_check, **gates)
+    return run_batch(df, batch_id, write, probe)
+
+
 def test_commit_batch_redelivery_is_exactly_once(spark, tmp_path):
     from kafka_streams_task_spark.operators.snapshots import (
-        snapshot_has_tag,
+        committed_tag_version,
         snapshot_read,
         snapshot_versions,
-    )
-    from kafka_streams_task_spark.streaming.pipeline import (
-        commit_batch_to_snapshot,
     )
 
     tbl = str(tmp_path / "tbl")
     df = spark.createDataFrame(
         [(1, "a", 1), (2, "b", 1)], "doc_uid bigint, text string, n_chars int"
     )
-    v = commit_batch_to_snapshot(
-        spark, df, tbl, batch_id=0, unique_keys={"pk": ["doc_uid"]}
-    )
-    assert v == 1 and snapshot_has_tag(spark, tbl, "batch-0")
+    v = _commit_batch(df, tbl, batch_id=0, unique_keys={"pk": ["doc_uid"]})
+    assert v == 1 and committed_tag_version(spark, tbl, "batch-0") is not None
     # at-least-once redelivery of the SAME batch: skipped, not
     # duplicated, not refused-by-uniqueness-crash
-    assert commit_batch_to_snapshot(
-        spark, df, tbl, batch_id=0, unique_keys={"pk": ["doc_uid"]}
+    assert _commit_batch(
+        df, tbl, batch_id=0, unique_keys={"pk": ["doc_uid"]}
     ) is None
     assert snapshot_versions(spark, tbl).count() == 1
     assert snapshot_read(spark, tbl).count() == 2
@@ -145,11 +152,11 @@ def test_commit_batch_redelivery_is_exactly_once(spark, tmp_path):
     df2 = spark.createDataFrame(
         [(3, "c", 1)], "doc_uid bigint, text string, n_chars int"
     )
-    assert commit_batch_to_snapshot(
-        spark, df2, tbl, batch_id=1, unique_keys={"pk": ["doc_uid"]}
+    assert _commit_batch(
+        df2, tbl, batch_id=1, unique_keys={"pk": ["doc_uid"]}
     ) == 2
     assert snapshot_read(spark, tbl).count() == 3
-    assert not snapshot_has_tag(spark, tbl, "batch-7")
+    assert committed_tag_version(spark, tbl, "batch-7") is None
 
 
 def test_capstone_expectation_violation_fails_the_commit(
@@ -158,18 +165,13 @@ def test_capstone_expectation_violation_fails_the_commit(
     """A quality-gate violation refuses the snapshot commit (readers
     keep the prior version) — surfaced as the foreachBatch error that
     fails the streaming query rather than landing bad data."""
-    from kafka_streams_task_spark.streaming.pipeline import (
-        commit_batch_to_snapshot,
-    )
-
     tbl = str(tmp_path / "tbl")
     bad = spark.createDataFrame(
         [(1, "", 0)], "doc_uid bigint, text string, n_chars int"
     )
     with pytest.raises(ValueError, match="has_text"):
-        commit_batch_to_snapshot(
-            spark, bad, tbl, batch_id=0,
-            expectations={"has_text": "n_chars > 0"},
+        _commit_batch(
+            bad, tbl, batch_id=0, expectations={"has_text": "n_chars > 0"}
         )
     from kafka_streams_task_spark.operators.snapshots import (
         snapshot_versions,
@@ -212,33 +214,32 @@ def test_commit_batch_skips_empty_batches(spark, tmp_path):
     from kafka_streams_task_spark.operators.snapshots import (
         snapshot_versions,
     )
-    from kafka_streams_task_spark.streaming.pipeline import (
-        commit_batch_to_snapshot,
-    )
 
     tbl = str(tmp_path / "tbl")
     empty = spark.createDataFrame([], "doc_uid bigint, text string")
-    assert commit_batch_to_snapshot(spark, empty, tbl, batch_id=0) is None
+    assert _commit_batch(empty, tbl, batch_id=0) is None
     assert snapshot_versions(spark, tbl).count() == 0
     full = spark.createDataFrame([(1, "a")], "doc_uid bigint, text string")
-    assert commit_batch_to_snapshot(spark, full, tbl, batch_id=1) == 1
-    assert commit_batch_to_snapshot(spark, empty, tbl, batch_id=2) is None
+    assert _commit_batch(full, tbl, batch_id=1) == 1
+    assert _commit_batch(empty, tbl, batch_id=2) is None
     assert snapshot_versions(spark, tbl).count() == 1
 
 
 def test_latest_tag_walks_past_untagged_manual_commits(spark, tmp_path):
+    """The stream's shortcut probe (``deep=False``: only the newest
+    tagged version counts) looks past untagged commits."""
     from kafka_streams_task_spark.operators.snapshots import (
-        snapshot_latest_tag,
+        committed_tag_version,
         snapshot_write,
     )
 
     tbl = str(tmp_path / "tbl")
     df = spark.createDataFrame([(1,)], "doc_uid bigint")
-    assert snapshot_latest_tag(spark, tbl) is None
+    assert committed_tag_version(spark, tbl, "batch-0", deep=False) is None
     snapshot_write(spark, df, tbl, tag="batch-0")
     # an interleaved MANUAL (untagged) commit must not hide the tag
     snapshot_write(spark, spark.createDataFrame([(2,)], "doc_uid bigint"), tbl)
-    assert snapshot_latest_tag(spark, tbl) == "batch-0"
+    assert committed_tag_version(spark, tbl, "batch-0", deep=False) == 1
 
 
 def test_deep_check_survives_interleaved_tagged_ops_commit(spark, tmp_path):
@@ -249,17 +250,14 @@ def test_deep_check_survives_interleaved_tagged_ops_commit(spark, tmp_path):
     batch after a restart, the only batch that can be a redelivery)
     scans every committed version and skips correctly (advice r9)."""
     from kafka_streams_task_spark.operators.snapshots import (
-        snapshot_latest_tag,
+        committed_tag_version,
         snapshot_read,
         snapshot_write,
-    )
-    from kafka_streams_task_spark.streaming.pipeline import (
-        commit_batch_to_snapshot,
     )
 
     tbl = str(tmp_path / "tbl")
     df = spark.createDataFrame([(1, "a")], "doc_uid bigint, text string")
-    assert commit_batch_to_snapshot(spark, df, tbl, batch_id=0) == 1
+    assert _commit_batch(df, tbl, batch_id=0) == 1
     # crash window: ops backfill with its OWN tag lands before the ack
     snapshot_write(
         spark,
@@ -268,14 +266,13 @@ def test_deep_check_survives_interleaved_tagged_ops_commit(spark, tmp_path):
         mode="append",
         tag="ops-backfill",
     )
-    assert snapshot_latest_tag(spark, tbl) == "ops-backfill"  # tag hidden
+    # the newest tag is the ops one, so the shortcut probe misses batch-0
+    assert committed_tag_version(spark, tbl, "ops-backfill", deep=False) == 2
+    assert committed_tag_version(spark, tbl, "batch-0", deep=False) is None
     # restart redelivers batch 0: deep check finds batch-0 anywhere in
     # the committed lineage and skips
-    assert (
-        commit_batch_to_snapshot(spark, df, tbl, batch_id=0, deep_check=True)
-        is None
-    )
+    assert _commit_batch(df, tbl, batch_id=0, deep_check=True) is None
     assert snapshot_read(spark, tbl).count() == 2  # 1 doc + 1 ops row
     # steady state after the restart: shortcut path, new batch commits
     df2 = spark.createDataFrame([(2, "b")], "doc_uid bigint, text string")
-    assert commit_batch_to_snapshot(spark, df2, tbl, batch_id=1) == 3
+    assert _commit_batch(df2, tbl, batch_id=1) == 3

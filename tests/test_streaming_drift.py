@@ -234,14 +234,12 @@ def test_orphan_tag_never_satisfies_redelivery_probes(spark, tmpdir):
     """Second-review catch: a TAGGED orphan manifest must not satisfy
     any redelivery probe once a later commit advances _latest past it —
     otherwise the redelivered batch's rows are skipped, i.e. lost
-    forever. All three probes (has_tag, latest_tag, the snapshot-tag
-    sinks' version resolver) walk the committed lineage."""
+    forever. The probe's deep walk and its newest-tag shortcut both
+    follow the committed lineage."""
     import json as _json
 
     from kafka_streams_task_spark.operators.snapshots import (
         committed_tag_version,
-        snapshot_has_tag,
-        snapshot_latest_tag,
         snapshot_write,
     )
 
@@ -266,9 +264,10 @@ def test_orphan_tag_never_satisfies_redelivery_probes(spark, tmpdir):
         mode="append",
         tag="ops-1",
     )
-    assert not snapshot_has_tag(spark, path, "batch-9")
-    assert snapshot_latest_tag(spark, path) == "ops-1"
     assert committed_tag_version(spark, path, "batch-9") is None
+    # the shortcut probe: the newest committed tag is ops-1, not the orphan
+    assert committed_tag_version(spark, path, "ops-1", deep=False) == 3
+    assert committed_tag_version(spark, path, "batch-9", deep=False) is None
 
 
 def test_corrupt_parent_pointer_raises_not_loops(spark, tmpdir):

@@ -116,7 +116,8 @@ def test_aggregate_weather_end_to_end(spark):
         )
     ]
     out = weather_hotels_pipeline(
-        _weather_df(spark, weather), _weather_df(spark, hotels), parse_json=True
+        parse_weather(_weather_df(spark, weather)),
+        parse_hotels(_weather_df(spark, hotels)),
     ).collect()
     assert len(out) == 1  # inner join: only the matched hotel, once
     row = out[0]
